@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import nan_to_null
 from spark_validate.chunking import CHUNK_INDEX, CHUNK_KEY, Chunker, DefaultChunker, chunk_aggregate
+from spark_validate.functions.local import local_frame
 from spark_validate.fused import calculate_alone
 from spark_validate.result import conform_result
 from spark_validate.thresholds import (
@@ -283,12 +284,10 @@ class ColumnStatsCalculator:
             thresholds = self._fitted["thresholds"]
             components = self._fitted["components"]
         spark = long_df.sparkSession
-        thr_rows = [
-            (c, m, lo, up) for (c, m), (lo, up) in thresholds.items()
-        ] or [(None, None, None, None)]
-        thr_df = spark.createDataFrame(
-            thr_rows, "column_name string, method string, lower_threshold double, upper_threshold double"
-        ).filter(F.col("column_name").isNotNull())
+        thr_rows = [(c, m, lo, up) for (c, m), (lo, up) in thresholds.items()]
+        thr_df = local_frame(
+            spark, thr_rows, "column_name string, method string, lower_threshold double, upper_threshold double"
+        )
         comp_rows = [
             (
                 c,
@@ -298,11 +297,12 @@ class ColumnStatsCalculator:
                 d.get("fmedian"),
             )
             for c, d in components.items()
-        ] or [(None, None, None, None, None)]
-        comp_df = spark.createDataFrame(
+        ]
+        comp_df = local_frame(
+            spark,
             comp_rows,
             "column_name string, _c_missing_rate_ref double, _c_std double, _c_mu4 double, _c_fmedian double",
-        ).filter(F.col("column_name").isNotNull())
+        )
         out = (
             long_df.join(F.broadcast(thr_df), ["column_name", "method"], "left")
             .join(F.broadcast(comp_df), ["column_name"], "left")

@@ -11,14 +11,20 @@ cross-validation comparing Expected Calibration Error before/after
 calibration, with the reference's early exits (single class, AUROC > 0.999).
 Split indices come from a seeded numpy generator — fold membership differs
 from sklearn's StratifiedShuffleSplit but the decision procedure is the same.
+
+``with_calibrated`` applies fitted calibrators to DataFrame columns as native
+Spark expressions that return the same bits as ``np.interp``, so applying
+calibration runs no Python worker.
 """
 
 from __future__ import annotations
 
 import math
-from typing import List, Tuple
+from typing import List, Sequence, Tuple
 
 import numpy as np
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def pava(y: np.ndarray, w: np.ndarray) -> np.ndarray:
@@ -36,11 +42,10 @@ def pava(y: np.ndarray, w: np.ndarray) -> np.ndarray:
         cnts.append(1)
         while len(vals) > 1 and vals[-2] > vals[-1]:
             v = (vals[-2] * wts[-2] + vals[-1] * wts[-1]) / (wts[-2] + wts[-1])
-            wt = wts[-2] + wts[-1]
-            ct = cnts[-2] + cnts[-1]
-            vals = vals[:-2] + [v]
-            wts = wts[:-2] + [wt]
-            cnts = cnts[:-2] + [ct]
+            # merge the last two blocks in place (slice assignment, O(1))
+            wts[-2:] = [wts[-2] + wts[-1]]
+            cnts[-2:] = [cnts[-2] + cnts[-1]]
+            vals[-2:] = [v]
     out = np.empty(n)
     pos = 0
     for v, ct in zip(vals, cnts):
@@ -49,8 +54,27 @@ def pava(y: np.ndarray, w: np.ndarray) -> np.ndarray:
     return out
 
 
+def _run_endpoints(y: np.ndarray) -> np.ndarray:
+    """Mask keeping the first and last point of every run of equal ``y``."""
+    keep = np.ones(len(y), dtype=bool)
+    if len(y) > 2:
+        same = y[1:] == y[:-1]
+        keep[1:-1] = ~(same[:-1] & same[1:])
+    return keep
+
+
 class IsotonicCalibrator:
-    """Isotonic probability calibrator with clip extrapolation."""
+    """Isotonic probability calibrator with clip extrapolation.
+
+    ``fit`` keeps only the end points of each run of equal fitted values,
+    which leaves ``calibrate`` bit-for-bit unchanged: ``np.interp`` returns
+    ``y[j]`` when the input hits a breakpoint and ``slope*(p - x[j]) + y[j]``
+    between breakpoints, and inside a run the slope is exactly 0, so every
+    dropped interior point and the run's end points give the same ``y``.
+    The segments between runs join the same two adjacent points as before.
+    PAVA output is piecewise constant, so a few thousand tie-averaged
+    reference scores typically compress to a few dozen breakpoints.
+    """
 
     def __init__(self):
         self._x: np.ndarray = np.array([])
@@ -65,7 +89,8 @@ class IsotonicCalibrator:
         ux, inv, counts = np.unique(x, return_inverse=True, return_counts=True)
         uy = np.bincount(inv, weights=y) / counts
         fitted = pava(uy, counts.astype(np.float64))
-        self._x, self._y = ux, fitted
+        keep = _run_endpoints(fitted)
+        self._x, self._y = ux[keep], fitted[keep]
         return self
 
     def calibrate(self, y_pred_proba: np.ndarray) -> np.ndarray:
@@ -73,7 +98,7 @@ class IsotonicCalibrator:
             raise RuntimeError("fit first")
         return np.interp(np.asarray(y_pred_proba, dtype=np.float64), self._x, self._y)
 
-    # state for the JSON store / broadcast into UDFs
+    # state for the JSON store
     def get_state(self) -> dict:
         return {"x": self._x.tolist(), "y": self._y.tolist()}
 
@@ -95,6 +120,109 @@ class NoopCalibrator:
 
     def set_state(self, state: dict):
         return self
+
+
+def _interp_column(p: Column, segment: Column, x: np.ndarray, y: np.ndarray) -> Column:
+    """``np.interp(p, x, y)`` as a Spark expression, given the index of the
+    segment ``x[j] <= p < x[j+1]`` that holds ``p``. The branches follow
+    numpy's ``arr_interp`` (``numpy/core/src/multiarray/compiled_base.c``)
+    and its float64 operations in the same order; NULL and NaN inputs give
+    NULL, as a NaN result did on its Arrow trip out of a pandas UDF."""
+    if len(x) == 1:
+        # numpy's one-point branch compares without a NaN check, so every
+        # input, NaN and NULL (NaN in a pandas UDF) too, gets y[0]
+        return F.lit(float(y[0]))
+    valid = p.isNotNull() & ~F.isnan(p)
+    slopes = (y[1:] - y[:-1]) / (x[1:] - x[:-1])
+
+    def at(values, idx):
+        return F.array(*[F.lit(float(v)) for v in values])[idx]
+
+    # every row indexes in range, whichever branch Spark evaluates first
+    j = F.least(F.greatest(F.coalesce(segment, F.lit(0)), F.lit(0)), F.lit(len(x) - 2))
+    xj, xj1, yj, yj1, sj = at(x, j), at(x, j + 1), at(y, j), at(y, j + 1), at(slopes, j)
+    forward = sj * (p - xj) + yj
+    # numpy's retry from the right end when the first form is NaN
+    # (an infinite breakpoint), then its equal-ends fallback
+    backward = sj * (p - xj1) + yj1
+    return (
+        F.when(~valid, F.lit(None).cast("double"))
+        .when(p <= F.lit(float(x[0])), F.lit(float(y[0])))
+        .when(p >= F.lit(float(x[-1])), F.lit(float(y[-1])))
+        .when(p == xj, yj)
+        .when(~F.isnan(forward), forward)
+        .when(~F.isnan(backward), backward)
+        .when(yj == yj1, yj)
+    )
+
+
+def with_calibrated(df: DataFrame, specs: Sequence[Tuple[str, Column, object]]) -> DataFrame:
+    """Add one column per ``(name, score, calibrator)``: ``calibrator``
+    applied to ``score``, bit-identical to ``calibrator.calibrate``.
+
+    A ``NoopCalibrator`` passes the score through as a double. For an
+    ``IsotonicCalibrator``, ``pyspark.ml.feature.Bucketizer`` finds each
+    row's segment by a JVM binary search over the interior breakpoints,
+    and ``_interp_column`` evaluates numpy's formula with the slopes
+    computed here in float64. Scores are offset by ``+ 0.0`` first, which
+    turns -0.0 into 0.0: the binary search orders -0.0 below 0.0 where
+    numpy's comparisons treat them as equal."""
+    tmp = []
+    search = []  # (input col, segment col, splits)
+    fitted = []
+    for i, (name, score, cal) in enumerate(specs):
+        if not isinstance(cal, IsotonicCalibrator):
+            fitted.append((name, score.cast("double"), None))
+            continue
+        p, seg = f"_sv_cal_p{i}", f"_sv_cal_seg{i}"
+        df = df.withColumn(p, score.cast("double") + F.lit(0.0))
+        tmp.append(p)
+        x, y = cal._x, cal._y
+        segment = None
+        if len(x) >= 3:
+            splits = [-math.inf] + [float(v) + 0.0 for v in x[1:-1]] + [math.inf]
+            search.append((p, seg, splits))
+            tmp.append(seg)
+            segment = F.col(seg).cast("int")
+        elif len(x) == 2:
+            segment = F.lit(0)
+        fitted.append((name, F.col(p), (segment, x, y)))
+    if search:
+        from pyspark.ml.feature import Bucketizer  # 0.5 s import, only when needed
+
+        df = Bucketizer(
+            splitsArray=[s for _, _, s in search],
+            inputCols=[c for c, _, _ in search],
+            outputCols=[c for _, c, _ in search],
+            handleInvalid="keep",
+        ).transform(df)
+    for name, p, interp in fitted:
+        df = df.withColumn(name, p if interp is None else _interp_column(p, *interp))
+    return df.drop(*tmp)
+
+
+def row_sum(cols: Sequence[Column]) -> Column:
+    """Sum of ``cols`` in the order numpy's pairwise summation adds a row
+    of that length (``numpy/core/src/umath/loops_utils.h.src``)."""
+    n = len(cols)
+    if n < 8:
+        total = cols[0]
+        for c in cols[1:]:
+            total = total + c
+        return total
+    if n <= 128:
+        r = list(cols[:8])
+        i = 8
+        while i < n - n % 8:
+            r = [r[j] + cols[i + j] for j in range(8)]
+            i += 8
+        total = ((r[0] + r[1]) + (r[2] + r[3])) + ((r[4] + r[5]) + (r[6] + r[7]))
+        for c in cols[i:]:
+            total = total + c
+        return total
+    half = n // 2
+    half -= half % 8
+    return row_sum(cols[:half]) + row_sum(cols[half:])
 
 
 def _bin_index_edges(n: int, bin_count: int) -> List[Tuple[int, int]]:

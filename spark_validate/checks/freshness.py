@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks, join_headers_long
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import alert_expr
 
@@ -190,7 +191,7 @@ class FreshnessCheck:
         if not (self.include_gap and self.max_gap_alert_seconds is not None):
             from spark_validate.result import VIOLATION_SCHEMA
 
-            return df.sparkSession.createDataFrame([], VIOLATION_SCHEMA)
+            return local_frame(df.sparkSession, [], VIOLATION_SCHEMA)
         assigned = self.chunker.assign(df)
         gaps = self._gaps(assigned)
         thr = float(self.max_gap_alert_seconds)

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from spark_validate.calculators.base import assign_chunks, join_headers
 from spark_validate.checks.constraints import _attach_const_threshold
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.functions.local import local_frame
 
 # Engine-agnostic spellings of the same type, normalized before comparison so
 # a contract written as {"n": "long"} matches a scan that reports "bigint".
@@ -93,7 +94,7 @@ class SchemaCheck:
         column plus one per actual-but-uncontracted column. No executor
         work — df.dtypes reads the analyzed plan's schema only."""
         spark = df.sparkSession
-        return spark.createDataFrame(self._verdict_rows(dict(df.dtypes)), VERDICT_SCHEMA)
+        return local_frame(spark, self._verdict_rows(dict(df.dtypes)), VERDICT_SCHEMA)
 
     def n_schema_violations(self, df: DataFrame) -> int:
         return sum(
@@ -166,7 +167,8 @@ class SchemaCheck:
             )
         if not parts:
             spark = df.sparkSession
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [],
                 "check string, column_name string, chunk_key string, row_id string, "
                 "violation_kind string, observed_value string",

@@ -30,6 +30,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_validate.functions.local import local_frame
+
 CHUNK_KEY = "chunk_key"
 CHUNK_INDEX = "chunk_index"
 ROW_INDEX = "_sv_row_index"
@@ -137,7 +139,10 @@ def with_row_index(
     for bid, cnt in rows:
         offs.append((int(bid), acc))
         acc += cnt
-    offsets = df.sparkSession.createDataFrame(offs or [(0, 0)], "_sv_bkt int, _sv_offset long")
+    # an empty input has no bucket counts; (0, 0) is still a true offset —
+    # bucket 0, where NULL keys also land, starts at row 0 — not a
+    # placeholder a later filter must remove
+    offsets = local_frame(df.sparkSession, offs or [(0, 0)], "_sv_bkt int, _sv_offset long")
     # 3. per-bucket ranks + broadcast offsets
     w_local = Window.partitionBy("_sv_bkt").orderBy(*[F.col(c) for c in order_by])
     out = (

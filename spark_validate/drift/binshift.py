@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from spark_validate.calculators.base import assign_chunks, join_headers_long, nan_to_null
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.drift.univariate import bucket_expr, doane_bin_count
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import alert_expr
 
@@ -176,7 +177,8 @@ class BinShiftCalculator:
                 )
             rows.append((c, nb, hi, None, 0.0))
         return F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 rows,
                 "column_name string, bucket int, bin_lo double, bin_hi double, ref_share double",
             )

@@ -46,6 +46,7 @@ from typing import Tuple
 from spark_validate.calculators.base import assign_chunks, join_headers_long
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.drift.univariate import bounded_topk_category_counts, categorical_counts
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import alert_expr
 
@@ -145,7 +146,7 @@ class CategoryShiftCalculator:
                 rows.append((c, v, int(cnt) / n))
             rows.append((c, OTHER, (int(st["n_ref"]) - kept) / n))
         return F.broadcast(
-            spark.createDataFrame(rows, "column_name string, value string, ref_share double")
+            local_frame(spark, rows, "column_name string, value string, ref_share double")
         )
 
     # -- calculate -------------------------------------------------------------

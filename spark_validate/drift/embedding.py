@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_validate.chunking import CHUNK_INDEX, CHUNK_KEY, ROW_INDEX, Chunker, DefaultChunker, chunk_aggregate
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds_grouped
 
@@ -354,10 +355,10 @@ class EmbeddingDriftCalculator:
     def _finalize(self, long_df: DataFrame, period: str) -> DataFrame:
         spark = long_df.sparkSession
         thr = self._fitted.get("thresholds") or {}
-        rows = [(c, m, lo, up) for (c, m), (lo, up) in thr.items()] or [(None, None, None, None)]
-        thr_df = spark.createDataFrame(
-            rows, "column_name string, method string, lower_threshold double, upper_threshold double"
-        ).filter(F.col("column_name").isNotNull())
+        rows = [(c, m, lo, up) for (c, m), (lo, up) in thr.items()]
+        thr_df = local_frame(
+            spark, rows, "column_name string, method string, lower_threshold double, upper_threshold double"
+        )
         out = long_df.join(F.broadcast(thr_df), ["column_name", "method"], "left").withColumn(
             "alert", alert_expr()
         )

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks, join_headers_long, presample_chunks
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold, alert_expr
 
@@ -180,7 +181,8 @@ class DataReconstructionDriftCalculator:
                     for val, freq in mapping.items():
                         e = F.when(v == val, F.lit(freq)).otherwise(e)
                 else:
-                    fdf = df.sparkSession.createDataFrame(
+                    fdf = local_frame(
+                        df.sparkSession,
                         [(k, float(f)) for k, f in mapping.items()],
                         f"_k{i} string, _fr{i} double",
                     )

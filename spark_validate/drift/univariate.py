@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks, join_headers_long, nan_to_null
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import StandardDeviationThreshold, alert_expr
 
@@ -478,7 +479,8 @@ class UnivariateDriftCalculator:
                 "upper_threshold", F.lit(None).cast("double")
             )
         else:
-            thr = spark.createDataFrame(
+            thr = local_frame(
+                spark,
                 rows, "column_name string, method string, lower_threshold double, upper_threshold double"
             )
             out = result.join(F.broadcast(thr), ["column_name", "method"], "left")
@@ -611,10 +613,11 @@ class UnivariateDriftCalculator:
                 for b in range(n_bins):
                     ref_rows.append((c, spec, b, float(probs[b]), float(cdf[b]), float(width)))
         nbins_df = F.broadcast(
-            spark.createDataFrame(nbins_rows, "column_name string, spec string, n_bins int")
+            local_frame(spark, nbins_rows, "column_name string, spec string, n_bins int")
         )
         ref_bins = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 ref_rows,
                 "column_name string, spec string, bucket int, p double, ref_cdf double, width double",
             )
@@ -940,7 +943,7 @@ class UnivariateDriftCalculator:
             for v, cnt in st.counts.items():
                 ref_rows.append((c, v, cnt, cnt / st.n_ref))
         ref_df = F.broadcast(
-            spark.createDataFrame(ref_rows, "column_name string, value string, ref_cnt long, p double")
+            local_frame(spark, ref_rows, "column_name string, value string, ref_cnt long, p double")
         )
         totals = counts.groupBy(CHUNK_KEY, "column_name").agg(F.sum("cnt").alias("n_nonnull"))
         # dense over ref categories (chunk × ref cats) + chunk-only categories

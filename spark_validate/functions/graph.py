@@ -42,6 +42,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_validate.functions.local import local_frame
+
 
 def connected_components(
     pairs: DataFrame,
@@ -126,7 +128,7 @@ def connected_components(
             if not use_local_checkpoint:
                 p.unpersist(blocking=False)
                 edges.unpersist(blocking=False)
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         parent: dict = {}
 
         def find(x):
@@ -147,7 +149,7 @@ def connected_components(
         if not use_local_checkpoint:
             p.unpersist(blocking=False)
             edges.unpersist(blocking=False)
-        return spark.createDataFrame([(x, find(x)) for x in parent], schema)
+        return local_frame(spark, [(x, find(x)) for x in parent], schema)
 
     labels = edges.select("u").distinct().select(F.col("u").alias("id"), F.col("u").alias("comp"))
     labels = labels.localCheckpoint(eager=True) if use_local_checkpoint else labels.persist()

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks, join_headers_long
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import StandardDeviationThreshold, alert_expr
 
@@ -96,12 +97,13 @@ def _thr_frame(spark, thresholds: Dict[str, tuple], cm_normalized: bool = False)
     rows = [
         (m, lo, up, *(cm_lim if _is_cm_method(m) else _BOUND_LIMITS.get(m, (None, None))))
         for m, (lo, up) in thresholds.items()
-    ] or [(None, None, None, None, None)]
-    return spark.createDataFrame(
+    ]
+    return local_frame(
+        spark,
         rows,
         "method string, lower_threshold double, upper_threshold double, "
         "_lim_lo double, _lim_up double",
-    ).filter(F.col("method").isNotNull())
+    )
 
 
 def _clamped_bounds():
@@ -428,7 +430,7 @@ class PerformanceCalculator:
             .agg(F.count(F.lit(1)).cast("double").alias("_c"))
         )
         cells = F.broadcast(
-            spark.createDataFrame([(t, p) for t in cls_strs for p in cls_strs], "_t string, _p string")
+            local_frame(spark, [(t, p) for t in cls_strs for p in cls_strs], "_t string, _p string")
         )
         dense = (
             n_by_chunk.crossJoin(cells)
@@ -466,7 +468,7 @@ class PerformanceCalculator:
                 for i in range(len(classes))
                 for j in range(len(classes))
             ]
-            vmap = F.broadcast(spark.createDataFrame(vals, "_t string, _p string, _v double"))
+            vmap = F.broadcast(local_frame(spark, vals, "_t string, _p string, _v double"))
             cm = F.col("_c")
             if self.normalize_business_value == "per_prediction":
                 colsum = F.sum("_c").over(w_col)

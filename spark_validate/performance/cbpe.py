@@ -15,8 +15,10 @@ Every label-style estimated metric is then a closed-form expression over one
 ROC/PR curve from the calibrated masses in uncalibrated-score order
 (metrics.py:444-480, 596-645) — expressed with per-chunk windows, no UDF.
 
-Calibration itself is applied with a broadcast piecewise-linear lookup in an
-Arrow-batched ``pandas_udf`` (np.interp over the fitted isotonic breakpoints).
+Calibration itself is applied natively (``calibration.with_calibrated``): a
+JVM binary search finds each score's segment among the fitted isotonic
+breakpoints and numpy's interpolation formula runs as a Spark expression, so
+estimation starts no Python worker and returns the same bits as ``np.interp``.
 """
 
 from __future__ import annotations
@@ -25,14 +27,18 @@ import math
 from dataclasses import dataclass, field
 from typing import Dict, Optional, Sequence, Tuple
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks, join_headers_long
 from spark_validate.performance.calculator import _safe_div
-from spark_validate.calibration import IsotonicCalibrator, NoopCalibrator, needs_calibration
+from spark_validate.calibration import (
+    IsotonicCalibrator,
+    NoopCalibrator,
+    needs_calibration,
+    row_sum,
+    with_calibrated,
+)
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.performance.calculator import PerformanceCalculator
 from spark_validate.result import conform_result
@@ -140,57 +146,33 @@ class CBPE:
             self._calibrator = NoopCalibrator().fit(p, y)
 
     def _with_calibrated(self, df: DataFrame) -> DataFrame:
-        """Add calibrated probability column via broadcast np.interp."""
-        if isinstance(self._calibrator, NoopCalibrator):
-            return df.withColumn("_cal_p", F.col(self.y_pred_proba).cast("double"))
-        xs = self._calibrator._x
-        ys = self._calibrator._y
-        bx = df.sparkSession.sparkContext.broadcast((xs, ys))
-
-        @F.pandas_udf("double")
-        def _interp(p: pd.Series) -> pd.Series:
-            x, y = bx.value
-            return pd.Series(np.interp(p.to_numpy(dtype=np.float64), x, y))
-
-        return df.withColumn("_cal_p", _interp(F.col(self.y_pred_proba).cast("double")))
+        """Add the calibrated probability column ``_cal_p``."""
+        return with_calibrated(df, [("_cal_p", F.col(self.y_pred_proba), self._calibrator)])
 
     def _with_calibrated_mc(self, df: DataFrame) -> DataFrame:
         """Add ``_cal`` — the per-class calibrated probabilities, renormalized
         to sum 1 per row with a uniform fallback when the calibrated sum is 0
-        (ref cbpe.py:556-580 _calibrate_predicted_probabilities)."""
-        params = []
-        for c in self.classes:
-            cal = self._calibrators[c]
-            if isinstance(cal, NoopCalibrator):
-                params.append(None)
-            else:
-                params.append((cal._x, cal._y))
-        bx = df.sparkSession.sparkContext.broadcast(params)
+        (ref cbpe.py:556-580 _calibrate_predicted_probabilities). The sum
+        adds the classes in numpy's order, so the result matches the numpy
+        renormalization bit for bit; a NaN share is NULL, as it was after
+        the Arrow trip out of a pandas UDF."""
         k = len(self.classes)
-
-        @F.pandas_udf("array<double>")
-        def _cal_all(probas: pd.Series) -> pd.Series:
-            ps = bx.value
-            mat = np.stack(probas.to_numpy())  # (rows, k)
-            out = np.empty_like(mat, dtype=np.float64)
-            for i, xy in enumerate(ps):
-                col = mat[:, i].astype(np.float64)
-                out[:, i] = col if xy is None else np.interp(col, xy[0], xy[1])
-            denom = out.sum(axis=1, keepdims=True)
-            uniform = np.full_like(out, 1.0 / k)
-            out = np.divide(out, denom, out=uniform, where=denom != 0)
-            return pd.Series(list(out))
-
         # NULL probabilities must DROP the row (reference common_nan_removal,
-        # mirroring the binary path) — F.array never yields NULL and Arrow
-        # delivers null elements as NaN, which would otherwise poison every
-        # aggregate in the row's chunk
+        # mirroring the binary path)
         cols = [F.col(self.y_pred_proba[c]).cast("double") for c in self.classes]
         complete = df
         for col in cols:
             complete = complete.filter(col.isNotNull())
-        arr = F.array(*cols)
-        return complete.withColumn("_cal", _cal_all(arr))
+        names = [f"_cal_{i}" for i in range(k)]
+        cal = with_calibrated(
+            complete, [(n, col, self._calibrators[c]) for n, col, c in zip(names, cols, self.classes)]
+        )
+        denom = row_sum([F.col(n) for n in names])
+        null = F.lit(None).cast("double")
+        normalized = [
+            F.when(denom == 0, F.lit(1.0 / k)).otherwise(F.nanvl(F.col(n) / denom, null)) for n in names
+        ]
+        return cal.withColumn("_cal", F.array(*normalized)).drop(*names)
 
     # -------------------------------------------------------------- estimation
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks, join_headers_long
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import StandardDeviationThreshold, alert_expr
 
@@ -289,10 +290,8 @@ class DLE:
 
     def _finalize(self, long_df, headers, period):
         spark = long_df.sparkSession
-        rows = [(m, lo, up) for m, (lo, up) in self._thresholds.items()] or [(None, None, None)]
-        thr = spark.createDataFrame(rows, "method string, lower_threshold double, upper_threshold double").filter(
-            F.col("method").isNotNull()
-        )
+        rows = [(m, lo, up) for m, (lo, up) in self._thresholds.items()]
+        thr = local_frame(spark, rows, "method string, lower_threshold double, upper_threshold double")
         out = (
             long_df.join(F.broadcast(thr), "method", "left")
             .withColumn("sampling_error", F.lit(None).cast("double"))

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_validate.functions.local import local_frame
+
 
 def _none_if_nan(v):
     import math
@@ -88,7 +90,8 @@ class CorrelationRanker:
                 T.StructField("n_alerts", T.LongType()),
             ]
         )
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [
                 (
                     r["column_name"],

@@ -11,6 +11,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MIB = 64 * 1024
+
+
+def driver_memory_for(total_bytes: int | None) -> str:
+    """Driver heap for a machine with ``total_bytes`` of physical memory:
+    half of it, capped at 64g (64g when the total is unknown). A larger
+    heap lets the one local-mode JVM outgrow the machine and be OOM-killed."""
+    if not total_bytes:
+        return f"{_MAX_DRIVER_MIB}m"
+    return f"{min(total_bytes // 2 // 2**20, _MAX_DRIVER_MIB)}m"
+
+
+def _physical_memory() -> int | None:
+    """MemTotal in bytes (physical pages × page size), None if unknown."""
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        return None
+
 
 def get_spark(
     app_name: str = "spark_validate",
@@ -22,7 +41,9 @@ def get_spark(
 
     cores defaults to $SPARK_GRAFT_CPUS or 32. Shuffle partitions default to
     the core count — at cluster scale this would be ~2-3× total executor
-    cores; AQE coalesces small post-shuffle partitions either way.
+    cores; AQE coalesces small post-shuffle partitions either way. The
+    driver heap is $SPARK_VALIDATE_DRIVER_MEM, else half the machine's
+    memory capped at 64g (``driver_memory_for``).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -44,7 +65,10 @@ def get_spark(
             os.environ.get("SPARK_VALIDATE_WAREHOUSE", "/tmp/spark_validate_warehouse"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_VALIDATE_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_VALIDATE_DRIVER_MEM") or driver_memory_for(_physical_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

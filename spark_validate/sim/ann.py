@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_validate.functions.local import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -385,7 +387,7 @@ def embedding_decontaminate(
     id_dtype = dict(corpus.dtypes)[id_col]
     out_schema = f"{id_col} {id_dtype}, bench_id {bench_id_dtype}, cosine double"
     if bc is None:  # empty benchmark
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return local_frame(corpus.sparkSession, [], out_schema)
 
     thr = float(threshold)
     top1 = bool(batch_top1_only)

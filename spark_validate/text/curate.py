@@ -39,6 +39,8 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_validate.functions.local import local_frame
+
 
 @dataclass
 class CurationResult:
@@ -74,7 +76,7 @@ class CurationResult:
             d = counts.get(nm, 0)
             remaining -= d
             out.append((nm, d, remaining))
-        return spark.createDataFrame(out, "stage string, docs_dropped long, docs_remaining long")
+        return local_frame(spark, out, "stage string, docs_dropped long, docs_remaining long")
 
 
 def run_curation(spark, config: dict) -> dict:

@@ -36,6 +36,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_validate.functions.local import local_frame
+
 
 def _tok_array(text_col: str):
     # shared tokenizer contract with text/quality.py::repetition_stats
@@ -138,13 +140,11 @@ class NgramLMQuality:
 
     def _model_frames(self, spark: SparkSession):
         uni_rows = [(w, int(c)) for w, c in self._uni.items()]
-        uni = spark.createDataFrame(uni_rows or [("", 0)], "w1 string, c1 long")
+        uni = local_frame(spark, uni_rows, "w1 string, c1 long")
         # one vocab frame serves both join sides — shipping the identical
         # 50k-row list as a second broadcast doubled the per-query transfer
         uni2 = uni.select(F.col("w1").alias("w2"), F.col("c1").alias("c2"))
-        bi = spark.createDataFrame(
-            [(g, int(c)) for g, c in self._bi.items()] or [("", 0)], "gram string, c12 long"
-        )
+        bi = local_frame(spark, [(g, int(c)) for g, c in self._bi.items()], "gram string, c12 long")
         return F.broadcast(uni), F.broadcast(uni2), F.broadcast(bi)
 
     def score(self, df: DataFrame) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from spark_validate.calculators.base import assign_chunks, join_headers
 from spark_validate.checks.constraints import _attach_const_threshold
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.functions.local import local_frame
 
 # lowercase word tokens; the character class is identical in Java regex and
 # RE2/DuckDB, the same dialect constraint as text/pii.py patterns
@@ -82,7 +83,8 @@ class VocabDriftCheck:
         )
 
     def _vocab_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(t,) for t in self._vocab], "token string"
         ).withColumn("_in_vocab", F.lit(1))
 

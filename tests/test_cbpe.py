@@ -288,3 +288,95 @@ def test_cbpe_multiclass_sampling_errors_present(mc_frame):
         assert g["sampling_error"].notna().all(), mth
         assert (g["sampling_error"] > 0).all(), mth
         assert g["upper_confidence_boundary"].notna().all(), mth
+
+
+# ---- run-endpoint compression and the native (Spark) calibration -----------
+
+
+def _uncompressed_fit(p, y):
+    """IsotonicCalibrator.fit's breakpoints before run-endpoint compression."""
+    order = np.argsort(p, kind="mergesort")
+    ux, inv, counts = np.unique(p[order], return_inverse=True, return_counts=True)
+    uy = np.bincount(inv, weights=y[order]) / counts
+    return ux, pava(uy, counts.astype(np.float64))
+
+
+def _probes(x, rng, n_random=0):
+    """Every breakpoint, the midpoints between them, points outside the
+    range, signed zeros, infinities and NaN."""
+    mids = (x[1:] + x[:-1]) / 2
+    out = [x, mids, [x[0] - 1.0, x[0] - 1e-12, x[-1] + 1e-12, x[-1] + 1.0],
+           [0.0, -0.0, np.inf, -np.inf, np.nan], rng.uniform(-0.2, 1.2, n_random)]
+    return np.concatenate([np.asarray(v, dtype=np.float64) for v in out])
+
+
+def _bits(a):
+    return np.asarray(a, dtype=np.float64).view(np.uint64)
+
+
+@pytest.mark.parametrize("n", [5000, 200_000])
+def test_compressed_calibrator_equals_uncompressed_interp(n):
+    rng = np.random.default_rng(n)
+    p = rng.uniform(0, 1, n)
+    y = (rng.uniform(0, 1, n) < p**2).astype(float)
+    ux, uy = _uncompressed_fit(p, y)
+    cal = IsotonicCalibrator().fit(p, y)
+    assert len(cal._x) < len(ux) / 10  # runs collapse to their end points
+    probe = _probes(ux, rng, n_random=10_000)
+    np.testing.assert_array_equal(_bits(cal.calibrate(probe)), _bits(np.interp(probe, ux, uy)))
+
+
+@pytest.fixture(scope="module")
+def calibrators():
+    rng = np.random.default_rng(9)
+    p = rng.uniform(0, 1, 5000)
+    y = (rng.uniform(0, 1, 5000) < p**3).astype(float)
+    p2 = rng.uniform(0, 1, 200_000)
+    y2 = (rng.uniform(0, 1, 200_000) < p2**2).astype(float)
+    return {
+        "one": IsotonicCalibrator().set_state({"x": [0.4], "y": [0.6]}),
+        "two": IsotonicCalibrator().set_state({"x": [0.2, 0.8], "y": [0.1, 0.9]}),
+        "interior_zero": IsotonicCalibrator().set_state({"x": [-1.0, 0.0, 0.5, 2.0], "y": [0.0, 0.25, 0.5, 1.0]}),
+        "infinite_ends": IsotonicCalibrator().set_state(
+            {"x": [-np.inf, 0.25, 0.5, np.inf], "y": [0.0, 0.25, 0.5, 1.0]}
+        ),
+        "many": IsotonicCalibrator().fit(p, y),
+        "fit_200k": IsotonicCalibrator().fit(p2, y2),
+    }
+
+
+@pytest.mark.parametrize("name", ["one", "two", "interior_zero", "infinite_ends", "many", "fit_200k"])
+def test_native_calibration_equals_numpy(spark, calibrators, name):
+    """with_calibrated returns calibrate()'s bits; a NaN result is NULL, as
+    after the Arrow trip out of the pandas UDF it replaces."""
+    from spark_validate.calibration import with_calibrated
+    from spark_validate.functions.local import local_frame
+    from pyspark.sql import functions as F
+
+    cal = calibrators[name]
+    rng = np.random.default_rng(3)
+    probe = _probes(cal._x, rng, n_random=2000)
+    rows = [(i, float(v)) for i, v in enumerate(probe)] + [(len(probe), None)]
+    df = local_frame(spark, rows, "i int, p double")
+    got = with_calibrated(df, [("c", F.col("p"), cal)]).orderBy("i").collect()
+    expected = cal.calibrate(np.append(probe, np.nan))
+    for r, e in zip(got, expected):
+        if np.isnan(e):
+            assert r.c is None, (r.p, r.c)
+        else:
+            assert r.c is not None and _bits(r.c) == _bits(e), (r.p, r.c, e)
+    assert len(got) == len(expected)
+
+
+@pytest.mark.parametrize("k", [3, 9])
+def test_row_sum_follows_numpy_order(spark, k):
+    from spark_validate.calibration import row_sum
+    from spark_validate.functions.local import local_frame
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(k)
+    mat = rng.uniform(0, 1, (500, k)) * rng.choice([1e-6, 1.0, 1e6], (500, k))
+    cols = [f"c{i}" for i in range(k)]
+    df = local_frame(spark, [tuple(map(float, r)) for r in mat], ", ".join(f"{c} double" for c in cols))
+    got = np.array([r.s for r in df.select(row_sum([F.col(c) for c in cols]).alias("s")).collect()])
+    np.testing.assert_array_equal(_bits(got), _bits(mat.sum(axis=1, keepdims=True)[:, 0]))

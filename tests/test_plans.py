@@ -3,6 +3,9 @@ designed around, asserted on the actual Catalyst output so they cannot
 silently rot:
 
 * no row-at-a-time Python UDFs anywhere (Arrow-only Python surface),
+* no Python at all on the monitoring path: drift, realized performance and
+  CBPE plans hold no Python UDF and no Python-RDD leaf (``ExistingRDD``);
+  driver-built tables are ``LocalTableScan``s,
 * no cartesian products in any query plan,
 * predicate pushdown + column pruning reach the parquet scan,
 * small dimension joins broadcast,
@@ -41,6 +44,108 @@ def test_no_row_python_udfs_or_cartesians_anywhere(spark, entry_queries):
         if bad:
             offenders[name] = bad
     assert not offenders, f"scale-hostile operators in plans: {offenders}"
+
+
+PYTHON_OPERATORS = ("ExistingRDD", "ArrowEvalPython", "BatchEvalPython")
+
+
+@pytest.fixture(scope="module")
+def model_frame(spark):
+    """Reference (id < 3000) and analysis rows from ``spark.range``, so the
+    only leaves the input brings are Range scans. Labels follow score²,
+    which leaves the scores miscalibrated."""
+    from pyspark.sql import functions as F
+
+    u = F.pmod(F.col("id") * F.lit(2654435761), F.lit(1000)) / F.lit(1000.0)
+    v = F.pmod(F.col("id") * F.lit(40503), F.lit(997)) / F.lit(997.0)
+    w = F.pmod(F.col("id") * F.lit(69069), F.lit(991)) / F.lit(991.0)
+    raw = [u * u + 0.05, (1 - u) * v + 0.05, w * (1 - v) + 0.05]
+    tot = raw[0] + raw[1] + raw[2]
+    cls = F.when(v < raw[0] / tot, "a").when(v < (raw[0] + raw[1]) / tot, "b").otherwise("c")
+    pred = F.when((raw[0] >= raw[1]) & (raw[0] >= raw[2]), "a").when(raw[1] >= raw[2], "b").otherwise("c")
+    return spark.range(6000).select(
+        "id",
+        (F.col("id") < 3000).alias("is_ref"),
+        u.alias("score"),
+        (v < u * u).cast("int").alias("y_true"),
+        (u > 0.5).cast("int").alias("y_pred"),
+        (u * 10 + v).alias("x"),
+        F.element_at(F.array(*[F.lit(c) for c in "abcd"]), (F.col("id") % 4 + 1).cast("int")).alias("cat"),
+        *[(r / tot).alias(f"p_{c}") for r, c in zip(raw, "abc")],
+        cls.alias("y_true_mc"),
+        pred.alias("y_pred_mc"),
+    )
+
+
+def _assert_no_python(df):
+    p = plan_str(df)
+    bad = [m for m in PYTHON_OPERATORS if m in p]
+    assert not bad, f"Python on the monitoring path: {bad}\n{p}"
+
+
+def test_univariate_drift_plans_run_no_python(model_frame):
+    from spark_validate.chunking import SizeBasedChunker
+    from spark_validate.drift.univariate import UnivariateDriftCalculator
+
+    calc = UnivariateDriftCalculator(
+        column_names=["x", "cat"],
+        continuous_methods=["jensen_shannon"],
+        # chi2 is left out: its p-value is a pandas UDF (the chi-squared
+        # survival function), Python that does the analytic work
+        categorical_methods=["jensen_shannon", "hellinger"],
+        chunker=SizeBasedChunker(chunk_size=1000, order_by=["id"]),
+    ).fit(model_frame.filter("is_ref"))
+    res = calc.calculate(model_frame.filter("NOT is_ref"))
+    assert set(r.column_name for r in res.select("column_name").distinct().collect()) == {"x", "cat"}
+    _assert_no_python(res)
+    calc.release_cache()
+
+
+def test_performance_calculator_plan_runs_no_python(model_frame):
+    from spark_validate.chunking import SizeBasedChunker
+    from spark_validate.performance.calculator import PerformanceCalculator
+
+    calc = PerformanceCalculator(
+        metrics=("roc_auc", "f1", "accuracy"),
+        y_true="y_true",
+        y_pred="y_pred",
+        y_pred_proba="score",
+        chunker=SizeBasedChunker(chunk_size=1000, order_by=["id"]),
+    ).fit(model_frame.filter("is_ref"))
+    _assert_no_python(calc.calculate(model_frame.filter("NOT is_ref")))
+
+
+def test_cbpe_binary_plan_runs_no_python(model_frame):
+    from spark_validate.calibration import IsotonicCalibrator
+    from spark_validate.chunking import SizeBasedChunker
+    from spark_validate.performance.cbpe import CBPE
+
+    est = CBPE(
+        metrics=("roc_auc", "accuracy"),
+        y_true="y_true",
+        y_pred="y_pred",
+        y_pred_proba="score",
+        chunker=SizeBasedChunker(chunk_size=1000, order_by=["id"]),
+    ).fit(model_frame.filter("is_ref"))
+    assert isinstance(est._calibrator, IsotonicCalibrator)
+    _assert_no_python(est.estimate(model_frame.filter("NOT is_ref").drop("y_true")))
+
+
+def test_cbpe_multiclass_plan_runs_no_python(model_frame):
+    from spark_validate.calibration import IsotonicCalibrator
+    from spark_validate.chunking import SizeBasedChunker
+    from spark_validate.performance.cbpe import CBPE
+
+    est = CBPE(
+        metrics=("accuracy", "f1"),
+        y_true="y_true_mc",
+        y_pred="y_pred_mc",
+        y_pred_proba={c: f"p_{c}" for c in "abc"},
+        problem_type="multiclass_classification",
+        chunker=SizeBasedChunker(chunk_size=1000, order_by=["id"]),
+    ).fit(model_frame.filter("is_ref"))
+    assert any(isinstance(c, IsotonicCalibrator) for c in est._calibrators.values())
+    _assert_no_python(est.estimate(model_frame.filter("NOT is_ref").drop("y_true_mc")))
 
 
 def test_scan_pushdown_and_column_pruning(spark, entry_queries):
