@@ -50,6 +50,7 @@ from spark_validate.calculators.base import assign_chunks, join_headers, nan_to_
 from spark_validate.checks.constraints import _HDR_COLS, _attach_const_threshold, _melt_long, _melt_rates
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker, chunk_aggregate
 from spark_validate.fused import calculate_alone
+from spark_validate.session import shuffle_partitions
 from spark_validate.thresholds import ConstantThreshold
 
 _DEC_V = "decimal(38,6)"  # value sums: exact for inputs with <= 6 decimals
@@ -961,10 +962,7 @@ class ShapeStatsCalculator:
 
         n = getattr(self.chunker, "_last_assign_n", None)
         if ROW_INDEX in assigned.columns and n is not None and n <= SORT_INDEX_THRESHOLD:
-            # the conf is 'auto' on platforms with auto-optimized shuffles
-            parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            n_parts = int(parts) if parts.isdigit() else df.sparkSession.sparkContext.defaultParallelism
-            assigned = assigned.repartition(n_parts)
+            assigned = assigned.repartition(shuffle_partitions(df.sparkSession))
         wide = chunk_aggregate(assigned, self.chunker, self._exprs(dtypes, ""))
         long_df = self._melt(wide, "")
         return _attach_const_threshold(long_df, period, self.threshold.lower, self.threshold.upper)

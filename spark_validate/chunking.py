@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_validate.functions.local import local_frame
+from spark_validate.session import shuffle_partitions
 
 CHUNK_KEY = "chunk_key"
 CHUNK_INDEX = "chunk_index"
@@ -95,7 +96,7 @@ def with_row_index(
     # list: every recompute agrees by construction, nothing is materialized,
     # and the whole index costs two passes (a count-only aggregate + the
     # windowed pass the caller was paying anyway).
-    n_parts = int(num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(num_partitions or shuffle_partitions(df.sparkSession))
     key = F.struct(*[F.col(c) for c in order_by])
     # 1. boundary keys from a seeded sample (driver-side, tiny)
     if n is None:

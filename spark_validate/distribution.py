@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks
 from spark_validate.chunking import CHUNK_KEY, ROW_INDEX, Chunker, DefaultChunker
+from spark_validate.session import shuffle_partitions
 
 
 def categorical_distribution(
@@ -99,7 +100,7 @@ def continuous_distribution(
 
     # compute-dense Arrow stage (per-chunk KDE): pin one shuffle partition per
     # chunk so AQE byte-based coalescing can't serialize the numpy work
-    n_shuf = int(src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_shuf = shuffle_partitions(src.sparkSession)
     return src.repartition(n_shuf, CHUNK_KEY).groupBy(CHUNK_KEY).applyInPandas(
         per_chunk, f"{CHUNK_KEY} string, x double, density double, cdf double"
     ).withColumnRenamed(CHUNK_KEY, "chunk_key")

@@ -42,6 +42,7 @@ from spark_validate.calculators.base import assign_chunks, join_headers_long, pr
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
+from spark_validate.session import shuffle_partitions
 from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold, alert_expr
 
 _NUMERIC_TYPES = ("int", "bigint", "smallint", "tinyint", "float", "double", "decimal", "long")
@@ -395,7 +396,7 @@ class DomainClassifierCalculator:
         # AQE's BYTE-based coalescing cannot serialize the per-chunk CV-GBDT
         # onto one task (the group payloads are a few MB but each costs ~1 s
         # of numpy; measured 29 s → ~5 s at 28 chunks on 32 cores)
-        shuffle_default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        shuffle_default = shuffle_partitions(df.sparkSession)
         vals = (
             assigned.select(CHUNK_KEY, *column_names)
             .repartition(shuffle_default, CHUNK_KEY)

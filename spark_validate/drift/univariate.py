@@ -63,6 +63,7 @@ from spark_validate.calculators.base import assign_chunks, join_headers_long, na
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
+from spark_validate.session import shuffle_partitions
 from spark_validate.thresholds import StandardDeviationThreshold, alert_expr
 
 CONTINUOUS_METHODS = (
@@ -919,7 +920,7 @@ class UnivariateDriftCalculator:
             )
             # compute-dense Arrow stage: pin one shuffle partition per chunk
             # so AQE byte-based coalescing can't serialize the numpy work
-            n_shuf = int(assigned.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            n_shuf = shuffle_partitions(assigned.sparkSession)
             res = src.repartition(n_shuf, CHUNK_KEY).groupBy(CHUNK_KEY).applyInPandas(
                 per_chunk, f"{CHUNK_KEY} string, method string, value double"
             )

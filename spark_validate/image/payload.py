@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_validate.session import shuffle_partitions
+
 try:  # real codec path (absent in this container)
     from PIL import Image  # noqa: F401
 
@@ -335,7 +337,7 @@ def decode_pixel_stats(
     downstream chunked/windowed consumers keep their identity columns
     without re-joining the raw table.
     """
-    n_parts = partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = partitions or shuffle_partitions(df.sparkSession)
     # repartitionByRange samples the input to pick bounds — impossible on a
     # stream; hash repartition spreads oversized payloads just as well there
     # (range order only matters for the batch suite's storage locality)

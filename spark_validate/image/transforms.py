@@ -29,13 +29,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_validate.image.payload import _HAS_PIL, _decode
+from spark_validate.session import shuffle_partitions
 
 VIDEO_MAGIC = b"SVV0"
 AUDIO_MAGIC = b"SVA0"
 
 
 def _parts(df: DataFrame, partitions: Optional[int]) -> int:
-    return partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return partitions or shuffle_partitions(df.sparkSession)
 
 
 def _resize_nearest(px: np.ndarray, src_w: int, src_h: int, out_w: int, out_h: int) -> np.ndarray:

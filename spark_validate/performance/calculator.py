@@ -523,26 +523,53 @@ class PerformanceCalculator:
     # ------------------------------------------------------------------ fit
 
     def _fit_se_components(self, reference: DataFrame) -> None:
-        """Closed-form sampling-error components from one reference pass."""
-        yt = F.col(self.y_true).cast("double")
-        yp = F.col(self.y_pred).cast("double")
-        se: Dict[str, dict] = {}
+        """Closed-form sampling-error components from one conditional
+        reference aggregate, plus one collected sample when a rank-based
+        metric (AUROC, AP) needs one."""
+        row = reference.agg(*self._se_aggs()).first()
+        fraction = self._rank_fraction(row)
+        rank_pdf = None if fraction is None else self._rank_sample(self._scored_rows(reference), fraction)
+        self._se = self._se_from_row(row, rank_pdf)
+
+    def _se_aggs(self) -> list:
+        """The aggregates ``_se_from_row`` reads. Rows without a label or a
+        prediction are left out of every count through ``F.when``, not a
+        filter, so a caller can add its own aggregates over all rows to the
+        same pass. ``_rank_n`` (and binary ``_rank_n1``) size the rank
+        sample (``_scored_rows``' ``_rank`` rows)."""
+        if self.problem_type == "regression":
+            yt = F.col(self.y_true).cast("double")
+            yp = F.col(self.y_pred).cast("double")
+            err = yt - yp
+            return [
+                F.stddev_pop(F.abs(err)).alias("mae_std"),
+                F.stddev_pop(F.abs(err) / F.greatest(F.abs(yt), F.lit(2.220446049250313e-16))).alias("mape_std"),
+                F.stddev_pop(err * err).alias("mse_std"),
+                F.avg(err * err).alias("mse_mean"),
+                F.stddev_pop(F.pow(F.log1p(yt) - F.log1p(yp), 2)).alias("msle_std"),
+                F.avg(F.pow(F.log1p(yt) - F.log1p(yp), 2)).alias("msle_mean"),
+            ]
+        label, pred = self._label_pred()
+        # null labels/predictions are excluded from every cell, so n
+        # excludes them too
+        ok = label.isNotNull() & pred.isNotNull()
+
+        def on(x):
+            return F.when(ok, x)
+
         if self.problem_type == "binary_classification":
-            # null labels/predictions are excluded from every cell, so n must
-            # exclude them too (the multiclass branch already filters)
-            reference = reference.filter(yt.isNotNull() & yp.isNotNull())
+            yt, yp = label, pred
             aggs = [
-                F.avg((yt == yp).cast("double")).alias("acc"),
-                F.avg(yp).alias("pos_pred_rate"),
-                F.avg(yt).alias("pos_rate"),
-                F.sum(((yt == 1) & (yp == 1)).cast("double")).alias("tp"),
-                F.sum(((yt == 0) & (yp == 1)).cast("double")).alias("fp"),
-                F.sum(((yt == 1) & (yp == 0)).cast("double")).alias("fn"),
-                F.sum(((yt == 0) & (yp == 0)).cast("double")).alias("tn"),
-                F.count(F.lit(1)).alias("n"),
+                F.avg(on((yt == yp).cast("double"))).alias("acc"),
+                F.avg(on(yp)).alias("pos_pred_rate"),
+                F.avg(on(yt)).alias("pos_rate"),
+                F.sum(on(((yt == 1) & (yp == 1)).cast("double"))).alias("tp"),
+                F.sum(on(((yt == 0) & (yp == 1)).cast("double"))).alias("fp"),
+                F.sum(on(((yt == 1) & (yp == 0)).cast("double"))).alias("fn"),
+                F.sum(on(((yt == 0) & (yp == 0)).cast("double"))).alias("tn"),
+                F.count(on(F.lit(1))).alias("n"),
             ]
             if "business_value" in self.metrics and self.business_value_matrix is not None:
-                # ride the same pass (was a second stddev job over the frame)
                 (tn_v, fp_v), (fn_v, tp_v) = self.business_value_matrix
                 w_bv = (
                     F.when((yt == 1) & (yp == 1), float(tp_v))
@@ -550,8 +577,52 @@ class PerformanceCalculator:
                     .when((yt == 0) & (yp == 1), float(fp_v))
                     .otherwise(float(fn_v))
                 )
-                aggs.append(F.stddev_pop(w_bv).alias("bv_std"))
-            row = reference.agg(*aggs).first()
+                aggs.append(F.stddev_pop(on(w_bv)).alias("bv_std"))
+        else:
+            # one OvR counts pass for all per-class components
+            # (`sampling_error/multiclass_classification.py:21-487`)
+            yts, yps = label, pred
+            classes = self._classes or []
+            aggs = [
+                F.count(on(F.lit(1))).alias("n"),
+                F.avg(on((yts == yps).cast("double"))).alias("acc"),
+            ]
+            for i, c in enumerate(classes):
+                t, p_ = yts == str(c), yps == str(c)
+                aggs += [
+                    F.sum(on((t & p_).cast("double"))).alias(f"tp{i}"),
+                    F.sum(on((~t & p_).cast("double"))).alias(f"fp{i}"),
+                    F.sum(on((t & ~p_).cast("double"))).alias(f"fn{i}"),
+                    F.sum(on((~t & ~p_).cast("double"))).alias(f"tn{i}"),
+                ]
+            if "confusion_matrix" in self.metrics:
+                for i, t_ in enumerate(classes):
+                    for j, p_ in enumerate(classes):
+                        aggs.append(
+                            F.sum(on(((yts == str(t_)) & (yps == str(p_))).cast("long"))).alias(f"cm{i}_{j}")
+                        )
+            if "business_value" in self.metrics and self.business_value_matrix is not None:
+                w_bv = F.lit(None).cast("double")
+                for i in range(len(classes)):
+                    for j in range(len(classes)):
+                        w_bv = F.when(
+                            (yts == str(classes[i])) & (yps == str(classes[j])),
+                            float(self.business_value_matrix[i][j]),
+                        ).otherwise(w_bv)
+                aggs.append(F.stddev_pop(on(w_bv)).alias("bv_std"))
+        if self._rank_metrics():
+            rank = self._scored_conditions()[2]
+            aggs.append(F.count(F.when(rank, F.lit(1))).alias("_rank_n"))
+            if self.problem_type == "binary_classification":
+                aggs.append(F.sum(F.when(rank, label)).alias("_rank_n1"))
+        return aggs
+
+    def _se_from_row(self, row, rank_pdf) -> Dict[str, dict]:
+        """Sampling-error components from the ``_se_aggs`` row and the rank
+        sample (``_rank_sample``; None when ``_rank_fraction`` is None)."""
+        se: Dict[str, dict] = {}
+        rank = self._rank_metrics()
+        if self.problem_type == "binary_classification":
             acc, n = row["acc"], row["n"]
             tp, fp, fn, tn = row["tp"], row["fp"], row["fn"], row["tn"]
             se["accuracy"] = {"std": math.sqrt(max(acc * (1 - acc), 0.0))}
@@ -575,13 +646,13 @@ class PerformanceCalculator:
                 cf = rel / ((fp + fn) * 0.5 + tp)
                 q = tp / rel
                 se["f1"] = {"std": cf * math.sqrt(max(q * (1 - q), 0.0)), "fraction": rel / n}
-            if "roc_auc" in self.metrics and self.y_pred_proba:
-                se["roc_auc"] = self._fit_auroc_se(reference)
-            if "average_precision" in self.metrics and self.y_pred_proba:
-                se["average_precision"] = self._fit_ap_se(reference)
+            if "roc_auc" in rank:
+                se["roc_auc"] = self._auroc_components(row, rank_pdf)
+            if "average_precision" in rank:
+                se["average_precision"] = self._ap_components(row["_rank_n"], rank_pdf)
             if "business_value" in self.metrics and self.business_value_matrix is not None:
                 # std of the per-row weighted value (bse.business_value_
-                # sampling_error_components :803-845) — rides the shared pass
+                # sampling_error_components :803-845)
                 se["business_value"] = {"std": row["bv_std"], "bv_norm": self.normalize_business_value}
             if "confusion_matrix" in self.metrics:
                 # per-cell components (bse :387-801): binomial std of the
@@ -604,43 +675,7 @@ class PerformanceCalculator:
                     std = math.sqrt(max(q * (1 - q), 0.0)) if q == q else float("nan")
                     se[cell] = {"std": std, "fraction": rel, "cm_norm": norm}
         elif self.problem_type == "multiclass_classification":
-            # one OvR counts pass for all per-class components
-            # (`sampling_error/multiclass_classification.py:21-487`)
-            yts = F.col(self.y_true).cast("string")
-            yps = F.col(self.y_pred).cast("string")
             classes = self._classes or []
-            aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.avg((yts == yps).cast("double")).alias("acc"),
-            ]
-            for i, c in enumerate(classes):
-                t, p_ = yts == str(c), yps == str(c)
-                aggs += [
-                    F.sum((t & p_).cast("double")).alias(f"tp{i}"),
-                    F.sum((~t & p_).cast("double")).alias(f"fp{i}"),
-                    F.sum((t & ~p_).cast("double")).alias(f"fn{i}"),
-                    F.sum((~t & ~p_).cast("double")).alias(f"tn{i}"),
-                ]
-            # confusion-matrix cells and the business-value std ride the SAME
-            # reference pass (previously one extra groupBy-collect job and one
-            # extra stddev job per fit — pure driver round-trips at bench
-            # scale, pure extra scans at cluster scale)
-            if "confusion_matrix" in self.metrics:
-                for i, t_ in enumerate(classes):
-                    for j, p_ in enumerate(classes):
-                        aggs.append(
-                            F.sum(((yts == str(t_)) & (yps == str(p_))).cast("long")).alias(f"cm{i}_{j}")
-                        )
-            if "business_value" in self.metrics and self.business_value_matrix is not None:
-                w_bv = F.lit(None).cast("double")
-                for i in range(len(classes)):
-                    for j in range(len(classes)):
-                        w_bv = F.when(
-                            (yts == str(classes[i])) & (yps == str(classes[j])),
-                            float(self.business_value_matrix[i][j]),
-                        ).otherwise(w_bv)
-                aggs.append(F.stddev_pop(w_bv).alias("bv_std"))
-            row = reference.filter(yts.isNotNull() & yps.isNotNull()).agg(*aggs).first()
             n = row["n"]
             acc = row["acc"]
             se["accuracy"] = {"std": math.sqrt(max(acc * (1 - acc), 0.0))}
@@ -660,23 +695,21 @@ class PerformanceCalculator:
             for m_, cc in comps.items():
                 if m_ in self.metrics:
                     se[m_] = {"mc": cc, "scale": 1.0}
-            if "roc_auc" in self.metrics and isinstance(self.y_pred_proba, dict):
-                se["roc_auc"] = {"mc": self._fit_mc_auroc_components(reference), "scale": 1.2}
-            if "average_precision" in self.metrics and isinstance(self.y_pred_proba, dict):
+            if "roc_auc" in rank:
+                se["roc_auc"] = {"mc": self._mc_auroc_components(rank_pdf), "scale": 1.2}
+            if "average_precision" in rank:
                 # ref average_precision_sampling_error_components
                 # (sampling_error/multiclass_classification.py:417-487):
                 # per-class bootstrap var over N=50 resamples of size
                 # min(n/2, 50k) on binarized OvR labels; chunk SE =
                 # sqrt(mean_c(var_c * s_c) / n_chunk) — the constant
                 # mean_c(var_c*s_c) is all we need to store
-                se["average_precision"] = self._fit_mc_ap_component(reference)
+                se["average_precision"] = self._mc_ap_component(row["_rank_n"], rank_pdf)
             if "confusion_matrix" in self.metrics:
                 # ref multiclass_confusion_matrix_sampling_error_components
                 # (:361-414): per-cell binomial std over the normalization
                 # denominator + relevant proportion; same application law as
                 # the binary cm_norm cells, keyed by the dense method name.
-                # Cell counts came from the shared aggregate above (a cell
-                # expression is exactly the old isin-filtered groupBy count).
                 norm = self.normalize_confusion_matrix
                 cm = {
                     (str(t_), str(p_)): row[f"cm{i}_{j}"]
@@ -700,53 +733,99 @@ class PerformanceCalculator:
                         se[f"true_{t_}_pred_{p_}"] = {"std": std, "fraction": rel, "cm_norm": norm}
             if "business_value" in self.metrics and self.business_value_matrix is not None:
                 se["business_value"] = {"std": row["bv_std"], "bv_norm": self.normalize_business_value}
-        elif self.problem_type == "regression":
-            err = yt - yp
-            row = reference.agg(
-                F.stddev_pop(F.abs(err)).alias("mae_std"),
-                F.stddev_pop(F.abs(err) / F.greatest(F.abs(yt), F.lit(2.220446049250313e-16))).alias("mape_std"),
-                F.stddev_pop(err * err).alias("mse_std"),
-                F.avg(err * err).alias("mse_mean"),
-                F.stddev_pop(F.pow(F.log1p(yt) - F.log1p(yp), 2)).alias("msle_std"),
-                F.avg(F.pow(F.log1p(yt) - F.log1p(yp), 2)).alias("msle_mean"),
-            ).first()
+        else:
             se["mae"] = {"std": row["mae_std"]}
             se["mape"] = {"std": row["mape_std"]}
             se["mse"] = {"std": row["mse_std"]}
             se["msle"] = {"std": row["msle_std"]}
             se["rmse"] = {"std": row["mse_std"], "mean": row["mse_mean"]}
             se["rmsle"] = {"std": row["msle_std"], "mean": row["msle_mean"]}
-        self._se = se
+        return se
 
     # Reference caps sampling-error fits at 50k rows
     # (`sampling_error/binary_classification.py:27-29` MAX_RESAMPLE_SIZE) — the
     # SE component is an estimate; a bounded seeded sample suffices at any scale.
     MAX_RESAMPLE_SIZE = 50_000
 
-    def _fit_auroc_se(self, reference: DataFrame) -> dict:
+    def _rank_metrics(self) -> set:
+        """The metrics whose sampling errors rank a scored sample."""
+        if self.problem_type == "binary_classification" and self.y_pred_proba:
+            return {"roc_auc", "average_precision"} & set(self.metrics)
+        if self.problem_type == "multiclass_classification" and isinstance(self.y_pred_proba, dict):
+            return {"roc_auc", "average_precision"} & set(self.metrics)
+        return set()
+
+    def _label_pred(self):
+        """Label and prediction Columns: doubles, strings for multiclass."""
+        t = "string" if self.problem_type == "multiclass_classification" else "double"
+        return F.col(self.y_true).cast(t), F.col(self.y_pred).cast(t)
+
+    def _scored_conditions(self):
+        """(label, scores, rank, cal) Columns for ``_scored_rows`` and
+        ``_se_aggs``: double scores, one per class in ``_classes`` order for
+        multiclass."""
+        label, pred = self._label_pred()
+        if self.problem_type == "multiclass_classification":
+            scores = [F.col(self.y_pred_proba[c]).cast("double") for c in self._classes]
+            # multiclass rows need every score, none NaN; the one-vs-rest
+            # AUROC/AP components read no prediction, so both sides read
+            # the same rows
+            cal = label.isNotNull()
+            for s in scores:
+                cal = cal & s.isNotNull() & ~F.isnan(s)
+            return label, scores, cal, cal
+        s = F.col(self.y_pred_proba).cast("double")
+        scored = label.isNotNull() & s.isNotNull()
+        # a NaN score ranks highest, as in the realized AUC; the calibrator
+        # drops NaN labels and scores
+        return label, [s], scored & pred.isNotNull(), scored & ~F.isnan(label) & ~F.isnan(s)
+
+    def _scored_rows(self, reference: DataFrame) -> DataFrame:
+        """Rows with a label and every score, as ``_y``, ``_s0``, ``_s1``, …
+        and two flags: the rank-based sampling errors sample the ``_rank``
+        rows, CBPE's calibrator the ``_cal`` rows. Binary ``_rank`` rows
+        also carry a prediction; binary ``_cal`` rows hold no NaN."""
+        label, scores, rank, cal = self._scored_conditions()
+        cols = [label.alias("_y")] + [s.alias(f"_s{i}") for i, s in enumerate(scores)]
+        return reference.select(*cols, rank.alias("_rank"), cal.alias("_cal")).filter(
+            F.col("_rank") | F.col("_cal")
+        )
+
+    def _rank_fraction(self, row) -> Optional[float]:
+        """Share of the ``_rank`` rows the rank-based components sample: all
+        of them up to MAX_RESAMPLE_SIZE, a seeded Bernoulli share above it.
+        None when no component needs a sample."""
+        rank = self._rank_metrics()
+        n = row["_rank_n"] if rank else 0
+        if not n:
+            return None
+        if rank == {"roc_auc"} and self.problem_type == "binary_classification":
+            n1 = row["_rank_n1"]
+            if not n1 or n1 == n:  # one class: AUROC has no components
+                return None
+        return min(1.0, self.MAX_RESAMPLE_SIZE / n)
+
+    @staticmethod
+    def _rank_sample(scored: DataFrame, fraction: float):
+        """Collect the ``_rank`` rows of ``_scored_rows``, sampled when the
+        fraction is below 1. A global rank over the full reference would
+        collapse to one task (and at 10^12 rows, one very large one); the
+        bounded seeded sample ranks in driver numpy instead, which is the
+        reference's own scalability device."""
+        rows = scored.filter(F.col("_rank"))
+        if fraction < 1.0:
+            rows = rows.sample(fraction=fraction, seed=42)
+        return rows.toPandas()
+
+    def _auroc_components(self, row, pdf) -> dict:
         """AUROC components (`sampling_error/binary_classification.py:36-75`):
         per-positive fraction of negatives ranked below it; std of that
-        distribution + positive fraction.
-
-        A global rank over the full reference would collapse to one task (and
-        at 10^12 rows, one very large one). Instead: seeded sample down to
-        ≤ MAX_RESAMPLE_SIZE, then the rank pass runs in bounded driver numpy —
-        exactly the reference's own scalability device.
-        """
-        yt = F.col(self.y_true).cast("double")
-        s = F.col(self.y_pred_proba).cast("double")
-        df = reference.select(yt.alias("_y"), s.alias("_s")).filter(
-            F.col("_y").isNotNull() & F.col("_s").isNotNull()
-        )
-        row = df.agg(F.sum("_y").alias("n1"), F.count(F.lit(1)).alias("n")).first()
-        n1, n = row["n1"], row["n"]
+        distribution + positive fraction."""
+        n1, n = row["_rank_n1"], row["_rank_n"]
         if not n or not n1 or n1 == n:
             return {"std": None, "fraction": (n1 / n) if n else None}
-        if n > self.MAX_RESAMPLE_SIZE:
-            df = df.sample(fraction=self.MAX_RESAMPLE_SIZE / n, seed=42)
-        pdf = df.toPandas()
         y = pdf["_y"].to_numpy(dtype=np.float64)
-        p = pdf["_s"].to_numpy(dtype=np.float64)
+        p = pdf["_s0"].to_numpy(dtype=np.float64)
         if y.mean() > 0.5:  # reference flips the minority class
             y = 1.0 - y
             p = 1.0 - p
@@ -764,24 +843,15 @@ class PerformanceCalculator:
         ser = neg_below[y == 1.0] / n0s
         return {"std": float(np.std(ser)), "fraction": frac}
 
-    def _fit_ap_se(self, reference: DataFrame) -> dict:
+    def _ap_components(self, n, pdf) -> dict:
         """AP components (`bse.ap_sampling_error_components :95-128`): bootstrap
-        std over N=50 resamples of size min(n/2, 50k), extrapolated 1/√n.
-        Runs on a seeded ≤50k collected sample (same device as AUROC)."""
+        std over N=50 resamples of size min(n/2, 50k), extrapolated 1/√n."""
         from spark_validate.functions.mathstats import average_precision
 
-        df = reference.select(
-            F.col(self.y_true).cast("double").alias("_y"),
-            F.col(self.y_pred_proba).cast("double").alias("_s"),
-        ).filter(F.col("_y").isNotNull() & F.col("_s").isNotNull())
-        n = df.count()
         if not n:
             return {"std": None, "sample_size": None}
-        if n > self.MAX_RESAMPLE_SIZE:
-            df = df.sample(fraction=self.MAX_RESAMPLE_SIZE / n, seed=42)
-        pdf = df.toPandas()
         y = pdf["_y"].to_numpy(np.float64)
-        s = pdf["_s"].to_numpy(np.float64)
+        s = pdf["_s0"].to_numpy(np.float64)
         sample_size = int(min(n // 2, self.MAX_RESAMPLE_SIZE))
         if sample_size < 2 or y.sum() == 0 or y.sum() == len(y):
             return {"std": None, "sample_size": sample_size}
@@ -792,18 +862,12 @@ class PerformanceCalculator:
             aps.append(average_precision(y[idx], s[idx]))
         return {"std": float(np.nanstd(aps)), "sample_size": sample_size}
 
-    def _fit_mc_auroc_components(self, reference: DataFrame) -> list:
-        """Per-class OvR AUROC components (var(ser), fraction) from one
-        seeded ≤50k sample (`mse.auroc_sampling_error_components :27-75`)."""
-        cols = [F.col(self.y_true).cast("string").alias("_y")] + [
-            F.col(self.y_pred_proba[c]).cast("double").alias(f"_s{i}")
-            for i, c in enumerate(self._classes)
-        ]
-        df = reference.select(*cols).dropna()
-        n = df.count()
-        if n > self.MAX_RESAMPLE_SIZE:
-            df = df.sample(fraction=self.MAX_RESAMPLE_SIZE / n, seed=42)
-        pdf = df.toPandas()
+    def _mc_auroc_components(self, pdf) -> list:
+        """Per-class OvR AUROC components (var(ser), fraction) from the rank
+        sample (`mse.auroc_sampling_error_components :27-75`)."""
+        nan = float("nan")
+        if pdf is None:  # no scored rows
+            return [[nan, nan] for _ in self._classes]
         comps = []
         for i, c in enumerate(self._classes):
             y = (pdf["_y"] == str(c)).to_numpy(np.float64)
@@ -814,31 +878,22 @@ class PerformanceCalculator:
             ys = y[order]
             n0s = float((1.0 - ys).sum())
             if n0s == 0 or ys.sum() == 0:
-                comps.append([float("nan"), float("nan")])
+                comps.append([nan, nan])
                 continue
             neg_below = np.concatenate(([0.0], np.cumsum(1.0 - ys)[:-1]))
             ser = neg_below[ys == 1.0] / n0s
             comps.append([float(np.var(ser)), float(y.mean())])
         return comps
 
-    def _fit_mc_ap_component(self, reference: DataFrame) -> dict:
-        """Macro-OvR AP bootstrap components on one seeded ≤50k sample
+    def _mc_ap_component(self, n, pdf) -> dict:
+        """Macro-OvR AP bootstrap components on the rank sample
         (`sampling_error/multiclass_classification.py:417-487`): per class,
         var over N=50 resamples of size min(n/2, 50k); stored as the single
         constant mean_c(var_c·s_c) so chunk SE = sqrt(C / n_chunk)."""
         from spark_validate.functions.mathstats import average_precision
 
-        cols = [F.col(self.y_true).cast("string").alias("_y")] + [
-            F.col(self.y_pred_proba[c]).cast("double").alias(f"_s{i}")
-            for i, c in enumerate(self._classes)
-        ]
-        df = reference.select(*cols).dropna()
-        n = df.count()
         if not n:
             return {"mc_ap_c": None}
-        if n > self.MAX_RESAMPLE_SIZE:
-            df = df.sample(fraction=self.MAX_RESAMPLE_SIZE / n, seed=42)
-        pdf = df.toPandas()
         sample_size = int(min(n // 2, self.MAX_RESAMPLE_SIZE))
         if sample_size < 2:
             return {"mc_ap_c": None}

@@ -105,45 +105,22 @@ class CBPE:
 
     # -------------------------------------------------------------- calibration
 
-    def _fit_calibrator(self, reference: DataFrame) -> None:
-        """Collect a seeded reference (score, label) sample — thin columns
-        only; 10^12-row references are sampled, which is statistically ample
-        for 1-D monotone fits — decide need, fit isotonic.
+    def _fit_calibrator(self, pdf) -> None:
+        """Decide need and fit isotonic on the collected ``_cal`` sample
+        (``PerformanceCalculator._scored_rows``). Multiclass (ref
+        cbpe.py:539-552 _fit_calibrators): one calibrator per class on the
+        one-vs-rest binarized labels, from the same sample."""
 
-        Multiclass (ref cbpe.py:539-552 _fit_calibrators): one calibrator per
-        class on the one-vs-rest binarized labels, fitted from the SAME
-        sample collect."""
-        n = reference.count()
-        frac = min(1.0, self.calibration_sample / max(n, 1))
+        def fit(y, p):
+            return (IsotonicCalibrator() if needs_calibration(y, p) else NoopCalibrator()).fit(p, y)
+
         if self.problem_type == "multiclass_classification":
-            cols = [F.col(self.y_true).cast("string").alias("y")] + [
-                F.col(self.y_pred_proba[c]).cast("double").alias(f"p_{i}")
+            self._calibrators = {
+                c: fit((pdf["_y"] == str(c)).to_numpy(dtype=float), pdf[f"_s{i}"].to_numpy())
                 for i, c in enumerate(self.classes)
-            ]
-            pdf = reference.select(*cols).dropna().sample(fraction=frac, seed=42).toPandas()
-            self._calibrators = {}
-            for i, c in enumerate(self.classes):
-                y = (pdf["y"] == str(c)).to_numpy(dtype=float)
-                p = pdf[f"p_{i}"].to_numpy()
-                if needs_calibration(y, p):
-                    self._calibrators[c] = IsotonicCalibrator().fit(p, y)
-                else:
-                    self._calibrators[c] = NoopCalibrator().fit(p, y)
-            return
-        pdf = (
-            reference.select(
-                F.col(self.y_pred_proba).cast("double").alias("p"),
-                F.col(self.y_true).cast("double").alias("y"),
-            )
-            .dropna()
-            .sample(fraction=frac, seed=42)
-            .toPandas()
-        )
-        p, y = pdf["p"].to_numpy(), pdf["y"].to_numpy()
-        if needs_calibration(y, p):
-            self._calibrator = IsotonicCalibrator().fit(p, y)
+            }
         else:
-            self._calibrator = NoopCalibrator().fit(p, y)
+            self._calibrator = fit(pdf["_y"].to_numpy(), pdf["_s0"].to_numpy())
 
     def _with_calibrated(self, df: DataFrame) -> DataFrame:
         """Add the calibrated probability column ``_cal_p``."""
@@ -478,24 +455,40 @@ class CBPE:
             return self._fit(ref)
 
     def _fit(self, reference: DataFrame) -> "CBPE":
-        self._fit_calibrator(reference)
         # sampling-error components: same closed forms as realized performance
         # (the reference's CBPE metrics reuse the sampling_error/* modules too)
+        mc = self.problem_type == "multiclass_classification"
         helper = PerformanceCalculator(
             metrics=tuple(self.metrics),
             problem_type=self.problem_type,
             y_true=self.y_true,
             y_pred=self.y_pred,
-            y_pred_proba=self.y_pred_proba,
+            y_pred_proba={str(c): col for c, col in self.y_pred_proba.items()} if mc else self.y_pred_proba,
             business_value_matrix=self.business_value_matrix,
             normalize_business_value=self.normalize_business_value,
             normalize_confusion_matrix=self.normalize_confusion_matrix,
             chunker=self.chunker,
         )
-        if self.problem_type == "multiclass_classification":
+        if mc:
             helper._classes = [str(c) for c in self.classes]
-        helper._fit_se_components(reference)
-        self._se = helper._se
+        # one aggregate: the row count (it sets the calibrator's sample
+        # share), the sampling-error counts and the rank-sample size
+        row = reference.agg(F.count(F.lit(1)).alias("_rows"), *helper._se_aggs()).first()
+        scored = helper._scored_rows(reference)
+        # a seeded sample bounds the calibrator collect at any scale (1-D
+        # monotone fits need no more) and the rank sample at 50k rows
+        cal_frac = min(1.0, self.calibration_sample / max(row["_rows"], 1))
+        rank_frac = helper._rank_fraction(row)
+        if cal_frac == 1.0 and rank_frac in (None, 1.0):
+            # neither side samples: both are slices of one collect
+            pdf = scored.toPandas()
+            cal_pdf = pdf[pdf["_cal"].to_numpy()]
+            rank_pdf = None if rank_frac is None else pdf[pdf["_rank"].to_numpy()]
+        else:
+            cal_pdf = scored.filter(F.col("_cal")).sample(fraction=cal_frac, seed=42).toPandas()
+            rank_pdf = None if rank_frac is None else helper._rank_sample(scored, rank_frac)
+        self._fit_calibrator(cal_pdf)
+        self._se = helper._se_from_row(row, rank_pdf)
         self._fitted = True
         ref_long, ref_headers = self._estimated_chunk_values(reference)
         ref_long = ref_long.persist()

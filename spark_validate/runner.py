@@ -54,6 +54,7 @@ from spark_validate.checks import (
 from spark_validate.chunking import CHUNK_KEY, chunker_for
 from spark_validate.drift import UnivariateDriftCalculator
 from spark_validate.io import FittedStore, read_source, read_table, write_results
+from spark_validate.session import jvm_compile_counters, warn_small_codegen_cache
 from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold
 
 
@@ -742,6 +743,7 @@ def apply_derived_columns(df, derived: Optional[dict]):
 
 
 def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
+    warn_small_codegen_cache(spark)
     run_id = config["run_id"]
     out_dir = config["output_dir"]
     store = FittedStore(config.get("store_dir", os.path.join(out_dir, "store")))
@@ -794,11 +796,13 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
 
     # ---- phase 1: build + load-or-fit every check --------------------------
     # (fit must precede the fused pass: fuse_contrib needs fitted state)
-    prepared = []  # (name, check_cfg, chunker, calc, from_store, fit_secs)
+    # (name, check_cfg, chunker, calc, from_store, fit_secs, fit_compiles)
+    prepared = []
     for name, check_cfg in zip(check_names, config["checks"]):
         chunker = build_chunker(chunk_cfg)
         calc = build_check(spark, check_cfg, chunker)
         t_fit0 = time.time()
+        compiles0 = jvm_compile_counters(spark)
         # load-or-fit (store hit skips the reference aggregation entirely);
         # domain/uniqueness/referential checks carry no reference-fitted state
         from_store = False
@@ -850,7 +854,9 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
                         logger.warning("state not storable for %r (%s); fitted without store", name, exc)
             else:
                 calc.fit(reference)
-        prepared.append((name, check_cfg, chunker, calc, from_store, time.time() - t_fit0))
+        compiles1 = jvm_compile_counters(spark)
+        fit_compiles = tuple(b - a for a, b in zip(compiles0, compiles1))
+        prepared.append((name, check_cfg, chunker, calc, from_store, time.time() - t_fit0, fit_compiles))
 
     # ---- fused shared-scan pass ---------------------------------------------
     # One groupBy(chunk) aggregation for every agg-shaped check (stats /
@@ -863,7 +869,7 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
     if completed is None:
         from spark_validate.fused import fused_calculate, is_fusable
 
-        fusable = {n: c for (n, _cfg, _ch, c, _fs, _ts) in prepared if is_fusable(c)}
+        fusable = {n: c for (n, _cfg, _ch, c, *_rest) in prepared if is_fusable(c)}
         if len(fusable) > 1:
             shared_chunker = prepared[0][2]
             fused_results, fused_wide = fused_calculate(fusable, analysis, shared_chunker)
@@ -871,9 +877,10 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
                         len(fusable), len(prepared), sorted(fusable))
 
     # ---- phase 2: calculate / write / lineage per check ----------------------
-    for name, check_cfg, chunker, calc, from_store, fit_secs in prepared:
+    for name, check_cfg, chunker, calc, from_store, fit_secs, fit_compiles in prepared:
         violations_error: Optional[str] = None
         t0 = time.time() - fit_secs  # report secs include this check's fit
+        compiles0 = jvm_compile_counters(spark)
 
         # resume: prune completed partitions from the INPUT (scan-level skip)
         ana = analysis
@@ -1000,6 +1007,13 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
                 violations_error = f"{type(exc).__name__}: {head}"[:500]
                 logger.warning("violations write failed for check %r: %s", name, exc)
 
+        # JVM compile cost of this check: Janino class compiles and HotSpot
+        # JIT time over its fit and its calculate and writes (the fused pass
+        # is shared, so no check owns it)
+        codegen_compiles, jit_ms = (
+            f + b - a for f, a, b in zip(fit_compiles, compiles0, jvm_compile_counters(spark))
+        )
+
         # lineage rows for the partitions just completed — analysis period
         # only: reference rows (include_reference) share chunk keys with
         # analysis chunks under size/count chunkers, and a reference row in
@@ -1018,7 +1032,11 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
             F.col("chunk_key").alias("partition_id"),
             F.lit(epoch).cast("long").alias("checkpoint_epoch"),
             F.col("_n_metrics").cast("long").alias("rows_seen"),
-            F.create_map(F.lit("alerts"), F.col("_alerts").cast("double")).alias("metrics"),
+            F.create_map(
+                F.lit("alerts"), F.col("_alerts").cast("double"),
+                F.lit("codegen_compiles"), F.lit(float(codegen_compiles)),
+                F.lit("jit_ms"), F.lit(float(jit_ms)),
+            ).alias("metrics"),
             F.lit("complete").alias("status"),
         )
         write_results(lineage, lineage_path)
@@ -1043,6 +1061,8 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
             "fitted_from_store": from_store,
             "skipped_partitions": skipped,
             "secs": round(time.time() - t0, 2),
+            "codegen_compiles": codegen_compiles,
+            "jit_ms": jit_ms,
         }
         if violations_error is not None:
             report[name]["violations_error"] = violations_error

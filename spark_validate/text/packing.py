@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_validate.session import shuffle_partitions
+
 
 def _bucket_expr(id_col: str, n_buckets: int, salt: str) -> F.Column:
     """Uniform bucket in [0, n_buckets) — the sampling module's md5 recipe
@@ -157,10 +159,7 @@ def pack_sequences_greedy(
         out["pack_index"] = packs
         return out
 
-    try:  # AQE-managed clusters may set this to a non-numeric value ("auto")
-        n_shuf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_shuf = n_buckets
+    n_shuf = shuffle_partitions(df.sparkSession)
     packed = (
         base.repartition(min(n_buckets, n_shuf), "bucket")
         .groupBy("bucket")

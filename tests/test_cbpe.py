@@ -380,3 +380,185 @@ def test_row_sum_follows_numpy_order(spark, k):
     df = local_frame(spark, [tuple(map(float, r)) for r in mat], ", ".join(f"{c} double" for c in cols))
     got = np.array([r.s for r in df.select(row_sum([F.col(c) for c in cols]).alias("s")).collect()])
     np.testing.assert_array_equal(_bits(got), _bits(mat.sum(axis=1, keepdims=True)[:, 0]))
+
+
+# ---- fit exactness: the calibrator, the sampling-error components and the
+# thresholds equal numpy over the rows each one reads, on references with
+# NULL labels, NULL predictions and NULL scores
+
+NULL_REF, NULL_CHUNK = 4000, 500
+
+
+def _auroc_components(y, s):
+    """The AUROC sampling-error components, in numpy
+    (`sampling_error/binary_classification.py:36-75`)."""
+    if y.mean() > 0.5:
+        y, s = 1.0 - y, 1.0 - s
+    y = y[np.argsort(s, kind="stable")]
+    neg_below = np.concatenate(([0.0], np.cumsum(1.0 - y)[:-1]))
+    return float(np.std(neg_below[y == 1.0] / (1.0 - y).sum())), float(y.mean())
+
+
+def _holey_frame(spark, n, seed):
+    """(pandas, Spark) reference: miscalibrated scores (labels follow
+    score²), with about 5% NULL labels, NULL predictions and NULL scores,
+    placed independently."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(seed)
+    s = rng.uniform(0.01, 0.99, n)
+    pdf = pd.DataFrame(
+        {
+            "id": np.arange(n),
+            "y_true": (rng.uniform(0, 1, n) < s**2).astype(float),
+            "y_pred": (s > 0.5).astype(float),
+            "score": s,
+        }
+    )
+    masks = {c: rng.uniform(0, 1, n) < 0.05 for c in ("y_true", "y_pred", "score")}
+    sdf = spark.createDataFrame(pdf.assign(**{f"_null_{c}": m for c, m in masks.items()}))
+    sdf = sdf.select(
+        "id", *[F.when(~F.col(f"_null_{c}"), F.col(c)).alias(c) for c in masks]
+    )
+    for c, m in masks.items():
+        pdf.loc[m, c] = np.nan
+    return pdf, sdf
+
+
+@pytest.fixture(scope="module")
+def holey_reference(spark):
+    return _holey_frame(spark, NULL_REF, 44)
+
+
+def test_cbpe_binary_fit_equals_numpy_with_nulls(holey_reference):
+    pdf, sdf = holey_reference
+    est = CBPE(
+        metrics=("roc_auc", "accuracy", "f1"),
+        y_true="y_true",
+        y_pred="y_pred",
+        y_pred_proba="score",
+        chunker=SizeBasedChunker(chunk_size=NULL_CHUNK, order_by=["id"]),
+    ).fit(sdf)
+    state = est.get_state()
+
+    # calibrator: every row with a label and a score
+    cal_rows = pdf.dropna(subset=["y_true", "score"])
+    y, s = cal_rows["y_true"].to_numpy(), cal_rows["score"].to_numpy()
+    assert needs_calibration(y, s)
+    cal = IsotonicCalibrator().fit(s, y)
+    assert state["calibrator"] == cal.get_state()
+
+    # sampling errors: rows with a label and a prediction (and a score, for AUROC)
+    labelled = pdf.dropna(subset=["y_true", "y_pred"])
+    acc = float((labelled["y_true"] == labelled["y_pred"]).mean())
+    assert state["se"]["accuracy"]["std"] == np.sqrt(acc * (1 - acc))
+    assert state["se"]["precision"]["fraction"] == labelled["y_pred"].mean()
+    scored = labelled.dropna(subset=["score"])
+    std, frac = _auroc_components(scored["y_true"].to_numpy(), scored["score"].to_numpy())
+    assert state["se"]["roc_auc"] == {"std": std, "fraction": frac}
+
+    # thresholds: mean ± 3σ of the estimated reference-chunk values, clamped
+    # to [0, 1]; a chunk's rows need a score and a prediction
+    acc_c, f1_c = [], []
+    for k in range(NULL_REF // NULL_CHUNK):
+        c = pdf.iloc[k * NULL_CHUNK : (k + 1) * NULL_CHUNK].dropna(subset=["score", "y_pred"])
+        p = cal.calibrate(c["score"].to_numpy())
+        pos = c["y_pred"].to_numpy() == 1
+        tp, fp, fn, tn = p[pos].sum(), (1 - p[pos]).sum(), p[~pos].sum(), (1 - p[~pos]).sum()
+        acc_c.append((tp + tn) / (tp + fp + fn + tn))
+        f1_c.append(tp / (tp + 0.5 * (fp + fn)))
+    for metric, vals in (("accuracy", acc_c), ("f1", f1_c)):
+        m, sd = np.mean(vals), np.std(vals)
+        lo, up = state["thresholds"][metric]
+        assert lo == pytest.approx(max(m - 3 * sd, 0.0), rel=1e-12, abs=1e-12)
+        assert up == pytest.approx(min(m + 3 * sd, 1.0), rel=1e-12, abs=1e-12)
+
+
+def test_cbpe_multiclass_fit_equals_numpy_with_nulls(spark, mc_frame):
+    from pyspark.sql import functions as F
+
+    pdf, sdf = mc_frame
+    classes = ["a", "b", "c"]
+    pdf = pdf[pdf.is_ref].copy()
+    # NULL labels, predictions and one class's scores, each on its own id pattern
+    holes = {"y_true": (17, 3), "y_pred": (19, 5), "p_b": (23, 7)}
+    sdf = sdf.filter("is_ref").select(
+        "id",
+        *[F.when(F.col("id") % m != r, F.col(c)).alias(c) for c, (m, r) in holes.items()],
+        "p_a", "p_c",
+    )
+    for c, (m, r) in holes.items():
+        pdf[c] = pdf[c].where(pdf.id % m != r, None)
+    est = CBPE(
+        metrics=("roc_auc", "f1"),
+        y_pred_proba={c: f"p_{c}" for c in classes},
+        problem_type="multiclass_classification",
+        chunker=SizeBasedChunker(chunk_size=CHUNK, order_by=["id"]),
+    ).fit(sdf)
+    state = est.get_state()
+
+    cal_rows = pdf.dropna(subset=["y_true", "p_a", "p_b", "p_c"])
+    for c in classes:
+        y = (cal_rows["y_true"] == c).to_numpy(dtype=float)
+        p = cal_rows[f"p_{c}"].to_numpy(dtype=float)
+        want = IsotonicCalibrator().fit(p, y).get_state() if needs_calibration(y, p) else {"noop": True}
+        assert state["calibrators"][c] == want
+
+    labelled = pdf.dropna(subset=["y_true", "y_pred"])
+    n = len(labelled)
+    f1 = []
+    for c in classes:
+        t, p = labelled["y_true"] == c, labelled["y_pred"] == c
+        tp, rel = float((t & p).sum()), float((t & p).sum() + (~t & p).sum() + (t & ~p).sum())
+        f1.append([(tp / rel) * (1 - tp / rel), rel / n])
+    assert state["se"]["f1"] == {"mc": f1, "scale": 1.0}
+
+    # one-vs-rest AUROC reads the calibrator's rows: a prediction is not needed
+    comps = []
+    for c in classes:
+        y = (cal_rows["y_true"] == c).to_numpy(np.float64)
+        std, frac = _auroc_components(y, cal_rows[f"p_{c}"].to_numpy(np.float64))
+        comps.append([std**2, frac])
+    got = state["se"]["roc_auc"]
+    assert got["scale"] == 1.2
+    np.testing.assert_allclose(np.array(got["mc"]), np.array(comps), rtol=1e-12)
+
+
+def test_cbpe_fit_above_50k_rows_samples_the_rank_side(spark):
+    """Above MAX_RESAMPLE_SIZE labelled, scored rows the AUROC components
+    read a seeded 50k sample, collected on its own; the calibrator still
+    reads every row."""
+    from pyspark.sql import functions as F
+
+    from spark_validate.performance.calculator import PerformanceCalculator
+
+    n = 60_000
+    pdf, sdf = _holey_frame(spark, n, 45)
+    sdf = sdf.repartition(4, "id").sortWithinPartitions("id").cache()
+    est = CBPE(
+        metrics=("roc_auc",),
+        y_true="y_true",
+        y_pred="y_pred",
+        y_pred_proba="score",
+        chunker=SizeBasedChunker(chunk_size=10_000, order_by=["id"]),
+    ).fit(sdf)
+    state = est.get_state()
+
+    # the calibrator reads every row with a label and a score, in frame order
+    full = sdf.select("y_true", "score").dropna().toPandas()
+    y, s = full["y_true"].to_numpy(), full["score"].to_numpy()
+    assert state["calibrator"] == IsotonicCalibrator().fit(s, y).get_state()
+
+    # the AUROC side: the same seeded Bernoulli sample a standalone query draws
+    ranked = sdf.filter(F.col("y_true").isNotNull() & F.col("y_pred").isNotNull() & F.col("score").isNotNull())
+    n_rank = ranked.count()
+    assert n_rank > PerformanceCalculator.MAX_RESAMPLE_SIZE
+    sample = (
+        ranked.select(F.col("y_true").cast("double"), F.col("score").cast("double"))
+        .sample(fraction=PerformanceCalculator.MAX_RESAMPLE_SIZE / n_rank, seed=42)
+        .toPandas()
+    )
+    assert 0.9 * PerformanceCalculator.MAX_RESAMPLE_SIZE < len(sample) < n_rank
+    std, frac = _auroc_components(sample["y_true"].to_numpy(), sample["score"].to_numpy())
+    assert state["se"]["roc_auc"] == {"std": std, "fraction": frac}
+    sdf.unpersist()

@@ -148,6 +148,83 @@ def test_cbpe_multiclass_plan_runs_no_python(model_frame):
     _assert_no_python(est.estimate(model_frame.filter("NOT is_ref").drop("y_true_mc")))
 
 
+# ---- query budgets: each fit's SQL executions, pinned so a later change
+# cannot add passes over the reference silently
+
+
+def _sql_executions(spark) -> int:
+    """Id of the newest SQL execution in the status store, once the listener
+    bus has drained (every execution an action started is then recorded).
+    The id, unlike ``executionsCount()``, keeps counting after the store
+    starts evicting old executions (``spark.sql.ui.retainedExecutions``)
+    in a long test session."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    done = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return done.last().executionId() if done.nonEmpty() else -1
+
+
+def _fit_executions(spark, calc, reference) -> int:
+    before = _sql_executions(spark)
+    calc.fit(reference)
+    return _sql_executions(spark) - before
+
+
+@pytest.fixture(scope="module")
+def weekly_reference(model_frame):
+    """The reference rows with an hourly timestamp: weekly period chunks
+    assign without a query of their own."""
+    from pyspark.sql import functions as F
+
+    return model_frame.filter("is_ref").withColumn("ts", F.timestamp_seconds(F.col("id") * 3600))
+
+
+def _weekly():
+    from spark_validate.chunking import chunker_for
+
+    return chunker_for(chunk_period="W", timestamp_column="ts")
+
+
+def test_cbpe_binary_fit_query_budget(spark, weekly_reference):
+    """One aggregate (row count, sampling-error counts, AUROC sample size),
+    one collect shared by the calibrator and the AUROC components, one
+    threshold collect."""
+    from spark_validate.performance.cbpe import CBPE
+
+    est = CBPE(
+        metrics=("roc_auc", "accuracy"),
+        y_true="y_true",
+        y_pred="y_pred",
+        y_pred_proba="score",
+        chunker=_weekly(),
+    )
+    assert _fit_executions(spark, est, weekly_reference) == 3
+
+
+def test_cbpe_multiclass_fit_query_budget(spark, weekly_reference):
+    from spark_validate.performance.cbpe import CBPE
+
+    est = CBPE(
+        metrics=("roc_auc", "average_precision", "f1"),
+        y_true="y_true_mc",
+        y_pred="y_pred_mc",
+        y_pred_proba={c: f"p_{c}" for c in "abc"},
+        problem_type="multiclass_classification",
+        chunker=_weekly(),
+    )
+    assert _fit_executions(spark, est, weekly_reference) == 3
+
+
+def test_univariate_drift_fit_query_budget(spark, weekly_reference):
+    """Threshold pass over the reference chunks, moments, histogram."""
+    from spark_validate.drift.univariate import UnivariateDriftCalculator
+
+    calc = UnivariateDriftCalculator(
+        column_names=["x"], continuous_methods=["jensen_shannon"], chunker=_weekly()
+    )
+    assert _fit_executions(spark, calc, weekly_reference) == 3
+    calc.release_cache()
+
+
 def test_scan_pushdown_and_column_pruning(spark, entry_queries):
     """The chunked stats query must push its reference-period timestamp
     filter into the parquet scan and read only the referenced columns —

@@ -974,3 +974,18 @@ def test_include_reference_periods_and_lineage(spark, tmp_path):
     # the results sink did NOT leak extra completions or break the anti-join)
     report2 = run_suite(spark, cfg)
     assert all(r["skipped_partitions"] == 5 for r in report2.values())
+
+
+def test_report_and_lineage_carry_compile_cost(spark, workspace):
+    """Each check reports the Janino compiles and JIT milliseconds of its
+    fit and calculate, and its lineage rows carry the same numbers."""
+    cfg = _config(workspace)
+    cfg["checks"] = [cfg["checks"][0], cfg["checks"][-1]]  # column stats, drift
+    report = run_suite(spark, cfg)
+    lin = spark.read.parquet(str(workspace / "out" / "lineage")).toPandas()
+    for name, rep in report.items():
+        assert isinstance(rep["codegen_compiles"], int) and rep["codegen_compiles"] >= 0, name
+        assert isinstance(rep["jit_ms"], int) and rep["jit_ms"] >= 0, name
+        for metrics in lin[lin["check"] == name]["metrics"]:
+            m = dict(metrics)
+            assert m["codegen_compiles"] == rep["codegen_compiles"] and m["jit_ms"] == rep["jit_ms"], name
