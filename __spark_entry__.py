@@ -647,6 +647,7 @@ def q_robust_threshold_alerts(spark, sf_dir):
     from spark_validate.thresholds import (
         MedianAbsoluteDeviationThreshold,
         QuantileThreshold,
+        fit_thresholds,
     )
 
     ref, ana = _li_split(spark, sf_dir)
@@ -662,8 +663,8 @@ def q_robust_threshold_alerts(spark, sf_dir):
         )
 
     ref_avgs = chunk_avgs(ref)
-    mad_lo, mad_up = MedianAbsoluteDeviationThreshold().fit(ref_avgs)
-    q_lo, q_up = QuantileThreshold(q_lower=0.05, q_upper=0.95).fit(ref_avgs)
+    mad_lo, mad_up = fit_thresholds(ref_avgs, [], MedianAbsoluteDeviationThreshold())[()]
+    q_lo, q_up = fit_thresholds(ref_avgs, [], QuantileThreshold(q_lower=0.05, q_upper=0.95))[()]
     out = chunk_avgs(ana)
     rows = []
     for name, lo, up in (("mad", mad_lo, mad_up), ("quantile", q_lo, q_up)):

@@ -39,12 +39,7 @@ from spark_validate.chunking import CHUNK_INDEX, CHUNK_KEY, Chunker, DefaultChun
 from spark_validate.functions.local import local_frame
 from spark_validate.fused import calculate_alone
 from spark_validate.result import conform_result
-from spark_validate.thresholds import (
-    StandardDeviationThreshold,
-    alert_expr,
-    clamp_thresholds,
-    fit_thresholds_grouped,
-)
+from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds
 
 # metric → (value limits for threshold clamping, confidence-bound limits)
 _METRIC_LIMITS = {
@@ -231,16 +226,9 @@ class ColumnStatsCalculator:
             assigned = self.chunker.assign(reference)
         wide = chunk_aggregate(assigned, self.chunker, self._agg_exprs(dict(reference.dtypes)))
         ref_long = self._melt_wide(wide).persist()
-        thr = fit_thresholds_grouped(ref_long, ["column_name", "method"], self.threshold)
-        thr_rows = thr.collect()
-        thresholds = {}
-        for r in thr_rows:
-            lo, up = r["lower_threshold"], r["upper_threshold"]
-            limits = _METRIC_LIMITS.get(r["method"])
-            if limits:
-                lo = None if lo is None else max(lo, limits[0]) if limits[0] is not None else lo
-                up = None if up is None else (min(up, limits[1]) if limits[1] is not None else up)
-            thresholds[(r["column_name"], r["method"])] = (lo, up)
+        thresholds = fit_thresholds(
+            ref_long, ["column_name", "method"], self.threshold, limits=_METRIC_LIMITS
+        )
         self._fitted = {"thresholds": thresholds, "components": components}
         self._reference_result = self._finalize(ref_long, period="reference")
         ref_long.unpersist()
@@ -275,7 +263,7 @@ class ColumnStatsCalculator:
     def _finalize(self, long_df: DataFrame, period: str) -> DataFrame:
         if self._fitted is None:
             # during fit: thresholds not known yet for the reference result —
-            # they get attached after fit_thresholds_grouped (reference rows
+            # they get attached after fit_thresholds (reference rows
             # still receive thresholds in NannyML; we pass through here and
             # re-finalize below)
             thresholds = {}

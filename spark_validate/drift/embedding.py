@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from spark_validate.chunking import CHUNK_INDEX, CHUNK_KEY, ROW_INDEX, Chunker, DefaultChunker, chunk_aggregate
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
-from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds_grouped
+from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds
 
 SUPPORTED_METHODS = ("centroid_cosine", "mean_shift_linf", "norm_js")
 
@@ -243,11 +243,7 @@ class EmbeddingDriftCalculator:
         ]
         # thresholds from the reference's own per-chunk drift values
         ref_long = self._long_from_wide(wide_ref)
-        thr = fit_thresholds_grouped(ref_long, ["column_name", "method"], self.threshold)
-        self._fitted["thresholds"] = {
-            (r["column_name"], r["method"]): (r["lower_threshold"], r["upper_threshold"])
-            for r in thr.collect()
-        }
+        self._fitted["thresholds"] = fit_thresholds(ref_long, ["column_name", "method"], self.threshold)
         self._reference_result = self._finalize(ref_long, period="reference")
         wide_ref.unpersist()
         return self

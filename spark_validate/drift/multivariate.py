@@ -43,7 +43,7 @@ from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.session import shuffle_partitions
-from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold, alert_expr
+from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold, alert_expr, fit_thresholds
 
 _NUMERIC_TYPES = ("int", "bigint", "smallint", "tinyint", "float", "double", "decimal", "long")
 
@@ -147,18 +147,11 @@ class DataReconstructionDriftCalculator:
         with chunker_n_hint(self.chunker, n):
             ref_vals, headers = self._chunk_values(reference)
         ref_vals = ref_vals.persist()
-        trow = ref_vals.agg(F.avg("value").alias("m"), F.stddev_pop("value").alias("s")).first()
-        lo = up = None
-        thr = self.threshold
-        if isinstance(thr, StandardDeviationThreshold):
-            if trow["m"] is not None and trow["s"] is not None:
-                if thr.std_lower_multiplier is not None:
-                    lo = max(trow["m"] - thr.std_lower_multiplier * trow["s"], 0.0)
-                if thr.std_upper_multiplier is not None:
-                    up = trow["m"] + thr.std_upper_multiplier * trow["s"]
-        else:
-            lo, up = thr.lower, thr.upper
-        self._thr = (lo, up)
+        # fitted lower bounds clamp at 0 (errors are non-negative); an
+        # explicit ConstantThreshold keeps whatever the caller asked for
+        self._thr = fit_thresholds(
+            ref_vals, [], self.threshold, limits=(0.0, None), clamp_constant=False
+        )[()]
         self._reference_result = self._finalize(ref_vals, headers, "reference")
         ref_vals.unpersist()
         return self

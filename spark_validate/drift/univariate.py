@@ -64,7 +64,12 @@ from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.session import shuffle_partitions
-from spark_validate.thresholds import StandardDeviationThreshold, alert_expr
+from spark_validate.thresholds import (
+    ConstantThreshold,
+    StandardDeviationThreshold,
+    alert_expr,
+    fit_thresholds,
+)
 
 CONTINUOUS_METHODS = (
     "jensen_shannon", "kolmogorov_smirnov", "wasserstein", "hellinger",
@@ -327,36 +332,15 @@ class UnivariateDriftCalculator:
 
         with chunker_n_hint(self.chunker, getattr(self, "_ref_rows_total", None)):
             ref_result = self._calculate(reference, period="reference", with_thresholds=False)
-        vals = (
-            ref_result.groupBy("column_name", "method")
-            .agg(F.avg("value").alias("m"), F.stddev_pop("value").alias("s"))
-            .collect()
-        )
-        for r in vals:
-            method = r["method"]
-            if method == "chi2":
-                self._thresholds[(r["column_name"], method)] = (None, None)
-                continue
-            thr = (
-                self.threshold.get(method, self._default_threshold)
-                if isinstance(self.threshold, dict)
-                else self.threshold
+        # chi2 alerts on its p-value, so it gets no band
+        by_method = self.threshold if isinstance(self.threshold, dict) else {}
+        default = self._default_threshold if isinstance(self.threshold, dict) else self.threshold
+        self._thresholds.update(
+            fit_thresholds(
+                ref_result, ["column_name", "method"], {**by_method, "chi2": ConstantThreshold()},
+                limits=_LIMITS, default=default,
             )
-            lo_l, up_l = _LIMITS.get(method, (None, None))
-            lo = up = None
-            if isinstance(thr, StandardDeviationThreshold):
-                if r["m"] is not None and r["s"] is not None:
-                    if thr.std_lower_multiplier is not None:
-                        lo = r["m"] - thr.std_lower_multiplier * r["s"]
-                    if thr.std_upper_multiplier is not None:
-                        up = r["m"] + thr.std_upper_multiplier * r["s"]
-            else:  # ConstantThreshold
-                lo, up = thr.lower, thr.upper
-            if lo is not None and lo_l is not None:
-                lo = max(lo, lo_l)
-            if up is not None and up_l is not None:
-                up = min(up, up_l)
-            self._thresholds[(r["column_name"], method)] = (lo, up)
+        )
         self._reference_result = self._attach_thresholds(ref_result)
         return self
 

@@ -36,7 +36,7 @@ from spark_validate.calculators.base import assign_chunks, join_headers_long
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
-from spark_validate.thresholds import StandardDeviationThreshold, alert_expr
+from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds
 
 BINARY_METRICS = (
     "roc_auc",
@@ -947,19 +947,7 @@ class PerformanceCalculator:
         self._fitted = True
         ref_long, ref_headers = self._chunk_values(reference)
         ref_long = ref_long.persist()
-        # generic per-method fit: dispatches constant / stddev / MAD /
-        # quantile in one aggregate (an isinstance ladder assuming constant
-        # in the else-branch crashed on the robust threshold types)
-        from spark_validate.thresholds import fit_thresholds_grouped
-
-        for r in fit_thresholds_grouped(ref_long, ["method"], self.threshold).collect():
-            lo, up = r["lower_threshold"], r["upper_threshold"]
-            lo_l, up_l = _LIMITS.get(r["method"], (None, None))
-            if lo is not None and lo_l is not None:
-                lo = max(lo, lo_l)
-            if up is not None and up_l is not None:
-                up = min(up, up_l)
-            self._thresholds[r["method"]] = (lo, up)
+        self._thresholds.update(fit_thresholds(ref_long, ["method"], self.threshold, limits=_LIMITS))
         self._reference_result = self._finalize(ref_long, ref_headers, "reference")
         ref_long.unpersist()
         return self

@@ -33,7 +33,7 @@ from spark_validate.calculators.base import assign_chunks, join_headers_long
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
-from spark_validate.thresholds import StandardDeviationThreshold, alert_expr
+from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds
 
 try:  # the reference's model class, absent in this container
     import lightgbm  # noqa: F401
@@ -191,16 +191,11 @@ class DLE:
         self._fitted = True
         ref_long, ref_headers = self._chunk_values(reference)
         ref_long = ref_long.persist()
-        # generic per-method fit — see PerformanceCalculator._fit. FITTED
-        # lower bounds clamp at 0 (losses are non-negative); an explicit
-        # ConstantThreshold keeps whatever the caller asked for.
-        from spark_validate.thresholds import ConstantThreshold, fit_thresholds_grouped
-
-        for r in fit_thresholds_grouped(ref_long, ["method"], self.threshold).collect():
-            lo, up = r["lower_threshold"], r["upper_threshold"]
-            if lo is not None and not isinstance(self.threshold, ConstantThreshold):
-                lo = max(lo, 0.0)
-            self._thresholds[r["method"]] = (lo, up)
+        # FITTED lower bounds clamp at 0 (losses are non-negative); an
+        # explicit ConstantThreshold keeps whatever the caller asked for
+        self._thresholds.update(
+            fit_thresholds(ref_long, ["method"], self.threshold, limits=(0.0, None), clamp_constant=False)
+        )
         self._reference_result = self._finalize(ref_long, ref_headers, "reference")
         ref_long.unpersist()
         return self

@@ -55,7 +55,12 @@ from spark_validate.chunking import CHUNK_KEY, chunker_for
 from spark_validate.drift import UnivariateDriftCalculator
 from spark_validate.io import FittedStore, read_source, read_table, write_results
 from spark_validate.session import jvm_compile_counters, warn_small_codegen_cache
-from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold
+from spark_validate.thresholds import (
+    ConstantThreshold,
+    MedianAbsoluteDeviationThreshold,
+    QuantileThreshold,
+    StandardDeviationThreshold,
+)
 
 
 def build_chunker(cfg: dict):
@@ -71,28 +76,30 @@ def build_chunker(cfg: dict):
     )
 
 
+_THRESHOLD_TYPES = ("constant", "mad", "quantile", "standard_deviation")
+
+
 def _threshold(cfg: Optional[dict]):
     if not cfg:
         return None
-    if cfg.get("type") == "constant":
+    kind = cfg.get("type", "standard_deviation")
+    if kind == "constant":
         return ConstantThreshold(lower=cfg.get("lower"), upper=cfg.get("upper"))
-    if cfg.get("type") == "mad":
-        from spark_validate.thresholds import MedianAbsoluteDeviationThreshold
-
+    if kind == "mad":
         return MedianAbsoluteDeviationThreshold(
             mad_lower_multiplier=cfg.get("mad_lower_multiplier", 3.0),
             mad_upper_multiplier=cfg.get("mad_upper_multiplier", 3.0),
         )
-    if cfg.get("type") == "quantile":
-        from spark_validate.thresholds import QuantileThreshold
-
+    if kind == "quantile":
         return QuantileThreshold(
             q_lower=cfg.get("q_lower", 0.05), q_upper=cfg.get("q_upper", 0.95)
         )
-    return StandardDeviationThreshold(
-        std_lower_multiplier=cfg.get("std_lower_multiplier", 3.0),
-        std_upper_multiplier=cfg.get("std_upper_multiplier", 3.0),
-    )
+    if kind == "standard_deviation":
+        return StandardDeviationThreshold(
+            std_lower_multiplier=cfg.get("std_lower_multiplier", 3.0),
+            std_upper_multiplier=cfg.get("std_upper_multiplier", 3.0),
+        )
+    raise ValueError(f"unknown threshold type {kind!r}; valid types: {', '.join(_THRESHOLD_TYPES)}")
 
 
 def build_check(spark: SparkSession, cfg: dict, chunker):

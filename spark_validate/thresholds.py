@@ -1,21 +1,26 @@
 """Alert thresholds (reference `nannyml/thresholds.py:74-291`).
 
-A threshold turns a per-chunk metric series into (lower, upper) bounds:
+A threshold turns the reference period's per-chunk metric values into
+(lower, upper) alert bounds. Four types; ``None`` disables a side in each:
 
 * ``ConstantThreshold`` — fixed bounds (`thresholds.py:74-130`).
-* ``StandardDeviationThreshold`` — ``mean ± k·std_pop`` over the *reference
-  period per-chunk metric values* (`thresholds.py:133-189`; numpy ``nanstd``
-  is population std, ddof=0). This is a metric-of-metrics: in Spark it is a
-  second-level aggregate over the (tiny) per-chunk reference result table.
+* ``StandardDeviationThreshold`` — ``mean ± k·std_pop`` (`thresholds.py:133-189`;
+  numpy ``nanstd`` is population std, ddof=0).
+* ``MedianAbsoluteDeviationThreshold`` — ``median ± k·1.4826·MAD``.
+* ``QuantileThreshold`` — exact reference quantiles.
 
-Computed bounds are clamped to each metric's theoretical limits
-(`thresholds.py:226-291`), e.g. rates to [0, 1].
+:func:`fit_thresholds` is the one way a threshold is fitted and clamped: a
+metric-of-metrics, i.e. one grouped aggregate over the (tiny) per-chunk
+reference result table, collected once, with the bounds clamped on the driver
+to each metric's theoretical limits (`thresholds.py:226-291`), e.g. rates to
+[0, 1]. :func:`fit_thresholds_grouped` is its per-type aggregate.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional, Tuple
+from functools import reduce
+from typing import Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,9 +34,6 @@ class ConstantThreshold:
     def __post_init__(self):
         if self.lower is not None and self.upper is not None and self.lower >= self.upper:
             raise ValueError(f"lower ({self.lower}) must be < upper ({self.upper})")
-
-    def fit(self, values_df: DataFrame, value_col: str = "value") -> Tuple[Optional[float], Optional[float]]:
-        return (self.lower, self.upper)
 
 
 @dataclass(frozen=True)
@@ -47,17 +49,6 @@ class StandardDeviationThreshold:
     std_upper_multiplier: Optional[float] = 3.0
     offset_fn: str = "mean"  # only nanmean in the reference
 
-    def fit(self, values_df: DataFrame, value_col: str = "value") -> Tuple[Optional[float], Optional[float]]:
-        row = values_df.agg(
-            F.avg(value_col).alias("m"), F.stddev_pop(value_col).alias("s")
-        ).first()
-        m, s = row["m"], row["s"]
-        if m is None or s is None:
-            return (None, None)
-        lower = m - self.std_lower_multiplier * s if self.std_lower_multiplier is not None else None
-        upper = m + self.std_upper_multiplier * s if self.std_upper_multiplier is not None else None
-        return (lower, upper)
-
 
 @dataclass(frozen=True)
 class MedianAbsoluteDeviationThreshold:
@@ -72,27 +63,6 @@ class MedianAbsoluteDeviationThreshold:
 
     mad_lower_multiplier: Optional[float] = 3.0
     mad_upper_multiplier: Optional[float] = 3.0
-
-    def fit(self, values_df: DataFrame, value_col: str = "value") -> Tuple[Optional[float], Optional[float]]:
-        # Cast to double up front: a decimal-typed value column would hand
-        # back a Python Decimal whose repr ("Decimal('0.5')") cannot be
-        # re-interpolated into SQL; the deviation below also uses a column
-        # expression (F.lit) instead of string-formatting the median.
-        v = F.col(value_col).cast("double")
-        row = values_df.agg(F.percentile(v, F.lit(0.5)).alias("med")).first()
-        med = row["med"]
-        if med is None:
-            return (None, None)
-        mad_row = values_df.agg(
-            F.percentile(F.abs(v - F.lit(float(med))), F.lit(0.5)).alias("mad")
-        ).first()
-        mad = mad_row["mad"]
-        if mad is None:
-            return (None, None)
-        scale = 1.4826 * mad
-        lower = med - self.mad_lower_multiplier * scale if self.mad_lower_multiplier is not None else None
-        upper = med + self.mad_upper_multiplier * scale if self.mad_upper_multiplier is not None else None
-        return (lower, upper)
 
 
 @dataclass(frozen=True)
@@ -111,18 +81,6 @@ class QuantileThreshold:
             if q is not None and not 0.0 <= q <= 1.0:
                 raise ValueError(f"quantile must be in [0, 1], got {q}")
 
-    def fit(self, values_df: DataFrame, value_col: str = "value") -> Tuple[Optional[float], Optional[float]]:
-        v = F.col(value_col).cast("double")  # decimal-safe (see MAD fit)
-        aggs = []
-        if self.q_lower is not None:
-            aggs.append(F.percentile(v, F.lit(float(self.q_lower))).alias("lo"))
-        if self.q_upper is not None:
-            aggs.append(F.percentile(v, F.lit(float(self.q_upper))).alias("up"))
-        if not aggs:
-            return (None, None)
-        row = values_df.agg(*aggs).first().asDict()
-        return (row.get("lo"), row.get("up"))
-
 
 def fit_thresholds_grouped(
     values_df: DataFrame,
@@ -131,72 +89,122 @@ def fit_thresholds_grouped(
     value_col: str = "value",
 ) -> DataFrame:
     """Vectorized threshold fit: one (lower, upper) row per group in a single
-    aggregate over the per-chunk reference result table.
+    aggregate over the per-chunk reference result table (no group columns:
+    one global row).
 
     Avoids a driver loop per column×method — at wide schemas (hundreds of
-    monitored columns) the fit stays one Spark job.
+    monitored columns) the fit stays one Spark job. The percentile types cast
+    the value to double first: a decimal series would otherwise make the
+    median-centred deviation decimal arithmetic.
     """
+    grouped = values_df.groupBy(*group_cols)
     if isinstance(threshold, ConstantThreshold):
-        return values_df.groupBy(*group_cols).agg(
+        return grouped.agg(
             F.lit(threshold.lower).cast("double").alias("lower_threshold"),
             F.lit(threshold.upper).cast("double").alias("upper_threshold"),
         )
+    v = F.col(value_col).cast("double")
     if isinstance(threshold, StandardDeviationThreshold):
         lo_mult = threshold.std_lower_multiplier
         up_mult = threshold.std_upper_multiplier
-        agg = values_df.groupBy(*group_cols).agg(
-            F.avg(value_col).alias("_m"), F.stddev_pop(value_col).alias("_s")
-        )
+        agg = grouped.agg(F.avg(value_col).alias("_m"), F.stddev_pop(value_col).alias("_s"))
         lower = (F.col("_m") - F.lit(lo_mult) * F.col("_s")) if lo_mult is not None else F.lit(None)
         upper = (F.col("_m") + F.lit(up_mult) * F.col("_s")) if up_mult is not None else F.lit(None)
-        return agg.select(
-            *group_cols,
-            lower.cast("double").alias("lower_threshold"),
-            upper.cast("double").alias("upper_threshold"),
-        )
-    if isinstance(threshold, QuantileThreshold):
+    elif isinstance(threshold, QuantileThreshold):
         lo_q, up_q = threshold.q_lower, threshold.q_upper
-        agg = values_df.groupBy(*group_cols).agg(
-            (F.expr(f"percentile(`{value_col}`, {lo_q!r})") if lo_q is not None else F.lit(None)).alias("_lo"),
-            (F.expr(f"percentile(`{value_col}`, {up_q!r})") if up_q is not None else F.lit(None)).alias("_up"),
+        agg = grouped.agg(
+            (F.percentile(v, F.lit(float(lo_q))) if lo_q is not None else F.lit(None)).alias("_lo"),
+            (F.percentile(v, F.lit(float(up_q))) if up_q is not None else F.lit(None)).alias("_up"),
         )
-        return agg.select(
-            *group_cols,
-            F.col("_lo").cast("double").alias("lower_threshold"),
-            F.col("_up").cast("double").alias("upper_threshold"),
-        )
-    if isinstance(threshold, MedianAbsoluteDeviationThreshold):
-        med = values_df.groupBy(*group_cols).agg(
-            F.expr(f"percentile(`{value_col}`, 0.5)").alias("_med")
-        )
-        dev = values_df.join(med, group_cols).groupBy(*group_cols).agg(
-            F.expr(f"percentile(abs(`{value_col}` - _med), 0.5)").alias("_mad"),
+        lower, upper = F.col("_lo"), F.col("_up")
+    elif isinstance(threshold, MedianAbsoluteDeviationThreshold):
+        med = grouped.agg(F.percentile(v, F.lit(0.5)).alias("_med"))
+        with_med = values_df.join(med, list(group_cols)) if group_cols else values_df.crossJoin(med)
+        agg = with_med.groupBy(*group_cols).agg(
+            F.percentile(F.abs(v - F.col("_med")), F.lit(0.5)).alias("_mad"),
             F.first("_med").alias("_m"),
         )
         lo_mult, up_mult = threshold.mad_lower_multiplier, threshold.mad_upper_multiplier
         scale = F.lit(1.4826) * F.col("_mad")
         lower = (F.col("_m") - F.lit(lo_mult) * scale) if lo_mult is not None else F.lit(None)
         upper = (F.col("_m") + F.lit(up_mult) * scale) if up_mult is not None else F.lit(None)
-        return dev.select(
-            *group_cols,
-            lower.cast("double").alias("lower_threshold"),
-            upper.cast("double").alias("upper_threshold"),
-        )
-    raise TypeError(f"unknown threshold type {type(threshold)!r}")
+    else:
+        raise TypeError(f"unknown threshold type {type(threshold)!r}")
+    return agg.select(
+        *group_cols,
+        lower.cast("double").alias("lower_threshold"),
+        upper.cast("double").alias("upper_threshold"),
+    )
 
 
-def clamp_thresholds(
-    df: DataFrame,
-    lower_limit: Optional[float] = None,
-    upper_limit: Optional[float] = None,
-) -> DataFrame:
-    """Clamp fitted thresholds to metric limits (`nannyml/thresholds.py:226-291`)."""
-    lo, up = F.col("lower_threshold"), F.col("upper_threshold")
-    if lower_limit is not None:
-        lo = F.greatest(lo, F.lit(float(lower_limit)))
-    if upper_limit is not None:
-        up = F.least(up, F.lit(float(upper_limit)))
-    return df.withColumn("lower_threshold", lo).withColumn("upper_threshold", up)
+Bounds = Tuple[Optional[float], Optional[float]]
+
+
+def fit_thresholds(
+    values_df: DataFrame,
+    key_cols: Sequence[str],
+    threshold,
+    limits=(None, None),
+    clamp_constant: bool = True,
+    default=None,
+    value_col: str = "value",
+) -> Dict[object, Bounds]:
+    """Fit ``threshold`` on the reference period's per-chunk values
+    (``values_df``: ``key_cols`` + ``value_col``) and clamp the bounds to the
+    metric's limits. Returns ``{key: (lower, upper)}``, keyed by the key
+    column's value (one key column) or else by the tuple of key values.
+
+    ``threshold`` is one threshold for every key, or a ``{method: threshold}``
+    dict over the ``method`` key column with ``default`` for the methods it
+    does not name. Each distinct fitted threshold aggregates the rows of its
+    own methods, the default's aggregate takes every other row, and the
+    aggregates are unioned and collected in one SQL execution. A key under a
+    ``ConstantThreshold`` takes the constant's bounds; with no key columns a
+    constant needs no query at all.
+
+    ``limits`` is a ``(lower, upper)`` pair for every key or a ``{method:
+    (lower, upper)}`` dict (`nannyml/thresholds.py:226-291`). The lower bound
+    is clamped with ``max``, the upper with ``min``; a ``None`` bound or limit
+    is left alone, so a disabled side stays disabled.
+    ``clamp_constant=False`` keeps a ``ConstantThreshold``'s bounds as given.
+    """
+    if isinstance(threshold, dict):
+        by_method = threshold
+    else:
+        by_method, default = {}, threshold
+    fitted: Dict[object, list] = {}
+    for method, thr in by_method.items():
+        if thr != default and not isinstance(thr, ConstantThreshold):
+            fitted.setdefault(thr, []).append(method)
+    named = [m for methods in fitted.values() for m in methods]
+    branches = [
+        fit_thresholds_grouped(values_df.filter(F.col("method").isin(methods)), key_cols, thr, value_col)
+        for thr, methods in fitted.items()
+    ]
+    rest = values_df.filter(~F.col("method").isin(named)) if named else values_df
+    branches.append(fit_thresholds_grouped(rest, key_cols, default, value_col))
+
+    def clamp(method, lo, up) -> Bounds:
+        thr = by_method.get(method, default)
+        if isinstance(thr, ConstantThreshold):
+            lo, up = (None if b is None else float(b) for b in (thr.lower, thr.upper))
+            if not clamp_constant:
+                return lo, up
+        lo_l, up_l = limits.get(method, (None, None)) if isinstance(limits, dict) else limits
+        if lo is not None and lo_l is not None:
+            lo = max(lo, lo_l)
+        if up is not None and up_l is not None:
+            up = min(up, up_l)
+        return lo, up
+
+    if not key_cols and isinstance(default, ConstantThreshold):
+        return {(): clamp(None, None, None)}
+    out = {}
+    for r in reduce(DataFrame.unionByName, branches).collect():
+        key = tuple(r[c] for c in key_cols)
+        method = r["method"] if "method" in key_cols else None
+        out[key[0] if len(key) == 1 else key] = clamp(method, r["lower_threshold"], r["upper_threshold"])
+    return out
 
 
 def alert_expr(value_col: str = "value"):

@@ -14,8 +14,14 @@ import pytest
 
 from spark_validate.chunking import SizeBasedChunker
 from spark_validate.drift import UnivariateDriftCalculator
-from spark_validate.drift.univariate import doane_bin_count
+from spark_validate.drift.univariate import _LIMITS, doane_bin_count
 from spark_validate.functions.mathstats import chi2_sf, js_distance_from_probs
+from spark_validate.thresholds import (
+    ConstantThreshold,
+    MedianAbsoluteDeviationThreshold,
+    QuantileThreshold,
+    StandardDeviationThreshold,
+)
 
 N_REF, N_ANA, CHUNK = 5000, 3000, 1000
 
@@ -267,6 +273,82 @@ def test_custom_threshold_dict_per_method(spark, frame):
     # chi2 ignores custom thresholds: alert stays the p<0.05 rule
     chi2 = res[res.method == "chi2"]
     assert chi2["upper_threshold"].isna().all()
+
+
+def _np_band(vals, thr):
+    """numpy band over a per-chunk value series (np.quantile's default linear
+    interpolation is Spark's exact percentile)."""
+    v = np.asarray(vals, dtype=float)
+    if isinstance(thr, QuantileThreshold):
+        return np.quantile(v, thr.q_lower), np.quantile(v, thr.q_upper)
+    if isinstance(thr, MedianAbsoluteDeviationThreshold):
+        med = np.median(v)
+        scale = 1.4826 * np.median(np.abs(v - med))
+        return med - thr.mad_lower_multiplier * scale, med + thr.mad_upper_multiplier * scale
+    return None, v.mean() + thr.std_upper_multiplier * v.std()  # upper-only 3σ default
+
+
+def _clamped(lo, up, method):
+    lo_l, up_l = _LIMITS.get(method, (None, None))
+    return (
+        lo if lo is None or lo_l is None else max(lo, lo_l),
+        up if up is None or up_l is None else min(up, up_l),
+    )
+
+
+def _fit_banded(sdf, threshold):
+    """Fit on 10 reference chunks; return the calculator and its reference
+    per-chunk value series by (column, method)."""
+    calc = UnivariateDriftCalculator(
+        column_names=["x", "cat"],
+        continuous_methods=["jensen_shannon", "kolmogorov_smirnov", "hellinger"],
+        categorical_methods=["chi2", "jensen_shannon", "hellinger"],
+        chunker=SizeBasedChunker(chunk_size=CHUNK // 2, order_by=["id"]),
+        computation="estimated",
+        threshold=threshold,
+    ).fit(sdf.filter("is_ref"))
+    ref = calc.reference_result.toPandas()
+    calc.release_cache()
+    series = {
+        key: g.sort_values("chunk_index")["value"].to_numpy()
+        for key, g in ref.groupby(["column_name", "method"])
+    }
+    assert set(calc._thresholds) == set(series)
+    return calc, series
+
+
+@pytest.mark.parametrize(
+    "thr", [QuantileThreshold(), MedianAbsoluteDeviationThreshold()], ids=["quantile", "mad"]
+)
+def test_robust_thresholds_on_univariate_drift(spark, frame, thr):
+    """Quantile and MAD bands fit on the reference's per-chunk values and
+    clamp to each method's limits; chi2 keeps no band."""
+    sdf, _ = frame
+    calc, series = _fit_banded(sdf, thr)
+    for (col, method), vals in series.items():
+        got = calc._thresholds[(col, method)]
+        if method == "chi2":
+            assert got == (None, None)
+        else:
+            assert got == pytest.approx(_clamped(*_np_band(vals, thr), method), rel=1e-12)
+
+
+def test_mixed_threshold_dict_on_univariate_drift(spark, frame):
+    """A dict of mixed threshold types: each named method gets its own band,
+    the rest the upper-only 3σ default, chi2 none."""
+    sdf, _ = frame
+    thr = {"jensen_shannon": QuantileThreshold(), "hellinger": ConstantThreshold(upper=0.3)}
+    calc, series = _fit_banded(sdf, thr)
+    default = StandardDeviationThreshold(std_lower_multiplier=None)
+    for (col, method), vals in series.items():
+        got = calc._thresholds[(col, method)]
+        if method == "chi2":
+            assert got == (None, None)
+        elif method == "hellinger":
+            assert got == (None, 0.3)
+        else:
+            want = _clamped(*_np_band(vals, thr.get(method, default)), method)
+            assert got == pytest.approx(want, rel=1e-12)
 
 
 def test_tvd_continuous_and_categorical_vs_oracle(spark, frame):

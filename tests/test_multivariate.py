@@ -10,6 +10,7 @@ from spark_validate.drift.multivariate import (
     DomainClassifierCalculator,
     _logreg_cv_auc,
 )
+from spark_validate.thresholds import MedianAbsoluteDeviationThreshold, QuantileThreshold
 
 N_REF, N_ANA, CHUNK = 3000, 1500, 500
 
@@ -70,6 +71,26 @@ def test_reconstruction_state_roundtrip(spark, mv_frame):
     a = calc.calculate(sdf.filter("NOT is_ref")).orderBy("chunk_index").toPandas()
     b = calc2.calculate(sdf.filter("NOT is_ref")).orderBy("chunk_index").toPandas()
     np.testing.assert_allclose(a["value"], b["value"])
+
+
+@pytest.mark.parametrize(
+    "thr", [QuantileThreshold(), MedianAbsoluteDeviationThreshold()], ids=["quantile", "mad"]
+)
+def test_robust_thresholds_on_reconstruction_drift(spark, mv_frame, thr):
+    """Quantile and MAD bands fit on the reference's per-chunk errors; the
+    fitted lower bound clamps at 0 (errors are non-negative)."""
+    sdf, _ = mv_frame
+    calc = DataReconstructionDriftCalculator(
+        ["x1", "x2", "x3"], chunker=SizeBasedChunker(chunk_size=CHUNK // 2, order_by=["id"]), threshold=thr
+    ).fit(sdf.filter("is_ref"))
+    v = calc.reference_result.toPandas()["value"].to_numpy()
+    if isinstance(thr, QuantileThreshold):
+        lo, up = np.quantile(v, thr.q_lower), np.quantile(v, thr.q_upper)
+    else:
+        med = np.median(v)
+        scale = 1.4826 * np.median(np.abs(v - med))
+        lo, up = med - thr.mad_lower_multiplier * scale, med + thr.mad_upper_multiplier * scale
+    assert calc._thr == pytest.approx((max(lo, 0.0), up), rel=1e-12)
 
 
 def test_logreg_auc_separable():

@@ -225,6 +225,22 @@ def test_univariate_drift_fit_query_budget(spark, weekly_reference):
     calc.release_cache()
 
 
+def test_univariate_drift_mixed_threshold_fit_query_budget(spark, weekly_reference):
+    """A {method: threshold} dict of mixed types unions its grouped fits
+    into the one threshold collect."""
+    from spark_validate.drift.univariate import UnivariateDriftCalculator
+    from spark_validate.thresholds import MedianAbsoluteDeviationThreshold, QuantileThreshold
+
+    calc = UnivariateDriftCalculator(
+        column_names=["x"],
+        continuous_methods=["jensen_shannon", "hellinger"],
+        chunker=_weekly(),
+        threshold={"jensen_shannon": QuantileThreshold(), "hellinger": MedianAbsoluteDeviationThreshold()},
+    )
+    assert _fit_executions(spark, calc, weekly_reference) == 3
+    calc.release_cache()
+
+
 def test_scan_pushdown_and_column_pruning(spark, entry_queries):
     """The chunked stats query must push its reference-period timestamp
     filter into the parquet scan and read only the referenced columns —

@@ -618,6 +618,7 @@ def test_mad_and_quantile_thresholds(spark):
     from spark_validate.thresholds import (
         MedianAbsoluteDeviationThreshold,
         QuantileThreshold,
+        fit_thresholds,
         fit_thresholds_grouped,
     )
 
@@ -628,22 +629,22 @@ def test_mad_and_quantile_thresholds(spark):
         {"column_name": "c", "method": "avg", "value": vals}
     )
     df = spark.createDataFrame(pdf)
-    lo, up = MedianAbsoluteDeviationThreshold().fit(df)
+    lo, up = fit_thresholds(df, [], MedianAbsoluteDeviationThreshold())[()]
     med = np.median(vals)
     mad = np.median(np.abs(np.array(vals) - med))
     assert np.isclose(lo, med - 3 * 1.4826 * mad)
     assert np.isclose(up, med + 3 * 1.4826 * mad)
     assert up < 100  # the outlier did not drag the band
-    qlo, qup = QuantileThreshold(q_lower=0.0, q_upper=1.0).fit(df)
+    qlo, qup = fit_thresholds(df, [], QuantileThreshold(q_lower=0.0, q_upper=1.0))[()]
     assert qlo == 9.0 and qup == 1000.0
     # decimal-typed value column: the collected median is a Python Decimal
     # (repr "Decimal('10.0')") — fit must not string-format it into SQL
     from pyspark.sql import functions as F
 
     ddf = df.select("column_name", "method", F.col("value").cast("decimal(10,2)").alias("value"))
-    dlo, dup = MedianAbsoluteDeviationThreshold().fit(ddf)
+    dlo, dup = fit_thresholds(ddf, [], MedianAbsoluteDeviationThreshold())[()]
     assert np.isclose(dlo, lo) and np.isclose(dup, up)
-    dqlo, dqup = QuantileThreshold(q_lower=0.0, q_upper=1.0).fit(ddf)
+    dqlo, dqup = fit_thresholds(ddf, [], QuantileThreshold(q_lower=0.0, q_upper=1.0))[()]
     assert dqlo == 9.0 and dqup == 1000.0
     # grouped fit matches the scalar fit per series
     two = pd.concat(
@@ -712,6 +713,19 @@ def test_runner_threshold_config_mad_quantile(spark, tmp_path):
     report = run_suite(spark, cfg)
     (rep,) = report.values()
     assert rep["rows"] == 5 and rep["alerts"] == 0  # [min,max] band: self-clean
+
+
+def test_runner_threshold_config_rejects_unknown_type():
+    import pytest as _pytest
+
+    from spark_validate.runner import _threshold
+    from spark_validate.thresholds import StandardDeviationThreshold
+
+    with _pytest.raises(ValueError, match="quantil'.*constant, mad, quantile, standard_deviation"):
+        _threshold({"type": "quantil"})
+    # a missing type and the reference's spelling both mean the 3σ band
+    assert _threshold({"std_lower_multiplier": None}) == StandardDeviationThreshold(None, 3.0)
+    assert _threshold({"type": "standard_deviation"}) == StandardDeviationThreshold()
 
 
 def test_shape_stats_matches_numpy(spark):

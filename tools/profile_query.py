@@ -1,6 +1,6 @@
 """Job-level attribution for one or more declared queries (guide §1).
 
-Runs each named query like bench_extra (build + count) at INFO log level;
+Runs each named query (build the DataFrame, then count it) at INFO log level;
 DAGScheduler emits "Job N finished: ..., took X s" per action. Marker lines
 bracket each rep so the log can be windowed per query:
 
