@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_validate.chunking import CHUNK_INDEX, CHUNK_KEY, ROW_INDEX, Chunker, DefaultChunker, chunk_aggregate
+from spark_validate.drift.univariate import bin_terms, divergences, sum_bins
 from spark_validate.functions.local import local_frame
 from spark_validate.result import conform_result
 from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds
@@ -299,25 +300,13 @@ class EmbeddingDriftCalculator:
             pairs.append(("mean_shift_linf", val.cast("double")))
         if "norm_js" in self.methods:
             n = F.col("__nnorm").cast("double")
-            jp = None
-            jq = None
-            qsum = None
-            for k in range(self.n_bins):
-                p = st["norm_probs"][k]
-                q = F.col(f"__h{k}").cast("double") / n
-                qsum = q if qsum is None else qsum + q
-                if p > 0:
-                    tp = F.lit(p) * F.log2(F.lit(2.0 * p) / (F.lit(p) + q))
-                    jp = tp if jp is None else jp + tp
-                tq = F.when(q > 0, q * F.log2(F.lit(2.0) * q / (F.lit(p) + q))).otherwise(F.lit(0.0))
-                jq = tq if jq is None else jq + tq
-            leftover = F.greatest(F.lit(1.0) - qsum, F.lit(0.0))
-            js = F.sqrt(
-                F.greatest(
-                    F.lit(0.5) * (F.coalesce(jp, F.lit(0.0)) + jq) + F.lit(0.5) * leftover,
-                    F.lit(0.0),
-                )
+            qs = [F.col(f"__h{k}").cast("double") / n for k in range(self.n_bins)]
+            sums = sum_bins(
+                [bin_terms(p, q, None, ("jensen_shannon",)) for p, q in zip(st["norm_probs"], qs)]
             )
+            # norms outside the reference range are the leftover lump
+            leftover = F.lit(1.0) - sum(qs, F.lit(0.0))
+            js = divergences(("jensen_shannon",), sums, leftover, None)["jensen_shannon"]
             pairs.append(("norm_js", F.when(n > 0, js).cast("double")))
         return pairs
 

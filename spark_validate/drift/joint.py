@@ -26,11 +26,12 @@ constants. Because everything is aggregate expressions the check joins the
 fused shared-scan suite pass via ``fuse_contrib``.
 
 Methods:
-* ``jensen_shannon`` — base-2 JS distance (sqrt of the divergence), the
-  same convention as the univariate calculator
-  (`drift/univariate.py::_hist_distance_methods`); 0.1 default alert.
-* ``psi`` — eps-floored PSI, same convention as PhashHistogramDrift; 0.2
-  default alert (the classic rule).
+* ``jensen_shannon`` — base-2 JS distance (sqrt of the divergence); 0.1
+  default alert.
+* ``psi`` — eps-floored PSI; 0.2 default alert (the classic rule).
+
+Both come from the divergence kernel in `drift/univariate.py`
+(``bin_terms`` / ``divergences``), with no leftover lump.
 
 Grid sizing: the default 8×8 (100 cells with overflow) keeps the fitted
 state and the per-chunk aggregate row tiny; cells scale as the product, so
@@ -44,6 +45,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from spark_validate.drift.univariate import bin_terms, divergences, sum_bins
 
 
 class JointHistogramDrift:
@@ -150,33 +153,19 @@ class JointHistogramDrift:
         return exprs
 
     def _value_col(self, prefix: str) -> F.Column:
-        st = self._state
+        probs = self._state["probs"]
         n = F.col(f"{prefix}__n")
-        total = None
-        if self.method == "psi":
-            eps = self.eps
-            for k, (i, j) in enumerate(self._cells()):
-                q = F.col(f"{prefix}__c{i}_{j}") / F.greatest(n, F.lit(1))
-                pe = F.lit(max(float(st["probs"][k]), eps))
-                qe = F.greatest(q, F.lit(eps))
-                term = (qe - pe) * F.log(qe / pe)
-                total = term if total is None else total + term
-            value = total
-        else:
-            # base-2 JS distance, the univariate calculator's convention:
-            # p-terms with p == 0 fold away at plan build (p is a python
-            # constant); q-terms guard q > 0 so 0·log(0) never evaluates
-            for k, (i, j) in enumerate(self._cells()):
-                p = float(st["probs"][k])
-                q = F.col(f"{prefix}__c{i}_{j}") / F.greatest(n, F.lit(1))
-                qterm = F.when(
-                    q > 0, q * F.log2(F.lit(2.0) * q / (q + F.lit(p)))
-                ).otherwise(F.lit(0.0))
-                term = qterm
-                if p > 0:
-                    term = term + F.lit(p) * F.log2(F.lit(2.0 * p) / (F.lit(p) + q))
-                total = term if total is None else total + term
-            value = F.sqrt(F.greatest(F.lit(0.5) * total, F.lit(0.0)))
+        sums = sum_bins(
+            [
+                bin_terms(
+                    float(probs[k]), F.col(f"{prefix}__c{i}_{j}") / F.greatest(n, F.lit(1)),
+                    self.eps, (self.method,),
+                )
+                for k, (i, j) in enumerate(self._cells())
+            ]
+        )
+        # every complete row lands in a cell (overflow cells included): no lump
+        value = divergences((self.method,), sums, None, self.eps)[self.method]
         return F.when(n > 0, value).otherwise(F.lit(None)).cast("double")
 
     # ---- fit / calculate ----------------------------------------------------

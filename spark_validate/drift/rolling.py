@@ -26,8 +26,8 @@ window N to window N−1 needs cross-trigger state that belongs to the
 batch path over the compacted table (or a foreachBatch), not a watermark
 aggregate.
 
-JS convention matches the univariate calculator: base-2, sqrt of the
-divergence. The first chunk has no predecessor → NULL value, never an
+JS is the divergence kernel's (`drift/univariate.py::bin_terms` /
+``divergences``): base-2, sqrt of the divergence. The first chunk has no predecessor → NULL value, never an
 alert (`thresholds.alert_expr` NULL semantics).
 """
 
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_validate.chunking import CHUNK_INDEX, CHUNK_KEY
+from spark_validate.drift.univariate import bin_terms, divergences, sum_bins
 
 
 class RollingDriftCalculator:
@@ -147,19 +148,13 @@ class RollingDriftCalculator:
         out = wide.withColumn("__prev_n", prev_n)
         for s in suffixes:
             out = out.withColumn(f"__prev_{s}", F.lag(f"{prefix}__{s}").over(w))
-        total = None
+        terms = []
         for s in suffixes:
             q = F.col(f"{prefix}__{s}") / F.greatest(cur_n, F.lit(1))
             p = F.col(f"__prev_{s}") / F.greatest(F.col("__prev_n"), F.lit(1))
-            qterm = F.when(q > 0, q * F.log2(F.lit(2.0) * q / (q + p))).otherwise(
-                F.lit(0.0)
-            )
-            pterm = F.when(p > 0, p * F.log2(F.lit(2.0) * p / (p + q))).otherwise(
-                F.lit(0.0)
-            )
-            term = qterm + pterm
-            total = term if total is None else total + term
-        value = F.sqrt(F.greatest(F.lit(0.5) * total, F.lit(0.0)))
+            terms.append(bin_terms(p, q, None, ("jensen_shannon",)))
+        # the grid covers every non-null value (overflow cells / other-lump)
+        value = divergences(("jensen_shannon",), sum_bins(terms), None, None)["jensen_shannon"]
         ok = (cur_n > 0) & F.col("__prev_n").isNotNull() & (F.col("__prev_n") > 0)
         return out.withColumn(
             "value", F.when(ok, value).otherwise(F.lit(None)).cast("double")

@@ -27,7 +27,8 @@ Method semantics matched:
   small data via ``computation='exact'``.
 * ``chi2`` — contingency of reference counts vs chunk counts over the
   category union; alert on ``p < 0.05`` (`methods.py:449-538`); p-value via
-  our regularized-incomplete-gamma survival function.
+  the regularized upper incomplete gamma of commons-math3, called through
+  ``reflect`` (``chi2_p_value``).
 * ``l_infinity`` — max |p_ref − p_chunk| over the category union
   (`methods.py:541-585`).
 * ``wasserstein`` — binned CDF-difference integral + out-of-range ECDF
@@ -42,6 +43,12 @@ Method semantics matched:
   JS/Hellinger/TVD, the unseen-mass lump scores q_l·ln(q_l/ε). NOT in the
   reference — Evidently-parity method for directional drift attribution.
 
+JS, Hellinger, PSI, TVD and KL are written once, in the divergence kernel
+below (``bin_terms`` → per-bin summands, ``divergences`` → method values,
+leftover lump included). This calculator, the streaming compilation
+(`streaming/drift.py`) and the joint, rolling, embedding-norm and pHash
+histogram checks all build their values from it.
+
 Thresholds: per reference semantics, each method is re-computed on every
 reference chunk and thresholds are mean ± 3σ of those values, upper-only by
 default (`nannyml/drift/univariate/calculator.py:48-55`,
@@ -55,7 +62,6 @@ from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -115,6 +121,117 @@ def bucket_expr(col: F.Column, lo: float, hi: float, n: int) -> F.Column:
         .otherwise(F.least(F.floor(scaled), F.lit(n - 1)))
         .cast("int")
     )
+
+
+# -- divergence kernel ----------------------------------------------------------
+#
+# JS, Hellinger, TVD, KL and PSI between a reference histogram p and an
+# analysis histogram q, written once for every histogram drift check. A site
+# supplies its own q (and its own empty-chunk guard and melt) and sums the
+# per-bin terms its own way: long-form sites (one row per bin) with F.sum,
+# wide-form sites (one count column per bin) with ``sum_bins``.
+
+DIVERGENCE_METHODS = ("jensen_shannon", "hellinger", "psi", "tvd", "kl")
+# the continuous ones that share the Doane bins (psi has its own bin count)
+DOANE_METHODS = ("jensen_shannon", "hellinger", "tvd", "kl")
+
+_BIN_TERMS = {  # method → the per-bin summands it reads
+    "jensen_shannon": ("js_p", "js_q"),
+    "hellinger": ("hel_sq",),
+    "psi": ("psi",),
+    "tvd": ("tvd_abs",),
+    "kl": ("kl",),
+}
+
+
+def bin_terms(p, q: Column, eps: Optional[float], methods=DIVERGENCE_METHODS) -> Dict[str, Optional[Column]]:
+    """Per-bin summands of ``methods``: the two halves of the base-2 JS
+    divergence, (√p − √q)², |p − q|, and the ε-clipped KL q′·ln(q′/p′) and
+    PSI (q′ − p′)·ln(q′/p′). ``q`` is a Column; ``p`` is a Column or a
+    fitted Python float. A float ``p == 0`` yields ``js_p`` None, so an empty
+    reference bin adds no expression to the plan; a Column ``p`` guards
+    ``p > 0`` per row instead. ``eps`` is the PSI/KL floor."""
+    const = not isinstance(p, Column)
+    pl = F.lit(float(p)) if const else p
+    wanted = {t for m in methods for t in _BIN_TERMS[m]}
+    terms: Dict[str, Optional[Column]] = {}
+    if "js_p" in wanted:
+        js_p = pl * F.log2(F.lit(2.0) * pl / (pl + q))
+        if not const:
+            terms["js_p"] = F.when(p > 0, js_p).otherwise(F.lit(0.0))
+        else:
+            terms["js_p"] = js_p if p > 0 else None
+        terms["js_q"] = F.when(q > 0, q * F.log2(F.lit(2.0) * q / (pl + q))).otherwise(F.lit(0.0))
+    if "hel_sq" in wanted:
+        terms["hel_sq"] = F.pow(F.sqrt(pl) - F.sqrt(q), 2)
+    if "tvd_abs" in wanted:
+        terms["tvd_abs"] = F.abs(pl - q)
+    if wanted & {"psi", "kl"}:
+        pc, qc = F.greatest(pl, F.lit(eps)), F.greatest(q, F.lit(eps))
+        if "kl" in wanted:
+            terms["kl"] = qc * F.log(qc / pc)
+        if "psi" in wanted:
+            terms["psi"] = (qc - pc) * F.log(qc / pc)
+    return terms
+
+
+def sum_bins(per_bin: Sequence[Dict[str, Optional[Column]]]) -> Dict[str, Column]:
+    """Bin-ordered sum of ``bin_terms`` for wide-form sites; None terms are
+    skipped."""
+    sums: Dict[str, Column] = {}
+    for terms in per_bin:
+        for key, t in terms.items():
+            if t is not None:
+                sums[key] = sums[key] + t if key in sums else t
+    return sums
+
+
+def divergences(methods, sums: Dict[str, Column], leftover: Optional[Column], eps: Optional[float]) -> Dict[str, Column]:
+    """method → value Column from the summed ``bin_terms``, in
+    ``DIVERGENCE_METHODS`` order. A summand no bin contributed (no bins, or
+    a constant p == 0 in every bin) is the empty sum 0.0. ``leftover`` is
+    the analysis mass outside the reference bins or categories (clamped at
+    0 against float residue), scored as one more bin with p = 0: its JS term
+    q·log2(2q/q), its Hellinger term (√0 − √q)² and its TVD term |0 − q| are
+    q itself, and KL and PSI score it against p′ = ε. Sites without a lump
+    pass None."""
+    lump = None if leftover is None else F.greatest(leftover, F.lit(0.0))
+
+    def total(key: str) -> Column:
+        return sums.get(key, F.lit(0.0))
+
+    out: Dict[str, Column] = {}
+    for m in DIVERGENCE_METHODS:
+        if m not in methods:
+            continue
+        if m == "jensen_shannon":
+            div = F.lit(0.5) * (total("js_p") + total("js_q"))
+            if lump is not None:
+                div = div + F.lit(0.5) * lump
+            out[m] = F.sqrt(F.greatest(div, F.lit(0.0)))
+        elif m == "hellinger":
+            hel = total("hel_sq") if lump is None else total("hel_sq") + lump
+            out[m] = F.sqrt(hel / F.lit(2.0))
+        elif m == "tvd":
+            tvd = total("tvd_abs") if lump is None else total("tvd_abs") + lump
+            out[m] = F.lit(0.5) * tvd
+        else:
+            out[m] = total(m) if lump is None else total(m) + bin_terms(0.0, lump, eps, (m,))[m]
+    return out
+
+
+def chi2_p_value(stat: Column, dof: Column) -> Column:
+    """Chi-squared survival function P(X > stat) = Q(dof/2, stat/2), the
+    regularized upper incomplete gamma of the commons-math3 jar Spark ships,
+    called through ``reflect`` (no Python worker); NaN where the statistic
+    is NULL or dof < 1. ``functions.mathstats.chi2_sf`` is its reference."""
+    q = F.reflect(
+        F.lit("org.apache.commons.math3.special.Gamma"),
+        F.lit("regularizedGammaQ"),
+        dof.cast("double") / F.lit(2.0),
+        stat.cast("double") / F.lit(2.0),
+    ).cast("double")
+    return F.when(stat.isNotNull() & (dof >= 1), q).otherwise(F.lit(float("nan")))
 
 
 def categorical_counts(df: DataFrame, cols, dtypes, chunked: bool = False) -> DataFrame:
@@ -295,7 +412,7 @@ class UnivariateDriftCalculator:
 
     def _cont_specs_needed(self) -> List[str]:
         specs = []
-        if {"jensen_shannon", "hellinger", "tvd", "kl"} & set(self.continuous_methods):
+        if set(DOANE_METHODS) & set(self.continuous_methods):
             specs.append("doane")
         if {"kolmogorov_smirnov", "wasserstein", "cramer_von_mises"} & set(self.continuous_methods):
             specs.append("ecdf")
@@ -502,7 +619,7 @@ class UnivariateDriftCalculator:
         # ONE exploded count shuffle feeds every continuous method; persisted
         # via the managed registry (see release_cache).
         hist_all = self._persist(self._continuous_histogram(assigned, self._cont_cols, dtypes, chunked=True))
-        doane_methods = methods & {"jensen_shannon", "hellinger", "tvd", "kl"}
+        doane_methods = methods & set(DOANE_METHODS)
         ecdf_methods = methods & {"kolmogorov_smirnov", "wasserstein", "cramer_von_mises"}
         exact_cols = [c for c in self._cont_cols if c in self._exact_ref] if ecdf_methods else []
         binned_cols = [c for c in self._cont_cols if c not in self._exact_ref]
@@ -555,13 +672,12 @@ class UnivariateDriftCalculator:
         the substrate three times per calculate and again per fit-threshold
         pass (measured: 22 aggregation pipelines for 13 series).
 
-        Method formulas (identical to the per-family implementations they
-        replace; the DuckDB oracles mirror them term-for-term):
+        Method formulas (the DuckDB oracles mirror them term-for-term):
 
         * JS/Hellinger/TVD/KL over Doane-bin dense histograms with the
           leftover-mass bin for chunk mass outside reference bins
-          (`methods.py:299-305`); KL scores the lump as an extra bin with
-          p = ε, q = leftover.
+          (`methods.py:299-305`), and PSI over its own bins: the divergence
+          kernel (``bin_terms`` summed per group, then ``divergences``).
         * KS (`methods.py:426-446`): D = max|ref_cdf − (below + cumsum q)|.
         * CvM: binned distance ω² = ∫ (F_ref − F_chunk)² dH with
           H = (F_ref + F_chunk)/2 over the reference bin partition; per ref
@@ -573,8 +689,6 @@ class UnivariateDriftCalculator:
           cumsum q)|·width plus distributed out-of-range correction terms
           (`_wasserstein_corrections`); amount_smaller = (n_below + 1)/n when
           n_below > 0 (the +1 is the appended ref_min sentinel).
-        * PSI: Σ (q′−p′)·ln(q′/p′) over ε-clipped probabilities, leftover
-          lump as an extra bin vs p = ε.
         """
         spark = assigned.sparkSession
         hist = hist_all.filter(F.col("spec").isin(fam_specs))
@@ -633,29 +747,11 @@ class UnivariateDriftCalculator:
             dense = dense.withColumn("_cum_q", F.sum("q").over(w))
         p, q = F.col("p"), F.col("q")
         aggs: List[Column] = []
-        if doane_methods or want_psi:
-            # numeric note: leftover can be -1e-16 from fp summation; clamped
-            # at use sites below
-            aggs.append((F.lit(1.0) - F.sum("q")).alias("leftover"))
-        if doane_methods:
-            eps = F.lit(self.psi_eps)
-            pc, qc = F.greatest(p, eps), F.greatest(q, eps)
-            aggs += [
-                # JS divergence terms over ref bins (base-2 logs)
-                F.sum(
-                    F.when(p > 0, p * F.log2(F.lit(2.0) * p / (p + q))).otherwise(F.lit(0.0))
-                ).alias("_js_p"),
-                F.sum(
-                    F.when(q > 0, q * F.log2(F.lit(2.0) * q / (p + q))).otherwise(F.lit(0.0))
-                ).alias("_js_q"),
-                F.sum(F.pow(F.sqrt(p) - F.sqrt(q), 2)).alias("_hel_sq"),
-                F.sum(F.abs(p - q)).alias("_tvd_abs"),
-                F.sum(qc * F.log(qc / pc)).alias("_kl_bins"),
-            ]
-        if want_psi:
-            eps = F.lit(self.psi_eps)
-            pc, qc = F.greatest(p, eps), F.greatest(q, eps)
-            aggs.append(F.sum((qc - pc) * F.log(qc / pc)).alias("_psi_bins"))
+        div_methods = doane_methods | ({"psi"} if want_psi else set())
+        if div_methods:
+            terms = bin_terms(p, q, self.psi_eps, div_methods)
+            aggs.append(F.sum(q).alias("_q"))
+            aggs += [F.sum(t).alias(f"_{k}") for k, t in terms.items()]
         if have_ecdf:
             below = F.col("n_below") / F.col("n_nonnull")
             ks_cdf = below + F.col("_cum_q")
@@ -686,31 +782,13 @@ class UnivariateDriftCalculator:
             grp = grp.join(corr, [CHUNK_KEY, "column_name"], "left")
         # spec-conditioned melt: each per-spec aggregate row emits only its
         # own family's (method, value) structs
-        leftover = F.greatest(F.col("leftover"), F.lit(0.0))
         fam_pairs: Dict[str, List[Tuple[str, Column]]] = {}
+        if div_methods:
+            # chunk mass outside the reference bins is the leftover lump
+            sums = {k: F.col(f"_{k}") for k in terms}
+            leftover = F.lit(1.0) - F.col("_q")
         if doane_methods:
-            pairs: List[Tuple[str, Column]] = []
-            if "jensen_shannon" in doane_methods:
-                js = F.sqrt(
-                    F.greatest(
-                        F.lit(0.5) * (F.col("_js_p") + F.col("_js_q")) + F.lit(0.5) * leftover,
-                        F.lit(0.0),
-                    )
-                )
-                pairs.append(("jensen_shannon", js))
-            if "hellinger" in doane_methods:
-                pairs.append(("hellinger", F.sqrt((F.col("_hel_sq") + leftover) / F.lit(2.0))))
-            if "tvd" in doane_methods:
-                # chunk mass outside the reference bins appears once as the
-                # leftover lump — exact, because each outside bin has p = 0,
-                # so Σ|0 − q_i| == Σq_i == leftover
-                pairs.append(("tvd", F.lit(0.5) * (F.col("_tvd_abs") + leftover)))
-            if "kl" in doane_methods:
-                eps_f = self.psi_eps
-                q_l = F.greatest(leftover, F.lit(eps_f))
-                extra = F.when(leftover > 0, q_l * F.log(q_l / F.lit(eps_f))).otherwise(F.lit(0.0))
-                pairs.append(("kl", F.col("_kl_bins") + extra))
-            fam_pairs["doane"] = pairs
+            fam_pairs["doane"] = list(divergences(doane_methods, sums, leftover, self.psi_eps).items())
         if have_ecdf:
             pairs = []
             if want_ks:
@@ -736,12 +814,7 @@ class UnivariateDriftCalculator:
                 )
             fam_pairs["ecdf"] = pairs
         if want_psi:
-            eps_f = self.psi_eps
-            q_l = F.greatest(leftover, F.lit(eps_f))
-            extra = F.when(leftover > 0, (q_l - F.lit(eps_f)) * F.log(q_l / F.lit(eps_f))).otherwise(
-                F.lit(0.0)
-            )
-            fam_pairs["psi"] = [("psi", F.col("_psi_bins") + extra)]
+            fam_pairs["psi"] = list(divergences({"psi"}, sums, leftover, self.psi_eps).items())
         arr = None
         for spec, pairs in fam_pairs.items():
             kvs = F.array(
@@ -863,7 +936,7 @@ class UnivariateDriftCalculator:
         """Exact two-sample statistics for small-reference columns
         (`methods.py:444-446, 694-696`): raw chunk values vs the broadcast raw
         reference column, evaluated per chunk in one Arrow pass per column."""
-        import pandas as pd  # noqa: F811
+        import pandas as pd
 
         from spark_validate.functions.mathstats import (
             cvm_dist_2samp,
@@ -948,7 +1021,7 @@ class UnivariateDriftCalculator:
         )
         out: List[DataFrame] = []
         methods = set(self.categorical_methods)
-        hist_methods = {"jensen_shannon", "hellinger", "psi", "tvd", "kl"} & methods
+        hist_methods = set(DIVERGENCE_METHODS) & methods
         if hist_methods or "l_infinity" in methods:
             out.append(
                 self._cat_hist_methods(
@@ -962,10 +1035,11 @@ class UnivariateDriftCalculator:
     def _cat_hist_methods(
         self, dense_ref: DataFrame, chunk_only: DataFrame, methods, with_linf: bool
     ) -> DataFrame:
-        """JS/Hellinger/PSI on reference-category probabilities with a leftover
-        bin for unseen categories (`methods.py:346-364, 795-814`), plus
-        l_infinity = max|p − q| over the category UNION (`methods.py:541-585`)
-        — one aggregation, methods melted out (see ``_melt_methods``).
+        """The divergence kernel's methods on reference-category probabilities
+        with a leftover bin for unseen categories (`methods.py:346-364,
+        795-814`), plus l_infinity = max|p − q| over the category UNION
+        (`methods.py:541-585`) — one aggregation, methods melted out (see
+        ``_melt_methods``).
 
         When l_infinity is requested the aggregate runs over the union of
         reference categories and chunk-only categories; the hist-method sums
@@ -991,52 +1065,22 @@ class UnivariateDriftCalculator:
             guarded = term if not with_linf else F.when(ref_row, term).otherwise(F.lit(0.0))
             return F.sum(guarded).alias(alias)
 
-        eps = F.lit(self.psi_eps)
-        pc, qc = F.greatest(p, eps), F.greatest(q, eps)
-        aggs = [
-            ref_sum(q, "_q_ref"),
-            ref_sum(F.when(p > 0, p * F.log2(F.lit(2.0) * p / (p + q))).otherwise(F.lit(0.0)), "_js_p"),
-            ref_sum(F.when(q > 0, q * F.log2(F.lit(2.0) * q / (p + q))).otherwise(F.lit(0.0)), "_js_q"),
-            ref_sum(F.pow(F.sqrt(p) - F.sqrt(q), 2), "_hel_sq"),
-            ref_sum(F.abs(p - q), "_tvd_abs"),
-            ref_sum((qc - pc) * F.log(qc / pc), "_psi_bins"),
-            ref_sum(qc * F.log(qc / pc), "_kl_bins"),
-        ]
+        div_methods = set(DIVERGENCE_METHODS) & set(methods)
+        terms = bin_terms(p, q, self.psi_eps, div_methods)
+        aggs = [ref_sum(q, "_q")] + [ref_sum(t, f"_{k}") for k, t in terms.items()]
         if with_linf:
             aggs.append(F.max(F.abs(p - q)).alias("_linf"))
         grp = base.groupBy(CHUNK_KEY, "column_name").agg(*aggs)
-        grp = grp.withColumn("leftover", F.lit(1.0) - F.col("_q_ref"))
-        leftover = F.greatest(F.col("leftover"), F.lit(0.0))
-        pairs: List[Tuple[str, Column]] = []
-        if "jensen_shannon" in methods:
-            js = F.sqrt(
-                F.greatest(F.lit(0.5) * (F.col("_js_p") + F.col("_js_q")) + F.lit(0.5) * leftover, F.lit(0.0))
-            )
-            pairs.append(("jensen_shannon", js))
-        if "hellinger" in methods:
-            pairs.append(("hellinger", F.sqrt((F.col("_hel_sq") + leftover) / F.lit(2.0))))
-        if "psi" in methods:
-            eps_f = self.psi_eps
-            q_l = F.greatest(leftover, F.lit(eps_f))
-            extra = F.when(leftover > 0, (q_l - F.lit(eps_f)) * F.log(q_l / F.lit(eps_f))).otherwise(F.lit(0.0))
-            pairs.append(("psi", F.col("_psi_bins") + extra))
-        if "tvd" in methods:
-            # unseen-category lump is exact (p = 0 per unseen cat, so the
-            # per-category |p − q| sum equals the single leftover term)
-            pairs.append(("tvd", F.lit(0.5) * (F.col("_tvd_abs") + leftover)))
-        if "kl" in methods:
-            eps_f = self.psi_eps
-            q_l = F.greatest(leftover, F.lit(eps_f))
-            extra = F.when(leftover > 0, q_l * F.log(q_l / F.lit(eps_f))).otherwise(F.lit(0.0))
-            pairs.append(("kl", F.col("_kl_bins") + extra))
+        # the unseen-category mass is the leftover lump
+        sums = {k: F.col(f"_{k}") for k in terms}
+        pairs = list(divergences(div_methods, sums, F.lit(1.0) - F.col("_q"), self.psi_eps).items())
         if with_linf:
             pairs.append(("l_infinity", F.col("_linf")))
         return self._melt_methods(grp, pairs)
 
     def _chi2(self, dense_ref: DataFrame, chunk_only: DataFrame) -> DataFrame:
         """Pearson chi-squared of the 2×k (reference vs chunk) contingency
-        table, closed-form in SQL; p-value via an Arrow-batched UDF over the
-        tiny per-chunk stat table (`methods.py:530-538`)."""
+        table, closed-form in SQL, and its p-value (`methods.py:530-538`)."""
         union = dense_ref.select(CHUNK_KEY, "column_name", "ref_cnt", "obs_cnt").unionByName(
             chunk_only.select(CHUNK_KEY, "column_name", "ref_cnt", "obs_cnt")
         )
@@ -1061,23 +1105,12 @@ class UnivariateDriftCalculator:
         stat = j.groupBy(CHUNK_KEY, "column_name").agg(
             F.sum(cell).alias("value"), F.max("k").alias("k")
         )
-
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("double")
-        def _sf(stat_s: pd.Series, dof_s: pd.Series) -> pd.Series:
-            from spark_validate.functions.mathstats import chi2_sf
-
-            return pd.Series(
-                [chi2_sf(s, d) if pd.notna(s) and d >= 1 else float("nan") for s, d in zip(stat_s, dof_s)]
-            )
-
         return stat.select(
             CHUNK_KEY,
             "column_name",
             F.lit("chi2").alias("method"),
             F.col("value").cast("double").alias("value"),
-            _sf(F.col("value"), (F.col("k") - 1).cast("double")).alias("p_value"),
+            chi2_p_value(F.col("value"), F.col("k") - 1).alias("p_value"),
         )
 
     @property

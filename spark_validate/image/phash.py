@@ -370,8 +370,8 @@ class PhashHistogramDrift:
     counts — pure codegen aggregate, map-side combinable, no joins beyond
     the standard ≤#chunks header attach every check shares — and
     PSI is a single projection over the fitted probability constants:
-    Σ_b (q'−p')·ln(q'/p') with both sides floored at ``eps`` (same
-    convention as UnivariateDriftCalculator._psi_from_dense). Because the
+    Σ_b (q'−p')·ln(q'/p') with both sides floored at ``eps`` (the
+    divergence kernel, `drift/univariate.py::bin_terms`). Because the
     whole thing is aggregate expressions it joins the fused shared-scan
     suite pass via ``fuse_contrib``.
 
@@ -420,16 +420,17 @@ class PhashHistogramDrift:
         return exprs
 
     def _psi_col(self, prefix: str) -> F.Column:
-        st = self._state
-        eps = self.eps
+        from spark_validate.drift.univariate import bin_terms, divergences, sum_bins
+
         n = F.col(f"{prefix}__n")
-        total = None
-        for i, p in enumerate(st["probs"]):
-            q = F.col(f"{prefix}__b{i}") / F.greatest(n, F.lit(1))
-            pe = F.lit(max(float(p), eps))
-            qe = F.greatest(q, F.lit(eps))
-            term = (qe - pe) * F.log(qe / pe)
-            total = term if total is None else total + term
+        sums = sum_bins(
+            [
+                bin_terms(float(p), F.col(f"{prefix}__b{i}") / F.greatest(n, F.lit(1)), self.eps, ("psi",))
+                for i, p in enumerate(self._state["probs"])
+            ]
+        )
+        # the overflow buckets hold all out-of-range mass: no leftover lump
+        total = divergences(("psi",), sums, None, self.eps)["psi"]
         # empty chunk (no non-null hashes) has no histogram: NULL, not 0 drift
         return F.when(n > 0, total).otherwise(F.lit(None)).cast("double")
 

@@ -6,10 +6,13 @@ Streaming query: a tumbling event-time window is exactly a period chunk, so
 per-window JS / Hellinger / PSI / TVD / KL stream out of ONE windowed aggregation —
 per-reference-bin conditional count columns (the fitted bin edges, category
 sets, reference probabilities and mean±kσ thresholds are all broadcast-able
-constants baked into the plan) followed by a pure projection that applies the
-SAME formulas as the batch path (leftover-mass bin included). Values are
-bit-identical to ``calc.calculate`` with a matching period chunker — see
-``test_streaming_drift_matches_batch``.
+constants baked into the plan) followed by a pure projection through the
+batch path's divergence kernel (`drift/univariate.py::bin_terms` /
+``divergences``, leftover-mass bin included). Values agree with
+``calc.calculate`` under a matching period chunker up to floating-point
+summation order — the batch path sums bins as rows of a grouped aggregate,
+this one as count columns in bin order — which the tests pin at rtol 1e-12
+(``test_streaming_drift_matches_batch``).
 
 Scope: js / hellinger / psi / tvd / kl (continuous and categorical). KS and Wasserstein
 need cumulative-ECDF machinery across buckets (windowed sort), and
@@ -19,14 +22,10 @@ run them on the completed window's data via foreachBatch if needed.
 
 from __future__ import annotations
 
-import math
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_STREAMABLE = ("jensen_shannon", "hellinger", "psi", "tvd", "kl")
-
 
 def _melt(agg: DataFrame, specs: List[tuple]) -> DataFrame:
     pairs = [
@@ -54,56 +53,6 @@ def _melt(agg: DataFrame, specs: List[tuple]) -> DataFrame:
     return out.withColumn("alert", F.coalesce(alert, F.lit(False)))
 
 
-def _hist_method_exprs(n_col, cnt_cols, probs, methods, psi_eps):
-    """(method → value expr) from per-bin count columns + constant ref probs,
-    replicating the batch formulas (leftover bin, base-2 JS, eps-clamped PSI)."""
-    qs = [c / n_col for c in cnt_cols]
-    leftover = F.greatest(F.lit(1.0) - sum(qs, F.lit(0.0)), F.lit(0.0))
-    out = {}
-    if "tvd" in methods:
-        out["tvd"] = F.lit(0.5) * (
-            sum((F.abs(F.lit(float(p)) - q) for p, q in zip(probs, qs)), F.lit(0.0))
-            + leftover
-        )
-    if "jensen_shannon" in methods or "hellinger" in methods:
-        js_terms = []
-        hel_terms = []
-        for p, q in zip(probs, qs):
-            pl = F.lit(float(p))
-            if p > 0:
-                js_terms.append(pl * F.log2(F.lit(2.0) * pl / (pl + q)))
-            js_terms.append(F.when(q > 0, q * F.log2(F.lit(2.0) * q / (pl + q))).otherwise(F.lit(0.0)))
-            hel_terms.append(F.pow(F.lit(math.sqrt(p)) - F.sqrt(q), 2))
-        js_sum = sum(js_terms, F.lit(0.0))
-        if "jensen_shannon" in methods:
-            out["jensen_shannon"] = F.sqrt(
-                F.greatest(F.lit(0.5) * js_sum + F.lit(0.5) * leftover, F.lit(0.0))
-            )
-        if "hellinger" in methods:
-            out["hellinger"] = F.sqrt((sum(hel_terms, F.lit(0.0)) + leftover) / F.lit(2.0))
-    if "psi" in methods:
-        eps = F.lit(psi_eps)
-        terms = []
-        for p, q in zip(probs, qs):
-            pc = F.lit(float(max(p, psi_eps)))
-            qc = F.greatest(q, eps)
-            terms.append((qc - pc) * F.log(qc / pc))
-        q_l = F.greatest(leftover, eps)
-        extra = F.when(leftover > 0, (q_l - eps) * F.log(q_l / eps)).otherwise(F.lit(0.0))
-        out["psi"] = sum(terms, F.lit(0.0)) + extra
-    if "kl" in methods:
-        eps = F.lit(psi_eps)
-        terms = []
-        for p, q in zip(probs, qs):
-            pc = F.lit(float(max(p, psi_eps)))
-            qc = F.greatest(q, eps)
-            terms.append(qc * F.log(qc / pc))
-        q_l = F.greatest(leftover, eps)
-        extra = F.when(leftover > 0, q_l * F.log(q_l / eps)).otherwise(F.lit(0.0))
-        out["kl"] = sum(terms, F.lit(0.0)) + extra
-    return out
-
-
 def streaming_univariate_drift(
     stream: DataFrame,
     calc,
@@ -115,15 +64,22 @@ def streaming_univariate_drift(
     drift query. Returns the long-form per-window result stream
     (window_start/end, column_name, method, value, thresholds, alert).
     """
-    from spark_validate.drift.univariate import bucket_expr
+    from spark_validate.drift.univariate import (
+        DIVERGENCE_METHODS,
+        DOANE_METHODS,
+        bin_terms,
+        bucket_expr,
+        divergences,
+        sum_bins,
+    )
 
     if not calc._fitted:
         raise RuntimeError("fit the calculator on the reference period first")
-    cont_methods = [m for m in calc.continuous_methods if m in _STREAMABLE]
-    cat_methods = [m for m in calc.categorical_methods if m in _STREAMABLE]
+    cont_methods = [m for m in calc.continuous_methods if m in DIVERGENCE_METHODS]
+    cat_methods = [m for m in calc.categorical_methods if m in DIVERGENCE_METHODS]
     if not (calc._cont_cols and cont_methods) and not (calc._cat_cols and cat_methods):
         raise ValueError(
-            f"no streamable methods on the fitted calculator; streaming supports {_STREAMABLE} "
+            f"no streamable methods on the fitted calculator; streaming supports {DIVERGENCE_METHODS} "
             "(KS/Wasserstein/l_infinity/chi2 are batch-side — run them via foreachBatch)"
         )
     src = stream
@@ -143,7 +99,7 @@ def streaming_univariate_drift(
     for c in calc._cont_cols:
         st = calc._cont_state[c]
         needed = set()
-        if {"jensen_shannon", "hellinger", "tvd", "kl"} & set(cont_methods):
+        if set(DOANE_METHODS) & set(cont_methods):
             needed.add("doane")
         if "psi" in cont_methods:
             needed.add("psi")
@@ -157,7 +113,7 @@ def streaming_univariate_drift(
                     F.sum(F.when(v.isNotNull() & (b == i), 1).otherwise(0)).alias(f"{c}__{spec}__{i}")
                 )
             methods = (
-                [m for m in cont_methods if m in ("jensen_shannon", "hellinger", "tvd", "kl")]
+                [m for m in cont_methods if m in DOANE_METHODS]
                 if spec == "doane"
                 else ["psi"]
             )
@@ -177,8 +133,10 @@ def streaming_univariate_drift(
     for c, spec, n, probs, methods in plan:
         n_col = F.col(f"{c}__n")
         prefix = f"{c}__cat__" if spec == "cat" else f"{c}__{spec}__"
-        cnt_cols = [F.col(f"{prefix}{i}") for i in range(n)]
-        exprs = _hist_method_exprs(n_col, cnt_cols, probs, set(methods), calc.psi_eps)
+        qs = [F.col(f"{prefix}{i}") / n_col for i in range(n)]
+        sums = sum_bins([bin_terms(p, q, calc.psi_eps, methods) for p, q in zip(probs, qs)])
+        # window mass outside the reference bins / categories is the lump
+        exprs = divergences(methods, sums, F.lit(1.0) - sum(qs, F.lit(0.0)), calc.psi_eps)
         for method, value in exprs.items():
             lo, up = calc._thresholds.get((c, method), (None, None))
             # an all-null window (n = 0) must yield NULL, not a fabricated

@@ -604,3 +604,29 @@ def test_kl_streams_identically(spark, frame, tmp_path):
         joined = pd.concat([bs.rename("b"), ss.rename("s")], axis=1).dropna()
         assert len(joined) >= 3
         np.testing.assert_allclose(joined["b"], joined["s"], rtol=1e-12)
+
+
+def test_chi2_p_value_matches_chi2_sf(spark):
+    """The native chi2 p-value (commons-math3 regularizedGammaQ through
+    ``reflect``) agrees with ``mathstats.chi2_sf`` to 1e-12 relative, and
+    stays NaN where the statistic is NULL or the table has one category."""
+    from pyspark.sql import functions as F
+
+    from spark_validate.drift.univariate import chi2_p_value
+    from spark_validate.functions.local import local_frame
+
+    grid = [
+        (float(s), d)
+        for s in (0.0, 0.3, 1.0, 3.841458820694124, 12.5, 60.0, 250.0, 900.0)
+        for d in (1, 2, 3, 7, 30, 120, 600)
+    ]
+    rows = grid + [(None, 3), (5.0, 0)]
+    got = (
+        local_frame(spark, rows, "stat double, dof long")
+        .select("stat", "dof", chi2_p_value(F.col("stat"), F.col("dof")).alias("p"))
+        .collect()
+    )
+    by = {(r["stat"], r["dof"]): r["p"] for r in got}
+    for s, d in grid:
+        assert by[(s, d)] == pytest.approx(chi2_sf(s, d), rel=1e-12, abs=0.0), (s, d)
+    assert math.isnan(by[(None, 3)]) and math.isnan(by[(5.0, 0)])

@@ -90,9 +90,7 @@ def test_univariate_drift_plans_run_no_python(model_frame):
     calc = UnivariateDriftCalculator(
         column_names=["x", "cat"],
         continuous_methods=["jensen_shannon"],
-        # chi2 is left out: its p-value is a pandas UDF (the chi-squared
-        # survival function), Python that does the analytic work
-        categorical_methods=["jensen_shannon", "hellinger"],
+        categorical_methods=["jensen_shannon", "hellinger", "chi2"],
         chunker=SizeBasedChunker(chunk_size=1000, order_by=["id"]),
     ).fit(model_frame.filter("is_ref"))
     res = calc.calculate(model_frame.filter("NOT is_ref"))
@@ -222,6 +220,28 @@ def test_univariate_drift_fit_query_budget(spark, weekly_reference):
         column_names=["x"], continuous_methods=["jensen_shannon"], chunker=_weekly()
     )
     assert _fit_executions(spark, calc, weekly_reference) == 3
+    calc.release_cache()
+
+
+@pytest.mark.parametrize("extra", ["psi", "kolmogorov_smirnov"])
+def test_univariate_drift_multi_method_fit_query_budget(spark, weekly_reference, extra):
+    """Four executions when psi or KS is fitted next to JS and Hellinger:
+    the three of the JS-only fit plus one.
+
+    * psi: the threshold pass reads the cached chunk histogram for two bin
+      specs (doane and psi), so ``_calc_continuous`` materializes it with an
+      eager ``count()`` first.
+    * kolmogorov_smirnov: under the default ``computation='auto'`` a
+      reference below 10k rows takes the exact path, which collects the raw
+      reference column (``toPandas``)."""
+    from spark_validate.drift.univariate import UnivariateDriftCalculator
+
+    calc = UnivariateDriftCalculator(
+        column_names=["x"],
+        continuous_methods=("jensen_shannon", "hellinger", extra),
+        chunker=_weekly(),
+    )
+    assert _fit_executions(spark, calc, weekly_reference) == 4
     calc.release_cache()
 
 

@@ -204,8 +204,9 @@ def test_streaming_image_payload_checks_foreachbatch(spark, tmp_path):
 
 def test_streaming_drift_matches_batch(spark, tmp_path):
     """A fitted UnivariateDriftCalculator compiled to a streaming query must
-    produce per-window JS/Hellinger/PSI EQUAL to the batch path with the
-    matching period chunker (a tumbling window IS a period chunk)."""
+    produce per-window JS/Hellinger/PSI/TVD/KL equal to the batch path
+    (rtol 1e-12: the two sum bins in different orders) with the matching
+    period chunker (a tumbling window IS a period chunk)."""
     from spark_validate.chunking import PeriodBasedChunker
     from spark_validate.drift import UnivariateDriftCalculator
     from spark_validate.streaming import streaming_univariate_drift
@@ -227,8 +228,8 @@ def test_streaming_drift_matches_batch(spark, tmp_path):
     ana = pdf.iloc[n // 3 :]
     calc = UnivariateDriftCalculator(
         column_names=["x", "fmt"],
-        continuous_methods=["jensen_shannon", "hellinger", "psi"],
-        categorical_methods=["jensen_shannon", "psi"],
+        continuous_methods=["jensen_shannon", "hellinger", "psi", "tvd", "kl"],
+        categorical_methods=["jensen_shannon", "psi", "tvd", "kl"],
         chunker=PeriodBasedChunker(offset="H", timestamp_column="ts"),
     ).fit(spark.createDataFrame(ref))
 
