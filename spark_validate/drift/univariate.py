@@ -1081,9 +1081,8 @@ class UnivariateDriftCalculator:
     def _chi2(self, dense_ref: DataFrame, chunk_only: DataFrame) -> DataFrame:
         """Pearson chi-squared of the 2×k (reference vs chunk) contingency
         table, closed-form in SQL, and its p-value (`methods.py:530-538`)."""
-        union = dense_ref.select(CHUNK_KEY, "column_name", "ref_cnt", "obs_cnt").unionByName(
-            chunk_only.select(CHUNK_KEY, "column_name", "ref_cnt", "obs_cnt")
-        )
+        cols = [CHUNK_KEY, "column_name", "value", "ref_cnt", "obs_cnt"]
+        union = dense_ref.select(*cols).unionByName(chunk_only.select(*cols))
         union = union.filter((F.col("ref_cnt") + F.col("obs_cnt")) > 0)
         tot = union.groupBy(CHUNK_KEY, "column_name").agg(
             F.sum("ref_cnt").alias("R"),
@@ -1102,9 +1101,14 @@ class UnivariateDriftCalculator:
         yates_o = F.greatest(F.abs(F.col("obs_cnt") - eo) - F.lit(0.5), F.lit(0.0))
         yates = F.pow(yates_r, 2) / er + F.pow(yates_o, 2) / eo
         cell = F.when(F.col("k") == 2, yates).otherwise(plain)
+        # the cells are added in category order, not in the order the
+        # shuffle delivers them, so the statistic is the same bits under any
+        # partitioning; a chunk holds at most max_categories + its unseen
+        # categories
         stat = j.groupBy(CHUNK_KEY, "column_name").agg(
-            F.sum(cell).alias("value"), F.max("k").alias("k")
-        )
+            F.array_sort(F.collect_list(F.struct(F.col("value"), cell.alias("c")))).alias("_cells"),
+            F.max("k").alias("k"),
+        ).withColumn("value", F.aggregate("_cells", F.lit(0.0), lambda acc, x: acc + x["c"]))
         return stat.select(
             CHUNK_KEY,
             "column_name",

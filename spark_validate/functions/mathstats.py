@@ -72,7 +72,11 @@ def l_infinity_from_probs(p, q) -> float:
 
 def psi_from_probs(p, q, eps: float = 1e-4) -> float:
     """Population Stability Index Σ (q−p)·ln(q/p), probabilities clipped to
-    ``eps`` to keep empty bins finite (standard industry smoothing)."""
+    ``eps`` to keep empty bins finite (standard industry smoothing), then
+    renormalized to sum 1. The engine's PSI (``drift/univariate.py::
+    bin_terms``) clips without renormalizing, so the two agree only on
+    histograms without an empty bin; on one with an empty bin they differ
+    by O(eps)."""
     p = np.clip(np.asarray(p, dtype=np.float64), eps, None)
     q = np.clip(np.asarray(q, dtype=np.float64), eps, None)
     p = p / p.sum()

@@ -2,7 +2,12 @@
 `nannyml/performance_calculation/**`).
 
 Every label-based metric is a closed-form expression over per-chunk confusion
-counts / error sums → ONE ``groupBy(chunk)`` pass computes all of them.
+counts / error sums → ONE ``groupBy(chunk)`` pass computes all of them. The
+confusion metrics are CBPE's expected-confusion formulas (``cbpe.py``) with
+the label as the positive probability: ``p = 1[y_true = 1]`` (binary) or
+``p_c = 1[y_true = c]`` (multiclass) turns every expected mass into an
+integer count, so ``binary_confusion``, ``ovr_confusion``/``macro_values``,
+``cm_cell_values`` and ``finalize`` below serve both estimators.
 Rank-based metrics (ROC-AUC, average precision) use per-chunk window ranks —
 the Mann-Whitney formulation for AUC, threshold-grouped cumulative precision
 for AP — still fully distributed, no Python in the path.
@@ -29,7 +34,7 @@ from typing import Dict, Optional, Sequence, Tuple
 
 import numpy as np
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_validate.calculators.base import assign_chunks, join_headers_long
@@ -117,6 +122,318 @@ def _clamped_bounds():
     return lo, up
 
 
+def se_expr(se: Dict[str, dict]) -> Column:
+    """Per-row sampling error from the fitted components ``se`` (metric →
+    component dict, as ``PerformanceCalculator._se_from_row`` builds them)
+    and the row's ``n_chunk``."""
+    # n = 0 (a fully-unlabeled chunk — the delayed-labels case) must
+    # yield NULL sampling error, not an ANSI division crash in std/√n;
+    # NULLing n short-circuits every branch below to NULL
+    n = F.when(F.col("n_chunk") > 0, F.col("n_chunk").cast("double"))
+    m = F.col("method")
+    expr = F.lit(None).cast("double")
+    for metric, comp in se.items():
+        if "mc_ap_c" in comp:
+            # multiclass AP (mse.py:460-487): SE = sqrt(mean_c(var_c·s_c)/n)
+            c_ = comp["mc_ap_c"]
+            if c_ is not None and c_ == c_:
+                e = F.sqrt(F.lit(float(c_)) / n)
+                expr = F.when(m == metric, e).otherwise(expr)
+            continue
+        if "mc" in comp:
+            # macro OvR combine (mse.py:21-24; auroc applies ×1.2 :93-96)
+            parts = [
+                F.lit(float(var)) / (n * F.lit(float(frac)))
+                for var, frac in comp["mc"]
+                if var == var and frac == frac and frac > 0
+            ]
+            if not parts:
+                continue
+            e = F.lit(float(comp.get("scale", 1.0))) * F.sqrt(sum(parts[1:], parts[0])) / F.lit(
+                float(len(comp["mc"]))
+            )
+            expr = F.when(m == metric, e).otherwise(expr)
+            continue
+        std = comp.get("std")
+        if std is None or std != std:
+            continue
+        if "sample_size" in comp:  # bootstrap-extrapolated (AP, bse :131-149)
+            s = comp["sample_size"]
+            if s:
+                e = F.lit(float(std)) * F.sqrt(F.lit(float(s)) / n)
+                expr = F.when(m == metric, e).otherwise(expr)
+            continue
+        if "bv_norm" in comp:  # business value (bse :845-867)
+            e = F.lit(float(std)) * F.sqrt(n) if comp["bv_norm"] is None else F.lit(float(std)) / F.sqrt(n)
+            expr = F.when(m == metric, e).otherwise(expr)
+            continue
+        if "cm_norm" in comp:  # confusion-matrix cells (bse :459-801)
+            norm = comp["cm_norm"]
+            frac = comp.get("fraction")
+            if norm is None:
+                e = F.lit(float(std)) * F.sqrt(n)
+            elif norm == "all":
+                e = F.lit(float(std)) / F.sqrt(n)
+            else:
+                if frac is None or frac != frac or frac <= 0:
+                    continue
+                e = F.lit(float(std)) / F.sqrt(n * F.lit(float(frac)))
+            expr = F.when(m == metric, e).otherwise(expr)
+            continue
+        if metric in ("accuracy", "mae", "mape", "mse", "msle"):
+            e = F.lit(float(std)) / F.sqrt(n)
+        elif metric in ("precision", "recall", "specificity", "f1", "roc_auc"):
+            frac = comp.get("fraction")
+            if frac is None or frac != frac or frac <= 0:
+                continue
+            e = F.lit(float(std)) / F.sqrt(n * F.lit(float(frac)))
+        elif metric in ("rmse", "rmsle"):
+            mean = comp.get("mean")
+            if not mean:
+                continue
+            e = F.sqrt(F.lit(float(std)) ** 2 / (4 * n * F.lit(float(mean))))
+        else:
+            continue
+        expr = F.when(m == metric, e).otherwise(expr)
+    return expr
+
+
+def finalize(
+    long_df: DataFrame, headers, period: str, thresholds: Dict[str, tuple], se: Dict[str, dict],
+    cm_normalized: bool, column_name: str,
+) -> DataFrame:
+    """The result frame from (chunk, n_chunk, method, value) rows: threshold
+    join, sampling error, clamped confidence bounds, alert, column_name and
+    the chunk headers."""
+    thr = _thr_frame(long_df.sparkSession, thresholds, cm_normalized=cm_normalized)
+    lcb, ucb = _clamped_bounds()
+    out = (
+        long_df.join(F.broadcast(thr), "method", "left")
+        .withColumn("sampling_error", se_expr(se))
+        .withColumn("lower_confidence_boundary", lcb)
+        .withColumn("upper_confidence_boundary", ucb)
+        .withColumn("alert", alert_expr())
+        .withColumn("column_name", F.lit(column_name))
+        .drop("n_chunk", "_lim_lo", "_lim_up")
+    )
+    return conform_result(join_headers_long(out, headers, period))
+
+
+def _melt(df: DataFrame, values: Dict[str, Column]) -> DataFrame:
+    """(chunk, n_chunk, method, value) rows, one per named value Column."""
+    pairs = [F.struct(F.lit(m).alias("method"), v.cast("double").alias("value")) for m, v in values.items()]
+    return df.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*pairs)).alias("kv")).select(
+        CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
+    )
+
+
+def _union(parts: Sequence[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def binary_confusion(assigned: DataFrame, p: Column, pred: Column, ok: Column, calc) -> Tuple[DataFrame, list]:
+    """Binary confusion metrics from the expected confusion mass
+    (confidence_based/metrics.py:762-787): a row adds ``p`` to the positive
+    and ``1 − p`` to the negative cell of its predicted column. CBPE passes
+    its calibrated score; realized performance passes the label indicator
+    (NULL for a label outside {0, 1}, which fills no cell). ``n_chunk``
+    counts the ``ok`` rows. ``calc`` supplies ``metrics``,
+    ``business_value_matrix``, ``normalize_business_value`` and
+    ``normalize_confusion_matrix``.
+
+    Returns the (chunk, n_chunk) frame and the melted metric frames."""
+    metrics = set(calc.metrics)
+    asked = [m for m in ("accuracy", "precision", "recall", "specificity", "f1", "business_value") if m in metrics]
+    with_cm = "confusion_matrix" in metrics
+    aggs = [F.count(F.when(ok, 1)).alias("n_chunk")]
+    if asked or with_cm:
+        for name, on_pred, mass in (("tp", 1, p), ("fp", 1, 1 - p), ("fn", 0, p), ("tn", 0, 1 - p)):
+            aggs.append(F.sum(F.when(p.isNotNull() & (pred == on_pred), mass).otherwise(F.lit(0.0))).alias(name))
+    counts = assigned.groupBy(CHUNK_KEY).agg(*aggs)
+    tp, fp, fn, tn = F.col("tp"), F.col("fp"), F.col("fn"), F.col("tn")
+    # _safe_div throughout: a chunk with no predicted positive (or no labeled
+    # row) yields NULL, not an ANSI DIVIDE_BY_ZERO
+    exprs = {
+        "accuracy": _safe_div(tp + tn, tp + fp + fn + tn),
+        "precision": _safe_div(tp, tp + fp),
+        "recall": _safe_div(tp, tp + fn),
+        "specificity": _safe_div(tn, tn + fp),
+        # TP / (TP + ½(FP + FN)); on integer counts the same double as
+        # 2TP / (2TP + FP + FN), both sides being exact up to a factor of 2
+        "f1": _safe_div(tp, tp + 0.5 * (fp + fn)),
+    }
+    if "business_value" in metrics:
+        exprs["business_value"] = _binary_business_value(tp, fp, fn, tn, calc)
+    parts = [_melt(counts, {m: exprs[m] for m in asked})] if asked else []
+    if with_cm:
+        # 'all' = /total, 'true' = per actual row, 'pred' = per predicted
+        # column (metrics.py:1404-1498)
+        norm = calc.normalize_confusion_matrix
+        if norm == "all":
+            d = tp + tn + fp + fn
+            tp, tn, fp, fn = (_safe_div(x, d) for x in (tp, tn, fp, fn))
+        elif norm == "true":
+            tp, fn = _safe_div(tp, tp + fn), _safe_div(fn, tp + fn)
+            tn, fp = _safe_div(tn, tn + fp), _safe_div(fp, tn + fp)
+        elif norm == "pred":
+            tp, fp = _safe_div(tp, tp + fp), _safe_div(fp, tp + fp)
+            tn, fn = _safe_div(tn, tn + fn), _safe_div(fn, tn + fn)
+        parts.append(
+            _melt(counts, {"true_positive": tp, "true_negative": tn, "false_positive": fp, "false_negative": fn})
+        )
+    return counts.select(CHUNK_KEY, "n_chunk"), parts
+
+
+def _binary_business_value(tp, fp, fn, tn, calc) -> Column:
+    (tn_v, fp_v), (fn_v, tp_v) = calc.business_value_matrix
+    if calc.normalize_business_value == "per_prediction":
+        # binary_classification.py:794-797: the cm normalizes PER
+        # PREDICTED-CLASS COLUMN (cm/cm.sum(axis=0), NaN→0), and the terms
+        # sum column by column
+        pred0, pred1 = tn + fn, fp + tp
+        tn, fn = (F.coalesce(_safe_div(x, pred0), F.lit(0.0)) for x in (tn, fn))
+        fp, tp = (F.coalesce(_safe_div(x, pred1), F.lit(0.0)) for x in (fp, tp))
+        return tn * F.lit(float(tn_v)) + fn * F.lit(float(fn_v)) + fp * F.lit(float(fp_v)) + tp * F.lit(float(tp_v))
+    return tn * F.lit(float(tn_v)) + fp * F.lit(float(fp_v)) + fn * F.lit(float(fn_v)) + tp * F.lit(float(tp_v))
+
+
+def ovr_confusion(p_by_class: Sequence[Tuple[str, Column]], pred: Column) -> Column:
+    """One-vs-rest expected confusion mass per class as one aggregate: an
+    array of (tp, fp, fn, tn) structs in class order, class ``c``'s row
+    adding ``p_c`` to tp/fn and ``1 − p_c`` to fp/tn. CBPE passes the
+    calibrated class probabilities, realized performance ``1[y_true = c]``."""
+    return F.array(
+        *[
+            F.struct(
+                F.sum(F.when(pred == c, p).otherwise(F.lit(0.0))).alias("tp"),
+                F.sum(F.when(pred == c, 1 - p).otherwise(F.lit(0.0))).alias("fp"),
+                F.sum(F.when(pred != c, p).otherwise(F.lit(0.0))).alias("fn"),
+                F.sum(F.when(pred != c, 1 - p).otherwise(F.lit(0.0))).alias("tn"),
+            )
+            for c, p in p_by_class
+        ]
+    )
+
+
+def macro_values(agg: DataFrame, metrics: Sequence[str]) -> list:
+    """Macro-averaged precision, recall, specificity and f1 over the ``_cc``
+    array of ``ovr_confusion``, plus ``_acc`` as accuracy, melted (no frame
+    when none is asked). A class with a zero denominator is NULL, which the
+    average skips."""
+    if not {"accuracy", "precision", "recall", "specificity", "f1"} & set(metrics):
+        return []
+    cc = agg.select(CHUNK_KEY, "_acc", "n_chunk", F.explode("_cc").alias("c"))
+    tp, fp, fn, tn = F.col("c.tp"), F.col("c.fp"), F.col("c.fn"), F.col("c.tn")
+    exprs = {
+        "precision": _safe_div(tp, tp + fp),
+        "recall": _safe_div(tp, tp + fn),
+        "specificity": _safe_div(tn, tn + fp),
+        "f1": _safe_div(tp, tp + 0.5 * (fp + fn)),
+    }
+    macro = cc.groupBy(CHUNK_KEY).agg(
+        F.max("_acc").alias("accuracy"),
+        F.max("n_chunk").alias("n_chunk"),
+        *[F.avg(e).alias(m) for m, e in exprs.items() if m in metrics],
+    )
+    return [_melt(macro, {m: F.col(m) for m in metrics if m == "accuracy" or m in exprs})]
+
+
+def cm_cell_values(cells: DataFrame, classes: Sequence[str], calc) -> list:
+    """The k×k confusion matrix and business value Σ value·cell
+    (multiclass_classification.py:714-918, :1039-1184) from a frame of
+    (chunk, n_chunk, true class ``_t``, predicted class ``_p``, mass ``_v``)
+    cells, one per class pair. ``calc`` as in :func:`binary_confusion`."""
+    v = F.col("_v")
+    w_col = Window.partitionBy(CHUNK_KEY, "_p")
+    parts = []
+    if "confusion_matrix" in calc.metrics:
+        over = {
+            "all": Window.partitionBy(CHUNK_KEY),
+            "true": Window.partitionBy(CHUNK_KEY, "_t"),
+            "pred": w_col,
+        }.get(calc.normalize_confusion_matrix)
+        # a class absent from a chunk leaves an all-zero row or column:
+        # NULL, not ANSI DIVIDE_BY_ZERO
+        cm = v if over is None else _safe_div(v, F.sum(v).over(over))
+        method = F.concat(F.lit("true_"), F.col("_t"), F.lit("_pred_"), F.col("_p"))
+        parts.append(cells.select(CHUNK_KEY, "n_chunk", method.alias("method"), cm.cast("double").alias("value")))
+    if "business_value" in calc.metrics:
+        value = F.lit(0.0)
+        for i, t in enumerate(classes):
+            for j, p in enumerate(classes):
+                value = F.when(
+                    (F.col("_t") == t) & (F.col("_p") == p), F.lit(float(calc.business_value_matrix[i][j]))
+                ).otherwise(value)
+        cm = v
+        if calc.normalize_business_value == "per_prediction":
+            colsum = F.sum(v).over(w_col)
+            cm = F.when(colsum > 0, v / colsum).otherwise(F.lit(0.0))
+        scored = cells.select(CHUNK_KEY, "n_chunk", (cm * value).alias("_cmv"))
+        parts.append(
+            scored.groupBy(CHUNK_KEY, "n_chunk")
+            .agg(F.sum("_cmv").cast("double").alias("value"))
+            .select(CHUNK_KEY, "n_chunk", F.lit("business_value").alias("method"), "value")
+        )
+    return parts
+
+
+def _auc_per_chunk(assigned: DataFrame, label: Column, score: Column, group_cols=(CHUNK_KEY,)) -> DataFrame:
+    """Mann-Whitney AUC with average ranks for ties — two windows, no UDF.
+
+    ``group_cols`` generalizes the grouping so the one-vs-rest multiclass
+    path can rank ALL classes in a single pass (partition by
+    (chunk, class)) instead of one window pass per class."""
+    df = assigned.select(*group_cols, label.alias("_y"), score.alias("_s")).filter(
+        F.col("_y").isNotNull() & F.col("_s").isNotNull()
+    )
+    w_rank = Window.partitionBy(*group_cols).orderBy("_s")
+    w_tie = Window.partitionBy(*group_cols, "_s")
+    ranked = df.withColumn("_r", F.rank().over(w_rank)).withColumn(
+        "_avg_r", F.col("_r") + (F.count(F.lit(1)).over(w_tie) - 1) / 2.0
+    )
+    agg = ranked.groupBy(*group_cols).agg(
+        F.sum(F.when(F.col("_y") == 1, F.col("_avg_r")).otherwise(F.lit(0.0))).alias("_rank_sum"),
+        F.sum(F.when(F.col("_y") == 1, 1).otherwise(0)).cast("double").alias("_n1"),
+        F.sum(F.when(F.col("_y") == 0, 1).otherwise(0)).cast("double").alias("_n0"),
+    )
+    auc = (F.col("_rank_sum") - F.col("_n1") * (F.col("_n1") + 1) / 2) / (F.col("_n1") * F.col("_n0"))
+    return agg.select(
+        *group_cols,
+        F.lit("roc_auc").alias("method"),
+        F.when((F.col("_n1") > 0) & (F.col("_n0") > 0), auc).cast("double").alias("value"),
+    )
+
+
+def _ap_per_chunk(assigned: DataFrame, label: Column, score: Column, group_cols=(CHUNK_KEY,)) -> DataFrame:
+    """sklearn-equivalent AP: group ties by score, cumulative TP/FP in
+    descending-score order, AP = Σ (ΔTP/n_pos) · precision@group.
+    ``group_cols`` as in :func:`_auc_per_chunk`."""
+    df = assigned.select(*group_cols, label.alias("_y"), score.alias("_s")).filter(
+        F.col("_y").isNotNull() & F.col("_s").isNotNull()
+    )
+    grp = df.groupBy(*group_cols, "_s").agg(
+        F.sum("_y").alias("_tp_g"), F.count(F.lit(1)).alias("_n_g")
+    )
+    w = Window.partitionBy(*group_cols).orderBy(F.desc("_s")).rowsBetween(Window.unboundedPreceding, 0)
+    cum = grp.withColumn("_cum_tp", F.sum("_tp_g").over(w)).withColumn("_cum_n", F.sum("_n_g").over(w))
+    w_tot = Window.partitionBy(*group_cols)
+    cum = cum.withColumn("_n_pos", F.sum("_tp_g").over(w_tot))
+    # a chunk with zero positives (possible per OvR class) → NULL AP,
+    # not ANSI DIVIDE_BY_ZERO
+    term = _safe_div(F.col("_tp_g"), F.col("_n_pos")) * (F.col("_cum_tp") / F.col("_cum_n"))
+    agg = cum.groupBy(*group_cols).agg(
+        F.sum(term).alias("_ap"), F.max("_n_pos").alias("_n_pos")
+    )
+    return agg.select(
+        *group_cols,
+        F.lit("average_precision").alias("method"),
+        F.when(F.col("_n_pos") > 0, F.col("_ap")).cast("double").alias("value"),
+    )
+
+
 @dataclass
 class PerformanceCalculator:
     """fit(reference) learns thresholds + sampling-error components;
@@ -158,213 +475,38 @@ class PerformanceCalculator:
     # ------------------------------------------------------------------ values
 
     def _binary_chunk_values(self, assigned: DataFrame) -> DataFrame:
-        """All binary metrics from one confusion-count pass + window ranks."""
+        """The confusion metrics with the label as the positive probability,
+        plus the window-ranked AUC and AP."""
         yt = F.col(self.y_true).cast("double")
         yp = F.col(self.y_pred).cast("double")
-        both = yt.isNotNull() & yp.isNotNull()
-        tp = F.sum(F.when(both & (yt == 1) & (yp == 1), 1).otherwise(0)).cast("double")
-        fp = F.sum(F.when(both & (yt == 0) & (yp == 1), 1).otherwise(0)).cast("double")
-        tn = F.sum(F.when(both & (yt == 0) & (yp == 0), 1).otherwise(0)).cast("double")
-        fn = F.sum(F.when(both & (yt == 1) & (yp == 0), 1).otherwise(0)).cast("double")
-        counts = assigned.groupBy(CHUNK_KEY).agg(
-            tp.alias("tp"), fp.alias("fp"), tn.alias("tn"), fn.alias("fn"),
-            # n for the SE formulas counts the LABELED rows the confusion
-            # cells actually used — counting unlabeled rows would shrink
-            # std/sqrt(n·frac) on partially-labeled chunks (the fit-side
-            # invariant at _fit_se_components; the multiclass path filters
-            # nulls before counting too)
-            F.count(F.when(both, F.lit(1))).alias("n_chunk"),
+        # n for the SE formulas counts the rows with a label and a
+        # prediction — counting unlabeled rows would shrink std/sqrt(n·frac)
+        # on partially-labeled chunks (the fit-side invariant at _se_aggs)
+        n_by_chunk, parts = binary_confusion(
+            assigned, F.when(yt == 1, 1.0).when(yt == 0, 0.0), yp, yt.isNotNull() & yp.isNotNull(), self
         )
-        exprs: Dict[str, F.Column] = {}
-        if "accuracy" in self.metrics:
-            exprs["accuracy"] = _safe_div(
-                F.col("tp") + F.col("tn"), F.col("tp") + F.col("tn") + F.col("fp") + F.col("fn")
-            )
-        if "precision" in self.metrics:
-            exprs["precision"] = _safe_div(F.col("tp"), F.col("tp") + F.col("fp"))
-        if "recall" in self.metrics:
-            exprs["recall"] = _safe_div(F.col("tp"), F.col("tp") + F.col("fn"))
-        if "specificity" in self.metrics:
-            exprs["specificity"] = _safe_div(F.col("tn"), F.col("tn") + F.col("fp"))
-        if "f1" in self.metrics:
-            exprs["f1"] = _safe_div(2 * F.col("tp"), 2 * F.col("tp") + F.col("fp") + F.col("fn"))
-        if "business_value" in self.metrics:
-            (tn_v, fp_v), (fn_v, tp_v) = self.business_value_matrix
-            if self.normalize_business_value == "per_prediction":
-                # reference binary_classification.py:794-797: the cm
-                # normalizes PER PREDICTED-CLASS COLUMN (cm/cm.sum(axis=0),
-                # NaN→0) — dividing by the grand total would disagree with
-                # both the reference and this file's own multiclass path
-                pred0 = F.col("tn") + F.col("fn")
-                pred1 = F.col("fp") + F.col("tp")
-                bv = (
-                    F.coalesce(_safe_div(F.col("tn"), pred0), F.lit(0.0)) * F.lit(float(tn_v))
-                    + F.coalesce(_safe_div(F.col("fn"), pred0), F.lit(0.0)) * F.lit(float(fn_v))
-                    + F.coalesce(_safe_div(F.col("fp"), pred1), F.lit(0.0)) * F.lit(float(fp_v))
-                    + F.coalesce(_safe_div(F.col("tp"), pred1), F.lit(0.0)) * F.lit(float(tp_v))
-                )
-            else:
-                bv = (
-                    F.col("tn") * F.lit(float(tn_v))
-                    + F.col("fp") * F.lit(float(fp_v))
-                    + F.col("fn") * F.lit(float(fn_v))
-                    + F.col("tp") * F.lit(float(tp_v))
-                )
-            exprs["business_value"] = bv
-        parts = []
-        if exprs:
-            pairs = [
-                F.struct(F.lit(m).alias("method"), v.cast("double").alias("value")) for m, v in exprs.items()
-            ]
-            parts.append(
-                counts.select(
-                    CHUNK_KEY, "n_chunk", F.explode(F.array(*pairs)).alias("kv")
-                ).select(CHUNK_KEY, "n_chunk", "kv.method", "kv.value")
-            )
-        if "confusion_matrix" in self.metrics:
-            norm = self.normalize_confusion_matrix
-            tot = F.col("tp") + F.col("tn") + F.col("fp") + F.col("fn")
-            def _n(v, row_tot, col_tot):
-                # a chunk can miss a class entirely → zero row/col totals;
-                # NULL (not DIVIDE_BY_ZERO under ANSI) like the macro metrics
-                if norm == "all":
-                    return _safe_div(v, tot)
-                if norm == "true":
-                    return _safe_div(v, row_tot)
-                if norm == "pred":
-                    return _safe_div(v, col_tot)
-                return v
-            cm_pairs = [
-                F.struct(F.lit("true_positive").alias("method"), _n(F.col("tp"), F.col("tp") + F.col("fn"), F.col("tp") + F.col("fp")).cast("double").alias("value")),
-                F.struct(F.lit("true_negative").alias("method"), _n(F.col("tn"), F.col("tn") + F.col("fp"), F.col("tn") + F.col("fn")).cast("double").alias("value")),
-                F.struct(F.lit("false_positive").alias("method"), _n(F.col("fp"), F.col("fp") + F.col("tn"), F.col("fp") + F.col("tp")).cast("double").alias("value")),
-                F.struct(F.lit("false_negative").alias("method"), _n(F.col("fn"), F.col("fn") + F.col("tp"), F.col("fn") + F.col("tn")).cast("double").alias("value")),
-            ]
-            parts.append(
-                counts.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*cm_pairs)).alias("kv")).select(
-                    CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
-                )
-            )
-        if "roc_auc" in self.metrics:
-            parts.append(self._auc_per_chunk(assigned).join(counts.select(CHUNK_KEY, "n_chunk"), CHUNK_KEY))
-        if "average_precision" in self.metrics:
-            parts.append(self._ap_per_chunk(assigned).join(counts.select(CHUNK_KEY, "n_chunk"), CHUNK_KEY))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _auc_per_chunk(self, assigned: DataFrame, group_cols: Tuple[str, ...] = (CHUNK_KEY,)) -> DataFrame:
-        """Mann-Whitney AUC with average ranks for ties — two windows, no UDF.
-
-        ``group_cols`` generalizes the grouping so the one-vs-rest multiclass
-        path can rank ALL classes in a single pass (partition by
-        (chunk, class)) instead of one window pass per class."""
-        yt = F.col(self.y_true).cast("double")
-        s = F.col(self.y_pred_proba).cast("double")
-        df = assigned.select(*group_cols, yt.alias("_y"), s.alias("_s")).filter(
-            F.col("_y").isNotNull() & F.col("_s").isNotNull()
-        )
-        w_rank = Window.partitionBy(*group_cols).orderBy("_s")
-        w_tie = Window.partitionBy(*group_cols, "_s")
-        ranked = df.withColumn("_r", F.rank().over(w_rank)).withColumn(
-            "_avg_r", F.col("_r") + (F.count(F.lit(1)).over(w_tie) - 1) / 2.0
-        )
-        agg = ranked.groupBy(*group_cols).agg(
-            F.sum(F.when(F.col("_y") == 1, F.col("_avg_r")).otherwise(F.lit(0.0))).alias("_rank_sum"),
-            F.sum(F.when(F.col("_y") == 1, 1).otherwise(0)).cast("double").alias("_n1"),
-            F.sum(F.when(F.col("_y") == 0, 1).otherwise(0)).cast("double").alias("_n0"),
-        )
-        auc = (F.col("_rank_sum") - F.col("_n1") * (F.col("_n1") + 1) / 2) / (F.col("_n1") * F.col("_n0"))
-        return agg.select(
-            *group_cols,
-            F.lit("roc_auc").alias("method"),
-            F.when((F.col("_n1") > 0) & (F.col("_n0") > 0), auc).cast("double").alias("value"),
-        )
-
-    def _ap_per_chunk(self, assigned: DataFrame, group_cols: Tuple[str, ...] = (CHUNK_KEY,)) -> DataFrame:
-        """sklearn-equivalent AP: group ties by score, cumulative TP/FP in
-        descending-score order, AP = Σ (ΔTP/n_pos) · precision@group.
-        ``group_cols`` as in :meth:`_auc_per_chunk`."""
-        yt = F.col(self.y_true).cast("double")
-        s = F.col(self.y_pred_proba).cast("double")
-        df = assigned.select(*group_cols, yt.alias("_y"), s.alias("_s")).filter(
-            F.col("_y").isNotNull() & F.col("_s").isNotNull()
-        )
-        grp = df.groupBy(*group_cols, "_s").agg(
-            F.sum("_y").alias("_tp_g"), F.count(F.lit(1)).alias("_n_g")
-        )
-        w = Window.partitionBy(*group_cols).orderBy(F.desc("_s")).rowsBetween(Window.unboundedPreceding, 0)
-        cum = grp.withColumn("_cum_tp", F.sum("_tp_g").over(w)).withColumn("_cum_n", F.sum("_n_g").over(w))
-        w_tot = Window.partitionBy(*group_cols)
-        cum = cum.withColumn("_n_pos", F.sum("_tp_g").over(w_tot))
-        # a chunk with zero positives (possible per OvR class) → NULL AP,
-        # not ANSI DIVIDE_BY_ZERO
-        term = _safe_div(F.col("_tp_g"), F.col("_n_pos")) * (F.col("_cum_tp") / F.col("_cum_n"))
-        agg = cum.groupBy(*group_cols).agg(
-            F.sum(term).alias("_ap"), F.max("_n_pos").alias("_n_pos")
-        )
-        return agg.select(
-            *group_cols,
-            F.lit("average_precision").alias("method"),
-            F.when(F.col("_n_pos") > 0, F.col("_ap")).cast("double").alias("value"),
-        )
+        score = F.col(self.y_pred_proba).cast("double") if self.y_pred_proba else None
+        for metric, per_chunk in (("roc_auc", _auc_per_chunk), ("average_precision", _ap_per_chunk)):
+            if metric in self.metrics:
+                parts.append(per_chunk(assigned, yt, score).join(n_by_chunk, CHUNK_KEY))
+        return _union(parts)
 
     def _multiclass_chunk_values(self, assigned: DataFrame) -> DataFrame:
-        """Macro-averaged one-vs-rest metrics from a per-(chunk, class)
-        confusion pass; accuracy from the plain match rate."""
+        """Macro-averaged one-vs-rest metrics with ``1[y_true = c]`` as class
+        c's probability; accuracy from the plain match rate."""
         yt = F.col(self.y_true).cast("string")
         yp = F.col(self.y_pred).cast("string")
         classes = self._classes
-        per_class = []
-        for cls in classes:
-            is_t = (yt == cls).cast("int")
-            is_p = (yp == cls).cast("int")
-            per_class.append(
-                F.struct(
-                    F.lit(cls).alias("cls"),
-                    F.sum(is_t * is_p).cast("double").alias("tp"),
-                    F.sum((1 - is_t) * is_p).cast("double").alias("fp"),
-                    F.sum(is_t * (1 - is_p)).cast("double").alias("fn"),
-                    F.sum((1 - is_t) * (1 - is_p)).cast("double").alias("tn"),
-                )
-            )
-        agg = assigned.filter(yt.isNotNull() & yp.isNotNull()).groupBy(CHUNK_KEY).agg(
-            F.array(*per_class).alias("_cc"),
+        labeled = assigned.filter(yt.isNotNull() & yp.isNotNull())
+        agg = labeled.groupBy(CHUNK_KEY).agg(
+            ovr_confusion([(c, (yt == c).cast("double")) for c in classes], yp).alias("_cc"),
             F.avg((yt == yp).cast("double")).alias("_acc"),
             F.count(F.lit(1)).alias("n_chunk"),
         )
-        cc = agg.select(CHUNK_KEY, "_acc", "n_chunk", F.explode("_cc").alias("c")).select(
-            CHUNK_KEY, "_acc", "n_chunk", "c.cls", "c.tp", "c.fp", "c.fn", "c.tn"
-        )
-        # null-on-zero denominators (degenerate chunks missing a class would
-        # otherwise throw under ANSI mode); F.avg skips nulls in the macro
-        exprs = {
-            "precision": _safe_div(F.col("tp"), F.col("tp") + F.col("fp")),
-            "recall": _safe_div(F.col("tp"), F.col("tp") + F.col("fn")),
-            "specificity": _safe_div(F.col("tn"), F.col("tn") + F.col("fp")),
-            "f1": _safe_div(2 * F.col("tp"), 2 * F.col("tp") + F.col("fp") + F.col("fn")),
-        }
-        macro = cc.groupBy(CHUNK_KEY).agg(
-            F.max("_acc").alias("accuracy"),
-            F.max("n_chunk").alias("n_chunk"),
-            *[F.avg(e).alias(m) for m, e in exprs.items() if m in self.metrics],
-        )
-        pairs = [
-            F.struct(F.lit(m).alias("method"), F.col(m).cast("double").alias("value"))
-            for m in self.metrics
-            if m in ("accuracy", "precision", "recall", "specificity", "f1")
-        ]
-        n_by_chunk = macro.select(CHUNK_KEY, "n_chunk")
-        parts: list = []
-        if pairs:
-            parts.append(
-                macro.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*pairs)).alias("kv")).select(
-                    CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
-                )
-            )
+        n_by_chunk = agg.select(CHUNK_KEY, "n_chunk")
+        parts = macro_values(agg, self.metrics)
 
-        def _ovr_macro(metric: str, per_chunk_fn: str) -> DataFrame:
+        def _ovr_macro(per_chunk) -> DataFrame:
             """Macro average of a binary rank metric over one-vs-rest splits —
             ONE exploded pass: rows become (chunk, class, binarized y, class
             score) and the rank windows partition by (chunk, class), instead
@@ -382,16 +524,12 @@ class PerformanceCalculator:
             one = assigned.select(CHUNK_KEY, F.explode(splits).alias("kv")).select(
                 CHUNK_KEY, "kv._cls", "kv._y1", "kv._s1"
             )
-            helper = PerformanceCalculator(
-                metrics=(metric,), y_true="_y1", y_pred=self.y_pred, y_pred_proba="_s1",
-                chunker=self.chunker,
-            )
-            per_cls = getattr(helper, per_chunk_fn)(one, group_cols=(CHUNK_KEY, "_cls"))
+            per_cls = per_chunk(one, F.col("_y1"), F.col("_s1"), group_cols=(CHUNK_KEY, "_cls"))
             return per_cls.groupBy(CHUNK_KEY).agg(F.avg("value").alias("value"))
 
         if "roc_auc" in self.metrics:
             parts.append(
-                _ovr_macro("roc_auc", "_auc_per_chunk").join(n_by_chunk, CHUNK_KEY).select(
+                _ovr_macro(_auc_per_chunk).join(n_by_chunk, CHUNK_KEY).select(
                     CHUNK_KEY, "n_chunk", F.lit("roc_auc").alias("method"), "value"
                 )
             )
@@ -402,7 +540,7 @@ class PerformanceCalculator:
                 F.countDistinct(yt).alias("_nu")
             )
             ap = (
-                _ovr_macro("average_precision", "_ap_per_chunk")
+                _ovr_macro(_ap_per_chunk)
                 .join(nuniq, CHUNK_KEY)
                 .select(CHUNK_KEY, F.when(F.col("_nu") > 1, F.col("value")).alias("value"))
             )
@@ -412,76 +550,24 @@ class PerformanceCalculator:
                 )
             )
         if {"confusion_matrix", "business_value"} & set(self.metrics):
-            parts.extend(self._multiclass_cm_parts(assigned, n_by_chunk, yt, yp, classes))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _multiclass_cm_parts(self, assigned, n_by_chunk, yt, yp, classes) -> list:
-        """k×k confusion counts per chunk, densified over the fitted classes
-        (ref multiclass_classification.py:714-918 confusion_matrix with
-        sklearn labels= semantics, :1039-1184 business_value = Σ value·cm)."""
-        spark = assigned.sparkSession
-        cls_strs = [str(c) for c in classes]
-        pc = (
-            assigned.filter(yt.isNotNull() & yp.isNotNull() & yt.isin(cls_strs) & yp.isin(cls_strs))
-            .groupBy(CHUNK_KEY, yt.alias("_t"), yp.alias("_p"))
-            .agg(F.count(F.lit(1)).cast("double").alias("_c"))
-        )
-        cells = F.broadcast(
-            local_frame(spark, [(t, p) for t in cls_strs for p in cls_strs], "_t string, _p string")
-        )
-        dense = (
-            n_by_chunk.crossJoin(cells)
-            .join(pc, [CHUNK_KEY, "_t", "_p"], "left")
-            .withColumn("_c", F.coalesce(F.col("_c"), F.lit(0.0)))
-        )
-        w_chunk = Window.partitionBy(CHUNK_KEY)
-        w_row = Window.partitionBy(CHUNK_KEY, "_t")
-        w_col = Window.partitionBy(CHUNK_KEY, "_p")
-        parts = []
-        if "confusion_matrix" in self.metrics:
-            norm = self.normalize_confusion_matrix
-            v = F.col("_c")
-            # dense k×k frame includes all-zero rows/cols for classes absent
-            # from a chunk → guard every normalization denominator (NULL, not
-            # ANSI DIVIDE_BY_ZERO)
-            if norm == "all":
-                v = _safe_div(v, F.sum("_c").over(w_chunk))
-            elif norm == "true":
-                v = _safe_div(v, F.sum("_c").over(w_row))
-            elif norm == "pred":
-                v = _safe_div(v, F.sum("_c").over(w_col))
-            parts.append(
-                dense.select(
-                    CHUNK_KEY,
-                    "n_chunk",
-                    F.concat(F.lit("true_"), F.col("_t"), F.lit("_pred_"), F.col("_p")).alias("method"),
-                    v.cast("double").alias("value"),
-                )
+            # k×k counts from one map-side-combined (chunk, t, p) count,
+            # densified over the fitted classes (sklearn labels= semantics)
+            cls_strs = [str(c) for c in classes]
+            pc = (
+                labeled.filter(yt.isin(cls_strs) & yp.isin(cls_strs))
+                .groupBy(CHUNK_KEY, yt.alias("_t"), yp.alias("_p"))
+                .agg(F.count(F.lit(1)).cast("double").alias("_v"))
             )
-        if "business_value" in self.metrics:
-            bvm = self.business_value_matrix
-            vals = [
-                (cls_strs[i], cls_strs[j], float(bvm[i][j]))
-                for i in range(len(classes))
-                for j in range(len(classes))
-            ]
-            vmap = F.broadcast(local_frame(spark, vals, "_t string, _p string, _v double"))
-            cm = F.col("_c")
-            if self.normalize_business_value == "per_prediction":
-                colsum = F.sum("_c").over(w_col)
-                cm = F.when(colsum > 0, F.col("_c") / colsum).otherwise(F.lit(0.0))
-            scored = dense.join(vmap, ["_t", "_p"]).select(
-                CHUNK_KEY, "n_chunk", (cm * F.col("_v")).alias("_cmv")
+            pairs = local_frame(
+                assigned.sparkSession, [(t, p) for t in cls_strs for p in cls_strs], "_t string, _p string"
             )
-            parts.append(
-                scored.groupBy(CHUNK_KEY, "n_chunk").agg(F.sum("_cmv").cast("double").alias("value")).select(
-                    CHUNK_KEY, "n_chunk", F.lit("business_value").alias("method"), "value"
-                )
+            cells = (
+                n_by_chunk.crossJoin(F.broadcast(pairs))
+                .join(pc, [CHUNK_KEY, "_t", "_p"], "left")
+                .withColumn("_v", F.coalesce(F.col("_v"), F.lit(0.0)))
             )
-        return parts
+            parts.extend(cm_cell_values(cells, cls_strs, self))
+        return _union(parts)
 
     def _proba_col(self, cls) -> str:
         """Multiclass probas: dict-style column mapping {class: column}."""
@@ -507,10 +593,7 @@ class PerformanceCalculator:
             exprs[m].alias(m) for m in self.metrics
         ]
         wide = assigned.filter(yt.isNotNull() & yp.isNotNull()).groupBy(CHUNK_KEY).agg(*aggs)
-        pairs = [F.struct(F.lit(m).alias("method"), F.col(m).cast("double").alias("value")) for m in self.metrics]
-        return wide.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*pairs)).alias("kv")).select(
-            CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
-        )
+        return _melt(wide, {m: F.col(m) for m in self.metrics})
 
     def _chunk_values(self, df: DataFrame):
         assigned, headers = assign_chunks(df, self.chunker)
@@ -975,94 +1058,11 @@ class PerformanceCalculator:
 
     # ------------------------------------------------------------------ calculate
 
-    def _se_expr(self) -> F.Column:
-        # n = 0 (a fully-unlabeled chunk — the delayed-labels case) must
-        # yield NULL sampling error, not an ANSI division crash in std/√n;
-        # NULLing n short-circuits every branch below to NULL
-        n = F.when(F.col("n_chunk") > 0, F.col("n_chunk").cast("double"))
-        m = F.col("method")
-        expr = F.lit(None).cast("double")
-        for metric, comp in self._se.items():
-            if "mc_ap_c" in comp:
-                # multiclass AP (mse.py:460-487): SE = sqrt(mean_c(var_c·s_c)/n)
-                c_ = comp["mc_ap_c"]
-                if c_ is not None and c_ == c_:
-                    e = F.sqrt(F.lit(float(c_)) / n)
-                    expr = F.when(m == metric, e).otherwise(expr)
-                continue
-            if "mc" in comp:
-                # macro OvR combine (mse.py:21-24; auroc applies ×1.2 :93-96)
-                parts = [
-                    F.lit(float(var)) / (n * F.lit(float(frac)))
-                    for var, frac in comp["mc"]
-                    if var == var and frac == frac and frac > 0
-                ]
-                if not parts:
-                    continue
-                e = F.lit(float(comp.get("scale", 1.0))) * F.sqrt(sum(parts[1:], parts[0])) / F.lit(
-                    float(len(comp["mc"]))
-                )
-                expr = F.when(m == metric, e).otherwise(expr)
-                continue
-            std = comp.get("std")
-            if std is None or std != std:
-                continue
-            if "sample_size" in comp:  # bootstrap-extrapolated (AP, bse :131-149)
-                s = comp["sample_size"]
-                if s:
-                    e = F.lit(float(std)) * F.sqrt(F.lit(float(s)) / n)
-                    expr = F.when(m == metric, e).otherwise(expr)
-                continue
-            if "bv_norm" in comp:  # business value (bse :845-867)
-                e = F.lit(float(std)) * F.sqrt(n) if comp["bv_norm"] is None else F.lit(float(std)) / F.sqrt(n)
-                expr = F.when(m == metric, e).otherwise(expr)
-                continue
-            if "cm_norm" in comp:  # confusion-matrix cells (bse :459-801)
-                norm = comp["cm_norm"]
-                frac = comp.get("fraction")
-                if norm is None:
-                    e = F.lit(float(std)) * F.sqrt(n)
-                elif norm == "all":
-                    e = F.lit(float(std)) / F.sqrt(n)
-                else:
-                    if frac is None or frac != frac or frac <= 0:
-                        continue
-                    e = F.lit(float(std)) / F.sqrt(n * F.lit(float(frac)))
-                expr = F.when(m == metric, e).otherwise(expr)
-                continue
-            if metric in ("accuracy", "mae", "mape", "mse", "msle"):
-                e = F.lit(float(std)) / F.sqrt(n)
-            elif metric in ("precision", "recall", "specificity", "f1", "roc_auc"):
-                frac = comp.get("fraction")
-                if frac is None or frac != frac or frac <= 0:
-                    continue
-                e = F.lit(float(std)) / F.sqrt(n * F.lit(float(frac)))
-            elif metric in ("rmse", "rmsle"):
-                mean = comp.get("mean")
-                if not mean:
-                    continue
-                e = F.sqrt(F.lit(float(std)) ** 2 / (4 * n * F.lit(float(mean))))
-            else:
-                continue
-            expr = F.when(m == metric, e).otherwise(expr)
-        return expr
-
     def _finalize(self, long_df: DataFrame, headers, period: str) -> DataFrame:
-        thr = _thr_frame(
-            long_df.sparkSession, self._thresholds,
-            cm_normalized=self.normalize_confusion_matrix is not None,
+        return finalize(
+            long_df, headers, period, self._thresholds, self._se,
+            self.normalize_confusion_matrix is not None, self.y_pred,
         )
-        lcb, ucb = _clamped_bounds()
-        out = (
-            long_df.join(F.broadcast(thr), "method", "left")
-            .withColumn("sampling_error", self._se_expr())
-            .withColumn("lower_confidence_boundary", lcb)
-            .withColumn("upper_confidence_boundary", ucb)
-            .withColumn("alert", alert_expr())
-            .withColumn("column_name", F.lit(self.y_pred))
-            .drop("n_chunk", "_lim_lo", "_lim_up")
-        )
-        return conform_result(join_headers_long(out, headers, period))
 
     def calculate(self, df: DataFrame, period: str = "analysis") -> DataFrame:
         if not self._fitted:

@@ -11,9 +11,14 @@ the *expected* confusion matrix per chunk:
     FN = Σ p̂·1[pred=0]   TN = Σ (1−p̂)·1[pred=0]      (metrics.py:762-787)
 
 Every label-style estimated metric is then a closed-form expression over one
-``groupBy(chunk)`` pass. Estimated ROC-AUC/AP integrate a synthetic
-ROC/PR curve from the calibrated masses in uncalibrated-score order
-(metrics.py:444-480, 596-645) — expressed with per-chunk windows, no UDF.
+``groupBy(chunk)`` pass. Realized performance (``calculator.py``) is the
+case ``p̂ = 1[y_true = 1]`` of the same formulas, so both estimators share
+``calculator.binary_confusion``, ``ovr_confusion``/``macro_values``,
+``cm_cell_values`` and ``finalize``; only the probability column differs.
+
+Estimated ROC-AUC/AP integrate a synthetic ROC/PR curve from the calibrated
+masses in uncalibrated-score order (metrics.py:444-480, 596-645) — expressed
+with per-chunk windows, no UDF.
 
 Calibration itself is applied natively (``calibration.with_calibrated``): a
 JVM binary search finds each score's segment among the fitted isotonic
@@ -23,15 +28,13 @@ estimation starts no Python worker and returns the same bits as ``np.interp``.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 from typing import Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spark_validate.calculators.base import assign_chunks, join_headers_long
-from spark_validate.performance.calculator import _safe_div
+from spark_validate.calculators.base import assign_chunks
 from spark_validate.calibration import (
     IsotonicCalibrator,
     NoopCalibrator,
@@ -40,9 +43,17 @@ from spark_validate.calibration import (
     with_calibrated,
 )
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
-from spark_validate.performance.calculator import PerformanceCalculator
-from spark_validate.result import conform_result
-from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds
+from spark_validate.performance.calculator import (
+    _LIMITS,
+    PerformanceCalculator,
+    _union,
+    binary_confusion,
+    cm_cell_values,
+    finalize,
+    macro_values,
+    ovr_confusion,
+)
+from spark_validate.thresholds import StandardDeviationThreshold, fit_thresholds
 
 CBPE_METRICS = (
     "roc_auc",
@@ -55,9 +66,6 @@ CBPE_METRICS = (
     "business_value",
     "confusion_matrix",
 )
-
-_LIMITS = {m: (0.0, 1.0) for m in ("roc_auc", "average_precision", "f1", "precision", "recall", "specificity", "accuracy")}
-
 
 @dataclass
 class CBPE:
@@ -159,100 +167,11 @@ class CBPE:
         assigned, headers = assign_chunks(self._with_calibrated(df), self.chunker)
         p = F.col("_cal_p")
         pred = F.col(self.y_pred).cast("double")
-        ok = p.isNotNull() & pred.isNotNull()
-        counts = assigned.groupBy(CHUNK_KEY).agg(
-            F.sum(F.when(ok & (pred == 1), p).otherwise(F.lit(0.0))).alias("tp"),
-            F.sum(F.when(ok & (pred == 1), 1 - p).otherwise(F.lit(0.0))).alias("fp"),
-            F.sum(F.when(ok & (pred == 0), p).otherwise(F.lit(0.0))).alias("fn"),
-            F.sum(F.when(ok & (pred == 0), 1 - p).otherwise(F.lit(0.0))).alias("tn"),
-            F.count(F.when(ok, 1)).alias("n_chunk"),
-        )
-        exprs: Dict[str, F.Column] = {}
-        tot = F.col("tp") + F.col("fp") + F.col("fn") + F.col("tn")
-        # _safe_div throughout: a chunk with zero predicted positives (or
-        # all-NULL probas) must yield NULL, not an ANSI DIVIDE_BY_ZERO that
-        # kills the whole estimate job — the realized path already guards
-        if "accuracy" in self.metrics:
-            exprs["accuracy"] = _safe_div(F.col("tp") + F.col("tn"), tot)
-        if "precision" in self.metrics:
-            exprs["precision"] = _safe_div(F.col("tp"), F.col("tp") + F.col("fp"))
-        if "recall" in self.metrics:
-            exprs["recall"] = _safe_div(F.col("tp"), F.col("tp") + F.col("fn"))
-        if "specificity" in self.metrics:
-            exprs["specificity"] = _safe_div(F.col("tn"), F.col("tn") + F.col("fp"))
-        if "f1" in self.metrics:
-            # estimate_f1 (metrics.py:762-787): TP / (TP + 0.5(FP+FN))
-            exprs["f1"] = _safe_div(
-                F.col("tp"), F.col("tp") + 0.5 * (F.col("fp") + F.col("fn"))
-            )
-        if "business_value" in self.metrics:
-            (tn_v, fp_v), (fn_v, tp_v) = self.business_value_matrix
-            if self.normalize_business_value == "per_prediction":
-                # reference confidence_based/metrics.py:2298-2301: the cm
-                # normalizes PER PREDICTED-CLASS COLUMN (cm/cm.sum(axis=0),
-                # NaN→0), i.e. pred-0 cells over tn+fn, pred-1 over fp+tp
-                pred0 = F.col("tn") + F.col("fn")
-                pred1 = F.col("fp") + F.col("tp")
-                bv = (
-                    F.coalesce(_safe_div(F.col("tn"), pred0), F.lit(0.0)) * F.lit(float(tn_v))
-                    + F.coalesce(_safe_div(F.col("fn"), pred0), F.lit(0.0)) * F.lit(float(fn_v))
-                    + F.coalesce(_safe_div(F.col("fp"), pred1), F.lit(0.0)) * F.lit(float(fp_v))
-                    + F.coalesce(_safe_div(F.col("tp"), pred1), F.lit(0.0)) * F.lit(float(tp_v))
-                )
-            else:
-                bv = (
-                    F.col("tn") * F.lit(float(tn_v))
-                    + F.col("fp") * F.lit(float(fp_v))
-                    + F.col("fn") * F.lit(float(fn_v))
-                    + F.col("tp") * F.lit(float(tp_v))
-                )
-            exprs["business_value"] = bv
-        parts = []
-        if exprs:
-            pairs = [F.struct(F.lit(m).alias("method"), v.cast("double").alias("value")) for m, v in exprs.items()]
-            parts.append(
-                counts.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*pairs)).alias("kv")).select(
-                    CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
-                )
-            )
-        if "confusion_matrix" in self.metrics:
-            # expected-count cells with the reference's normalization options
-            # (metrics.py:1404-1498): 'all' = /total, 'true' = per actual row
-            # (tn,fp over expected negatives; fn,tp over expected positives),
-            # 'pred' = per predicted column
-            tp, tn, fp, fn = F.col("tp"), F.col("tn"), F.col("fp"), F.col("fn")
-            norm = self.normalize_confusion_matrix
-            # expected counts are sums of calibrated probas and can hit 0
-            # (e.g. a chunk whose calibrated positives are all exactly 0) —
-            # NULL, not ANSI DIVIDE_BY_ZERO
-            if norm == "all":
-                d = tp + tn + fp + fn
-                tp, tn, fp, fn = (_safe_div(x, d) for x in (tp, tn, fp, fn))
-            elif norm == "true":
-                tp, fn = _safe_div(tp, tp + fn), _safe_div(fn, tp + fn)
-                tn, fp = _safe_div(tn, tn + fp), _safe_div(fp, tn + fp)
-            elif norm == "pred":
-                tp, fp = _safe_div(tp, tp + fp), _safe_div(fp, tp + fp)
-                tn, fn = _safe_div(tn, tn + fn), _safe_div(fn, tn + fn)
-            cm = [
-                F.struct(F.lit("true_positive").alias("method"), tp.cast("double").alias("value")),
-                F.struct(F.lit("true_negative").alias("method"), tn.cast("double").alias("value")),
-                F.struct(F.lit("false_positive").alias("method"), fp.cast("double").alias("value")),
-                F.struct(F.lit("false_negative").alias("method"), fn.cast("double").alias("value")),
-            ]
-            parts.append(
-                counts.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*cm)).alias("kv")).select(
-                    CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
-                )
-            )
-        if "roc_auc" in self.metrics:
-            parts.append(self._estimate_auc(assigned).join(counts.select(CHUNK_KEY, "n_chunk"), CHUNK_KEY))
-        if "average_precision" in self.metrics:
-            parts.append(self._estimate_ap(assigned).join(counts.select(CHUNK_KEY, "n_chunk"), CHUNK_KEY))
-        out = parts[0]
-        for x in parts[1:]:
-            out = out.unionByName(x)
-        return out, headers
+        n_by_chunk, parts = binary_confusion(assigned, p, pred, p.isNotNull() & pred.isNotNull(), self)
+        for metric, estimate in (("roc_auc", self._estimate_auc), ("average_precision", self._estimate_ap)):
+            if metric in self.metrics:
+                parts.append(estimate(assigned).join(n_by_chunk, CHUNK_KEY))
+        return _union(parts), headers
 
     def _estimated_chunk_values_mc(self, df: DataFrame) -> Tuple[DataFrame, DataFrame]:
         """Multiclass estimation (ref metrics.py:2340-3580): macro means of
@@ -260,137 +179,56 @@ class CBPE:
         probabilities; accuracy = E[p̂ of the predicted class]; expected k×k
         confusion matrix cm[i,j] = Σ_{pred=c_j} p̂_i."""
         assigned, headers = assign_chunks(self._with_calibrated_mc(df), self.chunker)
-        classes = self.classes
-        k = len(classes)
+        classes = [str(c) for c in self.classes]
         pred = F.col(self.y_pred).cast("string")
-        ok = pred.isNotNull() & F.col("_cal").isNotNull()
-        assigned = assigned.filter(ok)
+        assigned = assigned.filter(pred.isNotNull() & F.col("_cal").isNotNull())
         cal = lambda i: F.element_at("_cal", i + 1)  # noqa: E731
         # probability of the predicted class (0 when pred outside classes —
         # matches max(onehot·probas) in metrics.py:3018-3021)
         p_pred = F.lit(0.0)
         for i, c in enumerate(classes):
-            p_pred = F.when(pred == str(c), cal(i)).otherwise(p_pred)
-
-        cc = [
-            F.struct(
-                F.lit(str(c)).alias("cls"),
-                F.sum(F.when(pred == str(c), cal(i)).otherwise(F.lit(0.0))).alias("tp"),
-                F.sum(F.when(pred == str(c), 1 - cal(i)).otherwise(F.lit(0.0))).alias("fp"),
-                F.sum(F.when(pred != str(c), cal(i)).otherwise(F.lit(0.0))).alias("fn"),
-                F.sum(F.when(pred != str(c), 1 - cal(i)).otherwise(F.lit(0.0))).alias("tn"),
-            )
-            for i, c in enumerate(classes)
-        ]
+            p_pred = F.when(pred == c, cal(i)).otherwise(p_pred)
         cm_cells = [
             F.struct(
-                F.lit(f"true_{classes[i]}_pred_{classes[j]}").alias("cell"),
-                F.lit(i).alias("i"),
-                F.lit(j).alias("j"),
-                F.sum(F.when(pred == str(classes[j]), cal(i)).otherwise(F.lit(0.0))).alias("v"),
+                F.lit(t).alias("_t"),
+                F.lit(p).alias("_p"),
+                F.sum(F.when(pred == p, cal(i)).otherwise(F.lit(0.0))).alias("_v"),
             )
-            for i in range(k)
-            for j in range(k)
+            for i, t in enumerate(classes)
+            for p in classes
         ]
         agg = assigned.groupBy(CHUNK_KEY).agg(
-            F.array(*cc).alias("_cc"),
+            ovr_confusion([(c, cal(i)) for i, c in enumerate(classes)], pred).alias("_cc"),
             F.array(*cm_cells).alias("_cm"),
             F.avg(p_pred).alias("_acc"),
             F.count(F.lit(1)).alias("n_chunk"),
         )
         n_by_chunk = agg.select(CHUNK_KEY, "n_chunk")
-        parts = []
-        ovr_metrics = {"precision", "recall", "specificity", "f1"} & set(self.metrics)
-        if ovr_metrics or "accuracy" in self.metrics:
-            percls = agg.select(CHUNK_KEY, "_acc", "n_chunk", F.explode("_cc").alias("c")).select(
-                CHUNK_KEY, "_acc", "n_chunk", "c.tp", "c.fp", "c.fn", "c.tn"
-            )
-            exprs = {
-                # zero-able expected denominators → NULL; F.avg skips nulls,
-                # matching the realized macro path
-                "precision": _safe_div(F.col("tp"), F.col("tp") + F.col("fp")),
-                "recall": _safe_div(F.col("tp"), F.col("tp") + F.col("fn")),
-                "specificity": _safe_div(F.col("tn"), F.col("tn") + F.col("fp")),
-                # estimate_f1 (metrics.py:762-787)
-                "f1": _safe_div(F.col("tp"), F.col("tp") + 0.5 * (F.col("fp") + F.col("fn"))),
-            }
-            macro = percls.groupBy(CHUNK_KEY).agg(
-                F.max("_acc").alias("accuracy"),
-                F.max("n_chunk").alias("n_chunk"),
-                *[F.avg(e).alias(m) for m, e in exprs.items() if m in ovr_metrics],
-            )
-            pairs = [
-                F.struct(F.lit(m).alias("method"), F.col(m).cast("double").alias("value"))
-                for m in self.metrics
-                if m in ("accuracy", "precision", "recall", "specificity", "f1")
-            ]
-            parts.append(
-                macro.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*pairs)).alias("kv")).select(
-                    CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
-                )
-            )
+        parts = macro_values(agg, self.metrics)
         for metric, fn in (("roc_auc", self._estimate_auc), ("average_precision", self._estimate_ap)):
             if metric not in self.metrics:
                 continue
             per_cls = []
-            for i, c in enumerate(classes):
+            for i, c in enumerate(self.classes):
                 one = assigned.withColumn("_cal_c", cal(i))
                 per_cls.append(
                     fn(one, score_col=F.col(self.y_pred_proba[c]), cal_col="_cal_c").select(
                         CHUNK_KEY, "value"
                     )
                 )
-            ovr = per_cls[0]
-            for a in per_cls[1:]:
-                ovr = ovr.unionByName(a)
             parts.append(
-                ovr.groupBy(CHUNK_KEY)
+                _union(per_cls)
+                .groupBy(CHUNK_KEY)
                 .agg(F.avg("value").alias("value"))
                 .join(n_by_chunk, CHUNK_KEY)
                 .select(CHUNK_KEY, "n_chunk", F.lit(metric).alias("method"), "value")
             )
         if {"confusion_matrix", "business_value"} & set(self.metrics):
             cells = agg.select(CHUNK_KEY, "n_chunk", F.explode("_cm").alias("c")).select(
-                CHUNK_KEY, "n_chunk", "c.cell", "c.i", "c.j", "c.v"
+                CHUNK_KEY, "n_chunk", "c._t", "c._p", "c._v"
             )
-            w_chunk = Window.partitionBy(CHUNK_KEY)
-            w_row = Window.partitionBy(CHUNK_KEY, "i")
-            w_col = Window.partitionBy(CHUNK_KEY, "j")
-            if "confusion_matrix" in self.metrics:
-                norm = self.normalize_confusion_matrix
-                v = F.col("v")
-                # expected-count rows/cols can sum to 0 for absent classes
-                if norm == "all":
-                    v = _safe_div(v, F.sum("v").over(w_chunk))
-                elif norm == "true":
-                    v = _safe_div(v, F.sum("v").over(w_row))
-                elif norm == "pred":
-                    v = _safe_div(v, F.sum("v").over(w_col))
-                parts.append(
-                    cells.select(
-                        CHUNK_KEY, "n_chunk", F.col("cell").alias("method"), v.cast("double").alias("value")
-                    )
-                )
-            if "business_value" in self.metrics:
-                bvm = self.business_value_matrix
-                vexpr = F.lit(0.0)
-                for i in range(k):
-                    for j in range(k):
-                        vexpr = F.when((F.col("i") == i) & (F.col("j") == j), F.lit(float(bvm[i][j]))).otherwise(vexpr)
-                cm = F.col("v")
-                if self.normalize_business_value == "per_prediction":
-                    colsum = F.sum("v").over(w_col)
-                    cm = F.when(colsum > 0, F.col("v") / colsum).otherwise(F.lit(0.0))
-                scored = cells.select(CHUNK_KEY, "n_chunk", (cm * vexpr).alias("_cmv"))
-                parts.append(
-                    scored.groupBy(CHUNK_KEY, "n_chunk")
-                    .agg(F.sum("_cmv").cast("double").alias("value"))
-                    .select(CHUNK_KEY, "n_chunk", F.lit("business_value").alias("method"), "value")
-                )
-        out = parts[0]
-        for x in parts[1:]:
-            out = out.unionByName(x)
-        return out, headers
+            parts.extend(cm_cell_values(cells, classes, self))
+        return _union(parts), headers
 
     def _roc_points(self, assigned: DataFrame, score_col=None, cal_col="_cal_p") -> DataFrame:
         """Per-row synthetic ROC point in uncalibrated-score descending order
@@ -498,32 +336,15 @@ class CBPE:
         return self
 
     def _finalize(self, long_df: DataFrame, headers, period: str) -> DataFrame:
-        from spark_validate.performance.calculator import _clamped_bounds, _thr_frame
-
-        thr = _thr_frame(
-            long_df.sparkSession, self._thresholds,
-            cm_normalized=getattr(self, 'normalize_confusion_matrix', None) is not None,
+        column_name = (
+            ",".join(self.y_pred_proba[c] for c in self.classes)
+            if isinstance(self.y_pred_proba, dict)
+            else self.y_pred_proba
         )
-        helper = PerformanceCalculator.__new__(PerformanceCalculator)
-        helper._se = self._se
-        lcb, ucb = _clamped_bounds()
-        out = (
-            long_df.join(F.broadcast(thr), "method", "left")
-            .withColumn("sampling_error", PerformanceCalculator._se_expr(helper))
-            .withColumn("lower_confidence_boundary", lcb)
-            .withColumn("upper_confidence_boundary", ucb)
-            .withColumn("alert", alert_expr())
-            .withColumn(
-                "column_name",
-                F.lit(
-                    ",".join(self.y_pred_proba[c] for c in self.classes)
-                    if isinstance(self.y_pred_proba, dict)
-                    else self.y_pred_proba
-                ),
-            )
-            .drop("n_chunk", "_lim_lo", "_lim_up")
+        return finalize(
+            long_df, headers, period, self._thresholds, self._se,
+            self.normalize_confusion_matrix is not None, column_name,
         )
-        return conform_result(join_headers_long(out, headers, period))
 
     def estimate(self, df: DataFrame, period: str = "analysis") -> DataFrame:
         if not self._fitted:

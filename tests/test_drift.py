@@ -630,3 +630,43 @@ def test_chi2_p_value_matches_chi2_sf(spark):
     for s, d in grid:
         assert by[(s, d)] == pytest.approx(chi2_sf(s, d), rel=1e-12, abs=0.0), (s, d)
     assert math.isnan(by[(None, 3)]) and math.isnan(by[(5.0, 0)])
+
+
+def test_chi2_statistic_independent_of_partitioning(spark):
+    """chi2 adds its per-category cells in category order, so two
+    partitionings of the same rows (input and shuffle) give the same
+    statistic bit for bit."""
+    rng = np.random.default_rng(31)
+    cats = [f"c{i:02d}" for i in range(40)]
+    n = 6000
+    ref = rng.choice(cats, n // 2)
+    ana = rng.choice(cats[5:] + ["u1", "u2", "u3"], n // 2)
+    pdf = pd.DataFrame({"id": np.arange(n), "cat": np.concatenate([ref, ana])})
+    pdf["is_ref"] = pdf["id"] < n // 2
+    sdf = spark.createDataFrame(pdf)
+
+    def chi2_rows(df):
+        calc = UnivariateDriftCalculator(
+            column_names=["cat"],
+            categorical_methods=["chi2"],
+            chunker=SizeBasedChunker(chunk_size=500, order_by=["id"]),
+        ).fit(df.filter("is_ref"))
+        res = calc.reference_result.unionByName(calc.calculate(df.filter("NOT is_ref")))
+        rows = res.select("chunk_index", "period", "value").collect()
+        calc.release_cache()
+        return sorted((r["period"], r["chunk_index"], r["value"]) for r in rows)
+
+    one = chi2_rows(sdf.repartition(1))
+    # without adaptive execution the 7 shuffle partitions are not coalesced,
+    # so the cells reach the aggregate in another order
+    confs = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "7"}
+    before = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        many = chi2_rows(sdf.repartition(7, "cat"))
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    assert len(one) == 12
+    assert one == many

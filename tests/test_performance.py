@@ -5,6 +5,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from spark_validate.chunking import SizeBasedChunker
 from spark_validate.performance import PerformanceCalculator
@@ -123,6 +124,135 @@ def test_confusion_and_business_value(spark, perf_frame):
     assert piv[(0, "true_positive")] == tp
     assert piv[(0, "false_negative")] == fn
     assert np.isclose(piv[(0, "business_value")], tn * 0 + fp * -2 + fn * -5 + tp * 10)
+
+
+def _calculate_unfitted(sdf, configs, **common):
+    """Every config's ``calculate`` rows (tagged ``cfg``) from one collect;
+    ``set_state`` stands in for the fit, so the only work is the calculate."""
+    out = None
+    for i, (kw, state) in enumerate(configs):
+        calc = PerformanceCalculator(
+            y_true="y_true", y_pred="y_pred", chunker=SizeBasedChunker(chunk_size=CHUNK, order_by=["id"]),
+            **common, **kw,
+        ).set_state({"thresholds": {}, **state})
+        res = calc.calculate(sdf).select("chunk_index", "method", "value", "sampling_error")
+        res = res.withColumn("cfg", F.lit(i))
+        out = res if out is None else out.unionByName(res)
+    return out.toPandas().set_index(["cfg", "chunk_index", "method"])
+
+
+def test_binary_confusion_metrics_exact(perf_frame):
+    """Realized binary confusion metrics equal the integer-count formulas
+    bit for bit, for every confusion-matrix normalization and both
+    business-value forms. NULL labels and predictions fill no cell; a label
+    outside {0, 1} fills no cell either but counts in n_chunk (seen through
+    the accuracy sampling error std/√n)."""
+    sdf, pdf = perf_frame
+    yt = F.when(F.col("id") % 17 == 3, None).when(F.col("id") % 29 == 5, 2).otherwise(F.col("y_true"))
+    yp = F.when(F.col("id") % 13 == 7, None).otherwise(F.col("y_pred"))
+    sdf = sdf.filter("NOT is_ref").withColumn("y_true", yt).withColumn("y_pred", yp)
+    a = pdf[~pdf.is_ref].reset_index(drop=True).astype({"y_true": float, "y_pred": float})
+    a.loc[a.id % 17 == 3, "y_true"] = np.nan
+    a.loc[(a.id % 17 != 3) & (a.id % 29 == 5), "y_true"] = 2.0
+    a.loc[a.id % 13 == 7, "y_pred"] = np.nan
+    (tn_v, fp_v), (fn_v, tp_v) = bvm = [[0.5, -2.25], [-5.0, 10.125]]
+    confs = [(None, None), ("all", "per_prediction"), ("true", None), ("pred", "per_prediction")]
+    metrics = ("accuracy", "precision", "recall", "specificity", "f1", "business_value", "confusion_matrix")
+    got = _calculate_unfitted(
+        sdf,
+        [
+            (dict(normalize_confusion_matrix=cm, normalize_business_value=bv), {"se": {"accuracy": {"std": 0.5}}})
+            for cm, bv in confs
+        ],
+        metrics=metrics,
+        business_value_matrix=bvm,
+    )
+    for i in range(4):
+        c = a.iloc[i * CHUNK : (i + 1) * CHUNK]
+        t, p = c.y_true, c.y_pred
+        tp, fp, fn, tn = (int(((t == tv) & (p == pv)).sum()) for tv, pv in ((1, 1), (0, 1), (1, 0), (0, 0)))
+        n = int((t.notna() & p.notna()).sum())
+        assert n > tp + fp + fn + tn  # the labels outside {0, 1}
+        for cfg, (cm, bv) in enumerate(confs):
+            want = {
+                "accuracy": (tp + tn) / (tp + fp + fn + tn),
+                "precision": tp / (tp + fp),
+                "recall": tp / (tp + fn),
+                "specificity": tn / (tn + fp),
+                "f1": 2 * tp / (2 * tp + fp + fn),
+            }
+            if bv is None:
+                want["business_value"] = tn * tn_v + fp * fp_v + fn * fn_v + tp * tp_v
+            else:
+                want["business_value"] = (
+                    tn / (tn + fn) * tn_v + fn / (tn + fn) * fn_v + fp / (fp + tp) * fp_v + tp / (fp + tp) * tp_v
+                )
+            cells = {"true_positive": tp, "false_positive": fp, "false_negative": fn, "true_negative": tn}
+            rows = {"true_positive": tp + fn, "false_negative": tp + fn, "true_negative": tn + fp, "false_positive": tn + fp}
+            cols = {"true_positive": tp + fp, "false_positive": tp + fp, "true_negative": tn + fn, "false_negative": tn + fn}
+            for cell, x in cells.items():
+                den = {None: 1, "all": tp + fp + fn + tn, "true": rows[cell], "pred": cols[cell]}[cm]
+                want[cell] = float(x) if cm is None else x / den
+            for m, v in want.items():
+                assert got.loc[(cfg, i, m), "value"] == v, (cfg, i, m)
+            assert got.loc[(cfg, i, "accuracy"), "sampling_error"] == 0.5 / math.sqrt(n)
+
+
+def test_multiclass_confusion_metrics_exact(perf_frame):
+    """Realized multiclass macro metrics, k×k cells and business value equal
+    the integer-count formulas bit for bit, also on a chunk where one class
+    is neither true nor predicted (its NULL precision, recall and f1 drop
+    out of the macro average)."""
+    sdf, pdf = perf_frame
+    # classes from the score band; in analysis chunk 1 class 'c' is folded into 'b'
+    cls = F.when(F.col("y_score") < 0.35, "a").when(F.col("y_score") < 0.6, "b").otherwise("c")
+    lack = (F.col("id") >= N_REF + CHUNK) & (F.col("id") < N_REF + 2 * CHUNK)
+    yt = F.when(F.col("y_true") == 1, cls).otherwise(F.when(F.col("id") % 3 == 0, "a").otherwise("b"))
+    sdf = sdf.filter("NOT is_ref").select(
+        "id",
+        F.when(lack & (yt == "c"), "b").otherwise(yt).alias("y_true"),
+        F.when(lack & (cls == "c"), "b").otherwise(cls).alias("y_pred"),
+    )
+    a = sdf.orderBy("id").toPandas()
+    classes = ["a", "b", "c"]
+    bvm = [[2.0, -1.0, -3.0], [-1.0, 4.0, 0.0], [-2.0, 1.0, 5.0]]
+    confs = [None, "true"]
+    got = _calculate_unfitted(
+        sdf,
+        [(dict(normalize_confusion_matrix=cm), {"se": {}, "classes": classes}) for cm in confs],
+        metrics=("accuracy", "precision", "recall", "specificity", "f1", "business_value", "confusion_matrix"),
+        problem_type="multiclass_classification",
+        business_value_matrix=bvm,
+    )
+    for i in range(4):
+        c = a.iloc[i * CHUNK : (i + 1) * CHUNK]
+        t, p = c.y_true.to_numpy(), c.y_pred.to_numpy()
+        if i == 1:
+            assert "c" not in set(t) | set(p)
+        cm = np.array([[int(((t == ti) & (p == pj)).sum()) for pj in classes] for ti in classes])
+        per = {"precision": [], "recall": [], "specificity": [], "f1": []}
+        for k in range(3):
+            tp = cm[k, k]
+            fp, fn = cm[:, k].sum() - tp, cm[k, :].sum() - tp
+            tn = cm.sum() - tp - fp - fn
+            for m, num, den in (
+                ("precision", tp, tp + fp), ("recall", tp, tp + fn), ("specificity", tn, tn + fp), ("f1", 2 * tp, 2 * tp + fp + fn)
+            ):
+                if den:
+                    per[m].append(int(num) / int(den))
+        want = {m: sum(v) / len(v) for m, v in per.items()}
+        want["accuracy"] = int((t == p).sum()) / len(t)
+        want["business_value"] = float(sum(bvm[x][y] * cm[x, y] for x in range(3) for y in range(3)))
+        for cfg, norm in enumerate(confs):
+            for x, ti in enumerate(classes):
+                for y, pj in enumerate(classes):
+                    row = int(cm[x].sum())
+                    want[f"true_{ti}_pred_{pj}"] = float(cm[x, y]) if norm is None else (
+                        int(cm[x, y]) / row if row else None
+                    )
+            for m, v in want.items():
+                g = got.loc[(cfg, i, m), "value"]
+                assert (np.isnan(g) if v is None else g == v), (cfg, i, m, g, v)
 
 
 def test_regression_metrics(spark):

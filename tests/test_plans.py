@@ -113,6 +113,22 @@ def test_performance_calculator_plan_runs_no_python(model_frame):
     _assert_no_python(calc.calculate(model_frame.filter("NOT is_ref")))
 
 
+def test_performance_calculator_multiclass_plan_runs_no_python(model_frame):
+    from spark_validate.chunking import SizeBasedChunker
+    from spark_validate.performance.calculator import PerformanceCalculator
+
+    calc = PerformanceCalculator(
+        metrics=("roc_auc", "average_precision", "f1", "accuracy", "business_value", "confusion_matrix"),
+        y_true="y_true_mc",
+        y_pred="y_pred_mc",
+        y_pred_proba={c: f"p_{c}" for c in "abc"},
+        problem_type="multiclass_classification",
+        business_value_matrix=[[1.0, -1.0, 0.0], [-1.0, 2.0, 0.0], [0.0, 0.0, 3.0]],
+        chunker=SizeBasedChunker(chunk_size=1000, order_by=["id"]),
+    ).fit(model_frame.filter("is_ref"))
+    _assert_no_python(calc.calculate(model_frame.filter("NOT is_ref")))
+
+
 def test_cbpe_binary_plan_runs_no_python(model_frame):
     from spark_validate.calibration import IsotonicCalibrator
     from spark_validate.chunking import SizeBasedChunker
@@ -210,6 +226,38 @@ def test_cbpe_multiclass_fit_query_budget(spark, weekly_reference):
         chunker=_weekly(),
     )
     assert _fit_executions(spark, est, weekly_reference) == 3
+
+
+def test_performance_calculator_binary_fit_query_budget(spark, weekly_reference):
+    """Class-free binary fit: the sampling-error aggregate, the AUROC rank
+    sample and the threshold collect."""
+    from spark_validate.performance.calculator import PerformanceCalculator
+
+    calc = PerformanceCalculator(
+        metrics=("roc_auc", "f1", "accuracy", "business_value", "confusion_matrix"),
+        y_true="y_true",
+        y_pred="y_pred",
+        y_pred_proba="score",
+        business_value_matrix=[[0.0, -1.0], [-2.0, 5.0]],
+        chunker=_weekly(),
+    )
+    assert _fit_executions(spark, calc, weekly_reference) == 3
+
+
+def test_performance_calculator_multiclass_fit_query_budget(spark, weekly_reference):
+    """The class-list collect, then as binary."""
+    from spark_validate.performance.calculator import PerformanceCalculator
+
+    calc = PerformanceCalculator(
+        metrics=("roc_auc", "f1", "accuracy", "business_value", "confusion_matrix"),
+        y_true="y_true_mc",
+        y_pred="y_pred_mc",
+        y_pred_proba={c: f"p_{c}" for c in "abc"},
+        problem_type="multiclass_classification",
+        business_value_matrix=[[1.0, -1.0, 0.0], [-1.0, 2.0, 0.0], [0.0, 0.0, 3.0]],
+        chunker=_weekly(),
+    )
+    assert _fit_executions(spark, calc, weekly_reference) == 4
 
 
 def test_univariate_drift_fit_query_budget(spark, weekly_reference):
