@@ -420,10 +420,6 @@ class UnivariateDriftCalculator:
             specs.append("psi")
         return specs
 
-    def _spec_bins(self, col: str, spec: str) -> int:
-        st = self._cont_state[col]
-        return st.specs[spec][0]
-
     # -- fit -------------------------------------------------------------------
 
     def fit(self, reference: DataFrame) -> "UnivariateDriftCalculator":
@@ -531,7 +527,7 @@ class UnivariateDriftCalculator:
         # misconfigured as categorical collects ≤ max_categories rows per
         # column instead of the full distinct set.
         totals, per_col = bounded_topk_category_counts(
-            self._categorical_counts(reference, cols, dtypes), cols, self.max_categories
+            categorical_counts(reference, cols, dtypes), cols, self.max_categories
         )
         for c in cols:
             self._cat_state[c] = CategoricalState(n_ref=totals.get(c, 0), counts=per_col[c])
@@ -562,9 +558,6 @@ class UnivariateDriftCalculator:
             .filter(F.col("bucket").isNotNull())
         )
         return exploded.groupBy(*keys, "column_name", "spec", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
-
-    def _categorical_counts(self, df: DataFrame, cols: List[str], dtypes, chunked: bool = False) -> DataFrame:
-        return categorical_counts(df, cols, dtypes, chunked)
 
     # -- calculate ---------------------------------------------------------------
 
@@ -988,7 +981,7 @@ class UnivariateDriftCalculator:
         spark = assigned.sparkSession
         # One count shuffle shared by every categorical method; persisted via
         # the managed registry (see release_cache).
-        counts = self._persist(self._categorical_counts(assigned, self._cat_cols, dtypes, chunked=True))
+        counts = self._persist(categorical_counts(assigned, self._cat_cols, dtypes, chunked=True))
         # Eager materialization: even a single method reads `counts` through
         # two subtrees (totals + the dense join), and multi-method runs add
         # l_infinity/chi2 branches — concurrent cold-cache readers serialize

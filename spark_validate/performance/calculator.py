@@ -1,5 +1,6 @@
 """Realized performance calculation (reference §2.7,
-`nannyml/performance_calculation/**`).
+`nannyml/performance_calculation/**`), and the shell both performance
+estimators share.
 
 Every label-based metric is a closed-form expression over per-chunk confusion
 counts / error sums → ONE ``groupBy(chunk)`` pass computes all of them. The
@@ -11,6 +12,14 @@ integer count, so ``binary_confusion``, ``ovr_confusion``/``macro_values``,
 Rank-based metrics (ROC-AUC, average precision) use per-chunk window ranks —
 the Mann-Whitney formulation for AUC, threshold-grouped cumulative precision
 for AP — still fully distributed, no Python in the path.
+
+``PerformanceCalculator`` is the one estimator shell: its fields and
+validation, ``fit`` (one sampling-error aggregate, one scored-row sample, the
+reference pass and ``fit_thresholds``), the JSON state, ``calculate`` and
+``reference_result``. ``CBPE`` subclasses it and overrides only hooks: the
+positive probability (its calibrated score), the calibrator fit from the
+same sample, the estimated AUC/AP, the result's ``column_name`` and the
+calibrators in the state.
 
 Metrics (binary, `metrics/binary_classification.py`): roc_auc :54,
 average_precision :145, f1 :241, precision :336, recall :430, specificity
@@ -54,17 +63,7 @@ BINARY_METRICS = (
     "business_value",
     "confusion_matrix",
 )
-MULTICLASS_METRICS = (
-    "roc_auc",
-    "average_precision",
-    "f1",
-    "precision",
-    "recall",
-    "specificity",
-    "accuracy",
-    "business_value",
-    "confusion_matrix",
-)
+MULTICLASS_METRICS = BINARY_METRICS
 REGRESSION_METRICS = ("mae", "mape", "mse", "msle", "rmse", "rmsle")
 
 def _safe_div(num, den):
@@ -434,6 +433,40 @@ def _ap_per_chunk(assigned: DataFrame, label: Column, score: Column, group_cols=
     )
 
 
+def _cm_cell_components(cells: Dict[str, tuple], n, norm: Optional[str]) -> Dict[str, dict]:
+    """Confusion-matrix cell sampling-error components (bse :387-801, mse
+    :361-414) from ``{method: (count, true-class total, predicted-class
+    total)}``: the binomial std of the cell indicator over its normalization
+    denominator (n for None and 'all') and, for 'true'/'pred', the share of
+    rows in that denominator."""
+    out = {}
+    for name, (x, true_tot, pred_tot) in cells.items():
+        denom = {"true": true_tot, "pred": pred_tot}.get(norm, n)
+        q = x / denom if denom else float("nan")
+        std = math.sqrt(max(q * (1 - q), 0.0)) if q == q else float("nan")
+        rel = denom / n if norm in ("true", "pred") and n else 1.0
+        out[name] = {"std": std, "fraction": rel, "cm_norm": norm}
+    return out
+
+
+def _neg_below_fractions(y: np.ndarray, p: np.ndarray):
+    """AUROC sampling-error inputs (`sampling_error/binary_classification.py:
+    36-75`, mse :27-75): per positive, the fraction of negatives ranked below
+    it, after flipping so the positives are the minority class, and that
+    minority share (the fraction is taken AFTER the flip, :71; the raw
+    positive rate would understate SE ~(maj/min)× on imbalanced data). The
+    fractions are None when a class is empty."""
+    if y.mean() > 0.5:
+        y, p = 1.0 - y, 1.0 - p
+    y = y[np.argsort(p, kind="stable")]
+    frac = float(y.mean())
+    n0s = float((1.0 - y).sum())
+    if n0s == 0 or y.sum() == 0:
+        return None, frac
+    neg_below = np.concatenate(([0.0], np.cumsum(1.0 - y)[:-1]))
+    return neg_below[y == 1.0] / n0s, frac
+
+
 @dataclass
 class PerformanceCalculator:
     """fit(reference) learns thresholds + sampling-error components;
@@ -442,7 +475,7 @@ class PerformanceCalculator:
     metrics: Sequence[str]
     y_true: str = "y_true"
     y_pred: str = "y_pred"
-    y_pred_proba: Optional[str] = None
+    y_pred_proba: object = None  # str (binary) | Dict[class, col] (multiclass)
     problem_type: str = "binary_classification"
     chunker: Chunker = field(default_factory=DefaultChunker)
     threshold: object = field(default_factory=StandardDeviationThreshold)
@@ -474,21 +507,34 @@ class PerformanceCalculator:
 
     # ------------------------------------------------------------------ values
 
-    def _binary_chunk_values(self, assigned: DataFrame) -> DataFrame:
-        """The confusion metrics with the label as the positive probability,
-        plus the window-ranked AUC and AP."""
+    def _with_scores(self, df: DataFrame) -> DataFrame:
+        """The frame the chunk values read, before chunk assignment."""
+        return df
+
+    def _positive_probability(self) -> Tuple[Column, Column]:
+        """(p, ok): the binary positive probability, here the label
+        indicator (NULL for a label outside {0, 1}), and the rows ``n_chunk``
+        counts. n for the SE formulas counts the rows with a label and a
+        prediction — counting unlabeled rows would shrink std/sqrt(n·frac)
+        on partially-labeled chunks (the fit-side invariant at _se_aggs)."""
         yt = F.col(self.y_true).cast("double")
         yp = F.col(self.y_pred).cast("double")
-        # n for the SE formulas counts the rows with a label and a
-        # prediction — counting unlabeled rows would shrink std/sqrt(n·frac)
-        # on partially-labeled chunks (the fit-side invariant at _se_aggs)
-        n_by_chunk, parts = binary_confusion(
-            assigned, F.when(yt == 1, 1.0).when(yt == 0, 0.0), yp, yt.isNotNull() & yp.isNotNull(), self
-        )
-        score = F.col(self.y_pred_proba).cast("double") if self.y_pred_proba else None
-        for metric, per_chunk in (("roc_auc", _auc_per_chunk), ("average_precision", _ap_per_chunk)):
+        return F.when(yt == 1, 1.0).when(yt == 0, 0.0), yt.isNotNull() & yp.isNotNull()
+
+    def _rank_values(self, metric: str, assigned: DataFrame) -> DataFrame:
+        """Binary (chunk, method, value) rows of ``roc_auc`` or
+        ``average_precision``: here the window-ranked realized values."""
+        per_chunk = _auc_per_chunk if metric == "roc_auc" else _ap_per_chunk
+        return per_chunk(assigned, F.col(self.y_true).cast("double"), F.col(self.y_pred_proba).cast("double"))
+
+    def _binary_chunk_values(self, assigned: DataFrame) -> DataFrame:
+        """The confusion metrics over the positive probability, plus the
+        rank metrics."""
+        p, ok = self._positive_probability()
+        n_by_chunk, parts = binary_confusion(assigned, p, F.col(self.y_pred).cast("double"), ok, self)
+        for metric in ("roc_auc", "average_precision"):
             if metric in self.metrics:
-                parts.append(per_chunk(assigned, yt, score).join(n_by_chunk, CHUNK_KEY))
+                parts.append(self._rank_values(metric, assigned).join(n_by_chunk, CHUNK_KEY))
         return _union(parts)
 
     def _multiclass_chunk_values(self, assigned: DataFrame) -> DataFrame:
@@ -569,10 +615,12 @@ class PerformanceCalculator:
             parts.extend(cm_cell_values(cells, cls_strs, self))
         return _union(parts)
 
-    def _proba_col(self, cls) -> str:
-        """Multiclass probas: dict-style column mapping {class: column}."""
+    def _proba_col(self, cls: str) -> str:
+        """Multiclass probas: dict-style column mapping {class: column}, its
+        keys matched as strings, as the labels are; else the per-class
+        prefix convention."""
         if isinstance(self.y_pred_proba, dict):
-            return self.y_pred_proba[cls]
+            return {str(c): col for c, col in self.y_pred_proba.items()}[cls]
         return f"{self.y_pred_proba}_{cls}"
 
     def _regression_chunk_values(self, assigned: DataFrame) -> DataFrame:
@@ -596,7 +644,7 @@ class PerformanceCalculator:
         return _melt(wide, {m: F.col(m) for m in self.metrics})
 
     def _chunk_values(self, df: DataFrame):
-        assigned, headers = assign_chunks(df, self.chunker)
+        assigned, headers = assign_chunks(self._with_scores(df), self.chunker)
         if self.problem_type == "binary_classification":
             return self._binary_chunk_values(assigned), headers
         if self.problem_type == "multiclass_classification":
@@ -604,15 +652,6 @@ class PerformanceCalculator:
         return self._regression_chunk_values(assigned), headers
 
     # ------------------------------------------------------------------ fit
-
-    def _fit_se_components(self, reference: DataFrame) -> None:
-        """Closed-form sampling-error components from one conditional
-        reference aggregate, plus one collected sample when a rank-based
-        metric (AUROC, AP) needs one."""
-        row = reference.agg(*self._se_aggs()).first()
-        fraction = self._rank_fraction(row)
-        rank_pdf = None if fraction is None else self._rank_sample(self._scored_rows(reference), fraction)
-        self._se = self._se_from_row(row, rank_pdf)
 
     def _se_aggs(self) -> list:
         """The aggregates ``_se_from_row`` reads. Rows without a label or a
@@ -738,25 +777,14 @@ class PerformanceCalculator:
                 # sampling_error_components :803-845)
                 se["business_value"] = {"std": row["bv_std"], "bv_norm": self.normalize_business_value}
             if "confusion_matrix" in self.metrics:
-                # per-cell components (bse :387-801): binomial std of the
-                # cell indicator over its normalization denominator
-                norm = self.normalize_confusion_matrix
+                # the 2×2 case, its cells named
                 cells = {
                     "true_positive": (tp, tp + fn, tp + fp),
                     "false_negative": (fn, tp + fn, tn + fn),
                     "true_negative": (tn, tn + fp, tn + fn),
                     "false_positive": (fp, tn + fp, tp + fp),
                 }
-                for cell, (x, row_tot, col_tot) in cells.items():
-                    if norm in (None, "all"):
-                        q = x / n
-                        rel = 1.0
-                    else:
-                        denom = row_tot if norm == "true" else col_tot
-                        q = x / denom if denom > 0 else float("nan")
-                        rel = denom / n
-                    std = math.sqrt(max(q * (1 - q), 0.0)) if q == q else float("nan")
-                    se[cell] = {"std": std, "fraction": rel, "cm_norm": norm}
+                se.update(_cm_cell_components(cells, n, self.normalize_confusion_matrix))
         elif self.problem_type == "multiclass_classification":
             classes = self._classes or []
             n = row["n"]
@@ -790,30 +818,17 @@ class PerformanceCalculator:
                 se["average_precision"] = self._mc_ap_component(row["_rank_n"], rank_pdf)
             if "confusion_matrix" in self.metrics:
                 # ref multiclass_confusion_matrix_sampling_error_components
-                # (:361-414): per-cell binomial std over the normalization
-                # denominator + relevant proportion; same application law as
-                # the binary cm_norm cells, keyed by the dense method name.
-                norm = self.normalize_confusion_matrix
-                cm = {
-                    (str(t_), str(p_)): row[f"cm{i}_{j}"]
-                    for i, t_ in enumerate(classes)
-                    for j, p_ in enumerate(classes)
+                # (:361-414), keyed by the dense method name
+                k = range(len(classes))
+                cm = [[row[f"cm{i}_{j}"] for j in k] for i in k]
+                cells = {
+                    f"true_{classes[i]}_pred_{classes[j]}": (
+                        cm[i][j], sum(cm[i][q] for q in k), sum(cm[q][j] for q in k)
+                    )
+                    for i in k
+                    for j in k
                 }
-                true_marg = {str(c): sum(cm.get((str(c), str(p)), 0) for p in classes) for c in classes}
-                pred_marg = {str(c): sum(cm.get((str(t), str(c)), 0) for t in classes) for c in classes}
-                for t_ in classes:
-                    for p_ in classes:
-                        x = cm.get((str(t_), str(p_)), 0)
-                        if norm == "true":
-                            denom = true_marg[str(t_)]
-                        elif norm == "pred":
-                            denom = pred_marg[str(p_)]
-                        else:  # 'all' and None both use n as the indicator base
-                            denom = n
-                        q = x / denom if denom else float("nan")
-                        std = math.sqrt(max(q * (1 - q), 0.0)) if q == q else float("nan")
-                        rel = (denom / n) if (norm in ("true", "pred") and n) else 1.0
-                        se[f"true_{t_}_pred_{p_}"] = {"std": std, "fraction": rel, "cm_norm": norm}
+                se.update(_cm_cell_components(cells, n, self.normalize_confusion_matrix))
             if "business_value" in self.metrics and self.business_value_matrix is not None:
                 se["business_value"] = {"std": row["bv_std"], "bv_norm": self.normalize_business_value}
         else:
@@ -849,7 +864,7 @@ class PerformanceCalculator:
         multiclass."""
         label, pred = self._label_pred()
         if self.problem_type == "multiclass_classification":
-            scores = [F.col(self.y_pred_proba[c]).cast("double") for c in self._classes]
+            scores = [F.col(self._proba_col(c)).cast("double") for c in self._classes]
             # multiclass rows need every score, none NaN; the one-vs-rest
             # AUROC/AP components read no prediction, so both sides read
             # the same rows
@@ -907,24 +922,8 @@ class PerformanceCalculator:
         n1, n = row["_rank_n1"], row["_rank_n"]
         if not n or not n1 or n1 == n:
             return {"std": None, "fraction": (n1 / n) if n else None}
-        y = pdf["_y"].to_numpy(dtype=np.float64)
-        p = pdf["_s0"].to_numpy(dtype=np.float64)
-        if y.mean() > 0.5:  # reference flips the minority class
-            y = 1.0 - y
-            p = 1.0 - p
-        order = np.argsort(p, kind="stable")
-        y = y[order]
-        neg_below = np.concatenate(([0.0], np.cumsum(1.0 - y)[:-1]))
-        n0s = float((1.0 - y).sum())
-        # fraction AFTER the flip (`sampling_error/binary_classification.py:71`
-        # computes n_pos/len over the flipped labels) — the minority share.
-        # Using the raw positive rate would understate SE ~(maj/min)× on
-        # imbalanced data; the multiclass path already flips.
-        frac = float(y.mean())
-        if n0s == 0 or y.sum() == 0:
-            return {"std": None, "fraction": frac}
-        ser = neg_below[y == 1.0] / n0s
-        return {"std": float(np.std(ser)), "fraction": frac}
+        ser, frac = _neg_below_fractions(pdf["_y"].to_numpy(np.float64), pdf["_s0"].to_numpy(np.float64))
+        return {"std": None if ser is None else float(np.std(ser)), "fraction": frac}
 
     def _ap_components(self, n, pdf) -> dict:
         """AP components (`bse.ap_sampling_error_components :95-128`): bootstrap
@@ -954,18 +953,8 @@ class PerformanceCalculator:
         comps = []
         for i, c in enumerate(self._classes):
             y = (pdf["_y"] == str(c)).to_numpy(np.float64)
-            p = pdf[f"_s{i}"].to_numpy(np.float64)
-            if y.mean() > 0.5:
-                y, p = 1.0 - y, 1.0 - p
-            order = np.argsort(p, kind="stable")
-            ys = y[order]
-            n0s = float((1.0 - ys).sum())
-            if n0s == 0 or ys.sum() == 0:
-                comps.append([nan, nan])
-                continue
-            neg_below = np.concatenate(([0.0], np.cumsum(1.0 - ys)[:-1]))
-            ser = neg_below[ys == 1.0] / n0s
-            comps.append([float(np.var(ser)), float(y.mean())])
+            ser, frac = _neg_below_fractions(y, pdf[f"_s{i}"].to_numpy(np.float64))
+            comps.append([nan, nan] if ser is None else [float(np.var(ser)), frac])
         return comps
 
     def _mc_ap_component(self, n, pdf) -> dict:
@@ -1016,17 +1005,9 @@ class PerformanceCalculator:
 
     def _fit(self, reference: DataFrame) -> "PerformanceCalculator":
         if self.problem_type == "multiclass_classification":
-            # NULL labels are tolerated (excluded from confusion cells and
-            # n alike); they must not enter the class list — sorted() would
-            # TypeError on None, and None is not a class
-            self._classes = sorted(
-                r[0]
-                for r in reference.select(F.col(self.y_true).cast("string"))
-                .filter(F.col(self.y_true).isNotNull())
-                .distinct()
-                .collect()
-            )
-        self._fit_se_components(reference)
+            self._classes = self._class_list(reference)
+        row = reference.agg(*self._se_aggs()).first()
+        self._se = self._se_from_row(row, self._sample_scored(reference, row))
         self._fitted = True
         ref_long, ref_headers = self._chunk_values(reference)
         ref_long = ref_long.persist()
@@ -1035,8 +1016,28 @@ class PerformanceCalculator:
         ref_long.unpersist()
         return self
 
-    # ---- JSON state for the FittedStore (thresholds + SE components +
-    # multiclass label set; reference_result is not persisted)
+    def _class_list(self, reference: DataFrame) -> list:
+        """The multiclass labels, here the reference's distinct labels as
+        strings. NULL labels are tolerated (excluded from confusion cells
+        and n alike); they must not enter the class list — sorted() would
+        TypeError on None, and None is not a class."""
+        return sorted(
+            r[0]
+            for r in reference.select(F.col(self.y_true).cast("string"))
+            .filter(F.col(self.y_true).isNotNull())
+            .distinct()
+            .collect()
+        )
+
+    def _sample_scored(self, reference: DataFrame, row):
+        """The one collected scored-row sample (``_scored_rows``) of the fit,
+        given the ``_se_aggs`` row; returns the rank sample the rank-based
+        sampling errors read, None when none needs one."""
+        fraction = self._rank_fraction(row)
+        return None if fraction is None else self._rank_sample(self._scored_rows(reference), fraction)
+
+    # ---- JSON state for the FittedStore (thresholds + SE components + the
+    # fitted model; reference_result is not persisted)
 
     def get_state(self) -> dict:
         if not self._fitted:
@@ -1044,24 +1045,34 @@ class PerformanceCalculator:
         return {
             "thresholds": {m: [lo, up] for m, (lo, up) in self._thresholds.items()},
             "se": self._se,
-            "classes": self._classes if self.problem_type == "multiclass_classification" else None,
+            **self._model_state(),
         }
 
     def set_state(self, st: dict) -> "PerformanceCalculator":
         self._thresholds = {m: (v[0], v[1]) for m, v in st["thresholds"].items()}
         self._se = st.get("se", {})
-        if st.get("classes") is not None:
-            self._classes = list(st["classes"])
+        self._set_model_state(st)
         self._reference_result = None
         self._fitted = True
         return self
 
+    def _model_state(self) -> dict:
+        """The fitted state besides thresholds and SE: the multiclass label set."""
+        return {"classes": self._classes}
+
+    def _set_model_state(self, st: dict) -> None:
+        if st.get("classes") is not None:
+            self._classes = list(st["classes"])
+
     # ------------------------------------------------------------------ calculate
+
+    def _column_name(self) -> str:
+        return self.y_pred
 
     def _finalize(self, long_df: DataFrame, headers, period: str) -> DataFrame:
         return finalize(
             long_df, headers, period, self._thresholds, self._se,
-            self.normalize_confusion_matrix is not None, self.y_pred,
+            self.normalize_confusion_matrix is not None, self._column_name(),
         )
 
     def calculate(self, df: DataFrame, period: str = "analysis") -> DataFrame:

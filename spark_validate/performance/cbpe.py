@@ -10,11 +10,13 @@ the *expected* confusion matrix per chunk:
     TP = Σ p̂·1[pred=1]   FP = Σ (1−p̂)·1[pred=1]
     FN = Σ p̂·1[pred=0]   TN = Σ (1−p̂)·1[pred=0]      (metrics.py:762-787)
 
-Every label-style estimated metric is then a closed-form expression over one
-``groupBy(chunk)`` pass. Realized performance (``calculator.py``) is the
-case ``p̂ = 1[y_true = 1]`` of the same formulas, so both estimators share
-``calculator.binary_confusion``, ``ovr_confusion``/``macro_values``,
-``cm_cell_values`` and ``finalize``; only the probability column differs.
+Realized performance (``calculator.py``) is the case ``p̂ = 1[y_true = 1]``
+of the same formulas, so ``CBPE`` is a ``PerformanceCalculator``: it inherits
+the fields, validation, fit (sampling errors, reference pass, thresholds),
+state, ``calculate`` and ``reference_result``, and overrides only hooks — the
+positive probability is the calibrated score, the calibrator is fit from the
+``_cal`` slice of the fit's one scored-row sample, and ``estimate`` is
+``calculate``.
 
 Estimated ROC-AUC/AP integrate a synthetic ROC/PR curve from the calibrated
 masses in uncalibrated-score order (metrics.py:444-480, 596-645) — expressed
@@ -28,13 +30,12 @@ estimation starts no Python worker and returns the same bits as ``np.interp``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Dict, Optional, Sequence, Tuple
+from dataclasses import dataclass
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spark_validate.calculators.base import assign_chunks
 from spark_validate.calibration import (
     IsotonicCalibrator,
     NoopCalibrator,
@@ -42,115 +43,130 @@ from spark_validate.calibration import (
     row_sum,
     with_calibrated,
 )
-from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
+from spark_validate.chunking import CHUNK_KEY
 from spark_validate.performance.calculator import (
-    _LIMITS,
+    BINARY_METRICS,
     PerformanceCalculator,
     _union,
-    binary_confusion,
     cm_cell_values,
-    finalize,
     macro_values,
     ovr_confusion,
 )
-from spark_validate.thresholds import StandardDeviationThreshold, fit_thresholds
 
-CBPE_METRICS = (
-    "roc_auc",
-    "average_precision",
-    "f1",
-    "precision",
-    "recall",
-    "specificity",
-    "accuracy",
-    "business_value",
-    "confusion_matrix",
-)
+CBPE_METRICS = BINARY_METRICS
+
 
 @dataclass
-class CBPE:
+class CBPE(PerformanceCalculator):
     """fit(reference with labels) → estimate(analysis without labels)."""
 
-    metrics: Sequence[str]
-    y_true: str = "y_true"
-    y_pred: str = "y_pred"
     y_pred_proba: object = "y_pred_proba"  # str (binary) | Dict[class, col] (multiclass)
-    problem_type: str = "binary_classification"
-    chunker: Chunker = field(default_factory=DefaultChunker)
-    threshold: object = field(default_factory=StandardDeviationThreshold)
-    business_value_matrix: Optional[Sequence[Sequence[float]]] = None
-    normalize_confusion_matrix: Optional[str] = None  # None|'all'|'true'|'pred'
-    normalize_business_value: Optional[str] = None  # None | 'per_prediction'
     calibration_sample: int = 500_000
 
     def __post_init__(self):
-        bad = set(self.metrics) - set(CBPE_METRICS)
-        if bad:
-            raise ValueError(f"unknown CBPE metrics {sorted(bad)}")
         if self.problem_type not in ("binary_classification", "multiclass_classification"):
             raise ValueError(f"CBPE problem_type must be classification, got {self.problem_type!r}")
+        super().__post_init__()
+        self._calibrator = None
+        self._calibrators: Optional[Dict] = None  # multiclass: class → calibrator
         if self.problem_type == "multiclass_classification":
             if not isinstance(self.y_pred_proba, dict):
                 raise ValueError(
                     "multiclass CBPE requires y_pred_proba as a dict mapping class → proba column "
                     "(ref cbpe.py:539-580)"
                 )
-            self.classes = sorted(self.y_pred_proba.keys())
+            # the classes are the dict's keys, in their own order, matched
+            # against the labels as strings
+            self._classes = [str(c) for c in sorted(self.y_pred_proba)]
             if "business_value" in self.metrics:
-                k = len(self.classes)
+                k = len(self._classes)
                 bvm = self.business_value_matrix
-                if bvm is None or len(bvm) != k or any(len(r) != k for r in bvm):
+                if len(bvm) != k or any(len(r) != k for r in bvm):
                     raise ValueError(f"multiclass business_value_matrix must be {k}×{k}")
-        else:
-            self.classes = None
-            if "business_value" in self.metrics and self.business_value_matrix is None:
-                raise ValueError("business_value requires business_value_matrix")
-        self._calibrator = None
-        self._calibrators: Optional[Dict] = None  # multiclass: class → calibrator
-        self._thresholds: Dict[str, Tuple[Optional[float], Optional[float]]] = {}
-        self._se: Dict[str, dict] = {}
-        self._fitted = False
 
-    # -------------------------------------------------------------- calibration
+    # -------------------------------------------------------------- fit hooks
+
+    def _class_list(self, reference: DataFrame) -> list:
+        return self._classes
+
+    def _se_aggs(self) -> list:
+        # the row count sets the calibrator's sample share
+        return [F.count(F.lit(1)).alias("_rows"), *super()._se_aggs()]
+
+    def _sample_scored(self, reference: DataFrame, row):
+        """Fit the calibrator from the ``_cal`` rows of the scored-row
+        sample, and return its rank rows. A seeded sample bounds the
+        calibrator collect at any scale (1-D monotone fits need no more)
+        and the rank sample at 50k rows; when neither side samples, both
+        are slices of one collect."""
+        scored = self._scored_rows(reference)
+        cal_frac = min(1.0, self.calibration_sample / max(row["_rows"], 1))
+        rank_frac = self._rank_fraction(row)
+        if cal_frac == 1.0 and rank_frac in (None, 1.0):
+            pdf = scored.toPandas()
+            cal_pdf = pdf[pdf["_cal"].to_numpy()]
+            rank_pdf = None if rank_frac is None else pdf[pdf["_rank"].to_numpy()]
+        else:
+            cal_pdf = scored.filter(F.col("_cal")).sample(fraction=cal_frac, seed=42).toPandas()
+            rank_pdf = None if rank_frac is None else self._rank_sample(scored, rank_frac)
+        self._fit_calibrator(cal_pdf)
+        return rank_pdf
 
     def _fit_calibrator(self, pdf) -> None:
-        """Decide need and fit isotonic on the collected ``_cal`` sample
-        (``PerformanceCalculator._scored_rows``). Multiclass (ref
-        cbpe.py:539-552 _fit_calibrators): one calibrator per class on the
-        one-vs-rest binarized labels, from the same sample."""
+        """Decide need and fit isotonic on the collected ``_cal`` sample.
+        Multiclass (ref cbpe.py:539-552 _fit_calibrators): one calibrator
+        per class on the one-vs-rest binarized labels, from the same sample."""
 
         def fit(y, p):
             return (IsotonicCalibrator() if needs_calibration(y, p) else NoopCalibrator()).fit(p, y)
 
         if self.problem_type == "multiclass_classification":
             self._calibrators = {
-                c: fit((pdf["_y"] == str(c)).to_numpy(dtype=float), pdf[f"_s{i}"].to_numpy())
-                for i, c in enumerate(self.classes)
+                c: fit((pdf["_y"] == c).to_numpy(dtype=float), pdf[f"_s{i}"].to_numpy())
+                for i, c in enumerate(self._classes)
             }
         else:
             self._calibrator = fit(pdf["_y"].to_numpy(), pdf["_s0"].to_numpy())
 
-    def _with_calibrated(self, df: DataFrame) -> DataFrame:
-        """Add the calibrated probability column ``_cal_p``."""
-        return with_calibrated(df, [("_cal_p", F.col(self.y_pred_proba), self._calibrator)])
+    # ---- JSON state: the calibrator breakpoints besides the thresholds and
+    # sampling-error components
 
-    def _with_calibrated_mc(self, df: DataFrame) -> DataFrame:
-        """Add ``_cal`` — the per-class calibrated probabilities, renormalized
-        to sum 1 per row with a uniform fallback when the calibrated sum is 0
-        (ref cbpe.py:556-580 _calibrate_predicted_probabilities). The sum
-        adds the classes in numpy's order, so the result matches the numpy
+    def _model_state(self) -> dict:
+        if self._calibrators is not None:
+            return {"calibrators": {c: cal.get_state() for c, cal in self._calibrators.items()}}
+        return {} if self._calibrator is None else {"calibrator": self._calibrator.get_state()}
+
+    def _set_model_state(self, st: dict) -> None:
+        def mk(d):
+            return NoopCalibrator() if d.get("noop") else IsotonicCalibrator().set_state(d)
+
+        if st.get("calibrators") is not None:
+            self._calibrators = {c: mk(st["calibrators"][c]) for c in self._classes}
+        if st.get("calibrator") is not None:
+            self._calibrator = mk(st["calibrator"])
+
+    # -------------------------------------------------------------- estimation
+
+    def _with_scores(self, df: DataFrame) -> DataFrame:
+        """Add the calibrated probabilities: binary ``_cal_p``; multiclass
+        ``_cal``, the per-class calibrated probabilities renormalized to sum
+        1 per row with a uniform fallback when the calibrated sum is 0 (ref
+        cbpe.py:556-580 _calibrate_predicted_probabilities). The sum adds the
+        classes in numpy's order, so the result matches the numpy
         renormalization bit for bit; a NaN share is NULL, as it was after
         the Arrow trip out of a pandas UDF."""
-        k = len(self.classes)
+        if self.problem_type == "binary_classification":
+            return with_calibrated(df, [("_cal_p", F.col(self.y_pred_proba), self._calibrator)])
+        k = len(self._classes)
         # NULL probabilities must DROP the row (reference common_nan_removal,
         # mirroring the binary path)
-        cols = [F.col(self.y_pred_proba[c]).cast("double") for c in self.classes]
+        cols = [F.col(self._proba_col(c)).cast("double") for c in self._classes]
         complete = df
         for col in cols:
             complete = complete.filter(col.isNotNull())
         names = [f"_cal_{i}" for i in range(k)]
         cal = with_calibrated(
-            complete, [(n, col, self._calibrators[c]) for n, col, c in zip(names, cols, self.classes)]
+            complete, [(n, col, self._calibrators[c]) for n, col, c in zip(names, cols, self._classes)]
         )
         denom = row_sum([F.col(n) for n in names])
         null = F.lit(None).cast("double")
@@ -159,27 +175,19 @@ class CBPE:
         ]
         return cal.withColumn("_cal", F.array(*normalized)).drop(*names)
 
-    # -------------------------------------------------------------- estimation
-
-    def _estimated_chunk_values(self, df: DataFrame) -> Tuple[DataFrame, DataFrame]:
-        if self.problem_type == "multiclass_classification":
-            return self._estimated_chunk_values_mc(df)
-        assigned, headers = assign_chunks(self._with_calibrated(df), self.chunker)
+    def _positive_probability(self):
         p = F.col("_cal_p")
-        pred = F.col(self.y_pred).cast("double")
-        n_by_chunk, parts = binary_confusion(assigned, p, pred, p.isNotNull() & pred.isNotNull(), self)
-        for metric, estimate in (("roc_auc", self._estimate_auc), ("average_precision", self._estimate_ap)):
-            if metric in self.metrics:
-                parts.append(estimate(assigned).join(n_by_chunk, CHUNK_KEY))
-        return _union(parts), headers
+        return p, p.isNotNull() & F.col(self.y_pred).cast("double").isNotNull()
 
-    def _estimated_chunk_values_mc(self, df: DataFrame) -> Tuple[DataFrame, DataFrame]:
+    def _rank_values(self, metric: str, assigned: DataFrame) -> DataFrame:
+        return (self._estimate_auc if metric == "roc_auc" else self._estimate_ap)(assigned)
+
+    def _multiclass_chunk_values(self, assigned: DataFrame) -> DataFrame:
         """Multiclass estimation (ref metrics.py:2340-3580): macro means of
         one-vs-rest binary estimates over renormalized per-class calibrated
         probabilities; accuracy = E[p̂ of the predicted class]; expected k×k
         confusion matrix cm[i,j] = Σ_{pred=c_j} p̂_i."""
-        assigned, headers = assign_chunks(self._with_calibrated_mc(df), self.chunker)
-        classes = [str(c) for c in self.classes]
+        classes = self._classes
         pred = F.col(self.y_pred).cast("string")
         assigned = assigned.filter(pred.isNotNull() & F.col("_cal").isNotNull())
         cal = lambda i: F.element_at("_cal", i + 1)  # noqa: E731
@@ -209,12 +217,10 @@ class CBPE:
             if metric not in self.metrics:
                 continue
             per_cls = []
-            for i, c in enumerate(self.classes):
+            for i, c in enumerate(classes):
                 one = assigned.withColumn("_cal_c", cal(i))
                 per_cls.append(
-                    fn(one, score_col=F.col(self.y_pred_proba[c]), cal_col="_cal_c").select(
-                        CHUNK_KEY, "value"
-                    )
+                    fn(one, score_col=F.col(self._proba_col(c)), cal_col="_cal_c").select(CHUNK_KEY, "value")
                 )
             parts.append(
                 _union(per_cls)
@@ -228,7 +234,7 @@ class CBPE:
                 CHUNK_KEY, "n_chunk", "c._t", "c._p", "c._v"
             )
             parts.extend(cm_cell_values(cells, classes, self))
-        return _union(parts), headers
+        return _union(parts)
 
     def _roc_points(self, assigned: DataFrame, score_col=None, cal_col="_cal_p") -> DataFrame:
         """Per-row synthetic ROC point in uncalibrated-score descending order
@@ -278,117 +284,10 @@ class CBPE:
             CHUNK_KEY, F.lit("average_precision").alias("method"), "value"
         )
 
-    # -------------------------------------------------------------- fit / estimate
-
-    def fit(self, reference: DataFrame) -> "CBPE":
-        from spark_validate.functions.fitcache import cached_for_fit, chunker_columns
-
-        proba_cols = (
-            list(self.y_pred_proba.values())
-            if isinstance(self.y_pred_proba, dict)
-            else [self.y_pred_proba]
-        )
-        cols = [self.y_true, self.y_pred] + proba_cols + chunker_columns(self.chunker)
-        with cached_for_fit(reference, columns=cols) as ref:
-            return self._fit(ref)
-
-    def _fit(self, reference: DataFrame) -> "CBPE":
-        # sampling-error components: same closed forms as realized performance
-        # (the reference's CBPE metrics reuse the sampling_error/* modules too)
-        mc = self.problem_type == "multiclass_classification"
-        helper = PerformanceCalculator(
-            metrics=tuple(self.metrics),
-            problem_type=self.problem_type,
-            y_true=self.y_true,
-            y_pred=self.y_pred,
-            y_pred_proba={str(c): col for c, col in self.y_pred_proba.items()} if mc else self.y_pred_proba,
-            business_value_matrix=self.business_value_matrix,
-            normalize_business_value=self.normalize_business_value,
-            normalize_confusion_matrix=self.normalize_confusion_matrix,
-            chunker=self.chunker,
-        )
-        if mc:
-            helper._classes = [str(c) for c in self.classes]
-        # one aggregate: the row count (it sets the calibrator's sample
-        # share), the sampling-error counts and the rank-sample size
-        row = reference.agg(F.count(F.lit(1)).alias("_rows"), *helper._se_aggs()).first()
-        scored = helper._scored_rows(reference)
-        # a seeded sample bounds the calibrator collect at any scale (1-D
-        # monotone fits need no more) and the rank sample at 50k rows
-        cal_frac = min(1.0, self.calibration_sample / max(row["_rows"], 1))
-        rank_frac = helper._rank_fraction(row)
-        if cal_frac == 1.0 and rank_frac in (None, 1.0):
-            # neither side samples: both are slices of one collect
-            pdf = scored.toPandas()
-            cal_pdf = pdf[pdf["_cal"].to_numpy()]
-            rank_pdf = None if rank_frac is None else pdf[pdf["_rank"].to_numpy()]
-        else:
-            cal_pdf = scored.filter(F.col("_cal")).sample(fraction=cal_frac, seed=42).toPandas()
-            rank_pdf = None if rank_frac is None else helper._rank_sample(scored, rank_frac)
-        self._fit_calibrator(cal_pdf)
-        self._se = helper._se_from_row(row, rank_pdf)
-        self._fitted = True
-        ref_long, ref_headers = self._estimated_chunk_values(reference)
-        ref_long = ref_long.persist()
-        self._thresholds.update(fit_thresholds(ref_long, ["method"], self.threshold, limits=_LIMITS))
-        self._reference_result = self._finalize(ref_long, ref_headers, "reference")
-        ref_long.unpersist()
-        return self
-
-    def _finalize(self, long_df: DataFrame, headers, period: str) -> DataFrame:
-        column_name = (
-            ",".join(self.y_pred_proba[c] for c in self.classes)
-            if isinstance(self.y_pred_proba, dict)
-            else self.y_pred_proba
-        )
-        return finalize(
-            long_df, headers, period, self._thresholds, self._se,
-            self.normalize_confusion_matrix is not None, column_name,
-        )
-
-    def estimate(self, df: DataFrame, period: str = "analysis") -> DataFrame:
-        if not self._fitted:
-            raise RuntimeError("call fit(reference) first")
-        long_df, headers = self._estimated_chunk_values(df)
-        return self._finalize(long_df, headers, period)
+    def _column_name(self) -> str:
+        if self.problem_type == "multiclass_classification":
+            return ",".join(self._proba_col(c) for c in self._classes)
+        return self.y_pred_proba
 
     # runner-protocol alias: estimators "calculate" their estimate
-    calculate = estimate
-
-    # ---- JSON state for the FittedStore (the reference pickles fitted
-    # estimators via its store; here the state is the calibrator breakpoints
-    # + thresholds + sampling-error components — reference_result is not
-    # persisted and is unavailable on a store-loaded instance)
-
-    def get_state(self) -> dict:
-        if not self._fitted:
-            raise RuntimeError("fit first")
-        st = {
-            "thresholds": {m: [lo, up] for m, (lo, up) in self._thresholds.items()},
-            "se": self._se,
-        }
-        if self._calibrators is not None:
-            st["calibrators"] = {str(c): cal.get_state() for c, cal in self._calibrators.items()}
-        elif self._calibrator is not None:
-            st["calibrator"] = self._calibrator.get_state()
-        return st
-
-    def set_state(self, st: dict) -> "CBPE":
-        def mk(d):
-            return NoopCalibrator() if d.get("noop") else IsotonicCalibrator().set_state(d)
-
-        if st.get("calibrators") is not None:
-            self._calibrators = {c: mk(st["calibrators"][str(c)]) for c in self.classes}
-        if st.get("calibrator") is not None:
-            self._calibrator = mk(st["calibrator"])
-        self._thresholds = {m: (v[0], v[1]) for m, v in st["thresholds"].items()}
-        self._se = st.get("se", {})
-        self._reference_result = None
-        self._fitted = True
-        return self
-
-    @property
-    def reference_result(self) -> DataFrame:
-        if not self._fitted:
-            raise RuntimeError("not fitted")
-        return self._reference_result
+    estimate = PerformanceCalculator.calculate

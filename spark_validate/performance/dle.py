@@ -29,11 +29,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_validate.calculators.base import assign_chunks, join_headers_long
+from spark_validate.calculators.base import assign_chunks
 from spark_validate.chunking import CHUNK_KEY, Chunker, DefaultChunker
-from spark_validate.functions.local import local_frame
-from spark_validate.result import conform_result
-from spark_validate.thresholds import StandardDeviationThreshold, alert_expr, fit_thresholds
+from spark_validate.performance.calculator import REGRESSION_METRICS, _melt, finalize
+from spark_validate.thresholds import StandardDeviationThreshold, fit_thresholds
 
 try:  # the reference's model class, absent in this container
     import lightgbm  # noqa: F401
@@ -42,7 +41,7 @@ try:  # the reference's model class, absent in this container
 except ImportError:
     _HAS_LGBM = False
 
-DLE_METRICS = ("mae", "mape", "mse", "msle", "rmse", "rmsle")
+DLE_METRICS = REGRESSION_METRICS
 
 # metric → (per-row loss fn name, aggregate = mean | root-mean)
 _LOSS_OF = {
@@ -277,24 +276,11 @@ class DLE:
             mean_loss = F.avg(F.element_at("_losses", kind))
             aggs.append((F.sqrt(mean_loss) if mode == "root_mean" else mean_loss).alias(m))
         wide = scored.groupBy(CHUNK_KEY).agg(*aggs)
-        pairs = [F.struct(F.lit(m).alias("method"), F.col(m).cast("double").alias("value")) for m in self.metrics]
-        long_df = wide.select(CHUNK_KEY, "n_chunk", F.explode(F.array(*pairs)).alias("kv")).select(
-            CHUNK_KEY, "n_chunk", "kv.method", "kv.value"
-        )
-        return long_df, headers
+        return _melt(wide, {m: F.col(m) for m in self.metrics}), headers
 
     def _finalize(self, long_df, headers, period):
-        spark = long_df.sparkSession
-        rows = [(m, lo, up) for m, (lo, up) in self._thresholds.items()]
-        thr = local_frame(spark, rows, "method string, lower_threshold double, upper_threshold double")
-        out = (
-            long_df.join(F.broadcast(thr), "method", "left")
-            .withColumn("sampling_error", F.lit(None).cast("double"))
-            .withColumn("alert", alert_expr())
-            .withColumn("column_name", F.lit(self.y_pred))
-            .drop("n_chunk")
-        )
-        return conform_result(join_headers_long(out, headers, period))
+        # no sampling error, so the confidence bounds are NULL
+        return finalize(long_df, headers, period, self._thresholds, {}, False, self.y_pred)
 
     def estimate(self, df: DataFrame, period: str = "analysis") -> DataFrame:
         if not self._fitted:

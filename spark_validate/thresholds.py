@@ -93,7 +93,7 @@ def fit_thresholds_grouped(
     one global row).
 
     Avoids a driver loop per column×method — at wide schemas (hundreds of
-    monitored columns) the fit stays one Spark job. The percentile types cast
+    monitored columns) the fit stays one Spark job. Every fitted type casts
     the value to double first: a decimal series would otherwise make the
     median-centred deviation decimal arithmetic.
     """
@@ -107,7 +107,18 @@ def fit_thresholds_grouped(
     if isinstance(threshold, StandardDeviationThreshold):
         lo_mult = threshold.std_lower_multiplier
         up_mult = threshold.std_upper_multiplier
-        agg = grouped.agg(F.avg(value_col).alias("_m"), F.stddev_pop(value_col).alias("_s"))
+        # mean and population variance add the values in sorted order, not
+        # in the order the partial aggregates merge, so the band is the same
+        # bits under any partitioning. NULLs are skipped, a NaN propagates,
+        # one value gives σ = 0 and no value NULL bounds.
+        n = F.size("_v")
+        total = F.aggregate("_v", F.lit(0.0), lambda acc, x: acc + x)
+        sq_dev = F.aggregate("_v", F.lit(0.0), lambda acc, x: acc + (x - F.col("_m")) * (x - F.col("_m")))
+        agg = (
+            grouped.agg(F.array_sort(F.collect_list(v)).alias("_v"))
+            .withColumn("_m", F.when(n > 0, total / n))
+            .withColumn("_s", F.when(n > 0, F.sqrt(sq_dev / n)))
+        )
         lower = (F.col("_m") - F.lit(lo_mult) * F.col("_s")) if lo_mult is not None else F.lit(None)
         upper = (F.col("_m") + F.lit(up_mult) * F.col("_s")) if up_mult is not None else F.lit(None)
     elif isinstance(threshold, QuantileThreshold):

@@ -290,6 +290,37 @@ def test_cbpe_multiclass_sampling_errors_present(mc_frame):
         assert g["upper_confidence_boundary"].notna().all(), mth
 
 
+def test_cbpe_multiclass_non_string_class_keys(mc_frame):
+    """Class keys need not be strings: the labels match them as strings, and
+    integer keys estimate the same values as the string keys they stand for."""
+    from pyspark.sql import functions as F
+
+    _, sdf = mc_frame
+
+    def code(col):
+        out = F.lit(None)
+        for i, cls in enumerate("abc"):
+            out = F.when(F.col(col) == cls, F.lit(i)).otherwise(out)
+        return out
+
+    coded = sdf.withColumn("y_true", code("y_true")).withColumn("y_pred", code("y_pred"))
+    values = {}
+    for keys, frame in (("abc", sdf), ((0, 1, 2), coded)):
+        est = CBPE(
+            metrics=("accuracy", "f1", "confusion_matrix"),
+            problem_type="multiclass_classification",
+            y_pred_proba={k: f"p_{c}" for k, c in zip(keys, "abc")},
+            chunker=SizeBasedChunker(chunk_size=1000, order_by=["id"]),
+        ).fit(frame.filter("is_ref"))
+        res = est.estimate(frame.filter("NOT is_ref").drop("y_true")).toPandas()
+        values[keys[0]] = res.sort_values(["chunk_index", "method"]).reset_index(drop=True)
+    named, coded_res = values["a"], values[0]
+    cells = {f"true_{i}_pred_{j}": f"true_{a}_pred_{b}" for i, a in enumerate("abc") for j, b in enumerate("abc")}
+    assert "true_0_pred_1" in set(coded_res["method"])
+    assert list(coded_res["method"].replace(cells)) == list(named["method"])
+    assert np.array_equal(coded_res["value"].to_numpy(), named["value"].to_numpy())
+
+
 # ---- run-endpoint compression and the native (Spark) calibration -----------
 
 

@@ -260,6 +260,21 @@ def test_performance_calculator_multiclass_fit_query_budget(spark, weekly_refere
     assert _fit_executions(spark, calc, weekly_reference) == 4
 
 
+def test_performance_calculator_regression_fit_query_budget(spark, weekly_reference):
+    """The sampling-error aggregate and the threshold collect: regression
+    samples no scored rows."""
+    from spark_validate.performance.calculator import PerformanceCalculator
+
+    calc = PerformanceCalculator(
+        metrics=("mae", "mape", "mse", "msle", "rmse", "rmsle"),
+        y_true="score",
+        y_pred="x",
+        problem_type="regression",
+        chunker=_weekly(),
+    )
+    assert _fit_executions(spark, calc, weekly_reference) == 2
+
+
 def test_univariate_drift_fit_query_budget(spark, weekly_reference):
     """Threshold pass over the reference chunks, moments, histogram."""
     from spark_validate.drift.univariate import UnivariateDriftCalculator

@@ -4,7 +4,8 @@ Every calculator fits and clamps through ``thresholds.fit_thresholds``; the
 limits and whether a ``ConstantThreshold`` is clamped are each caller's own:
 univariate drift and CBPE clamp constants to the metric's limits, DLE and the
 reconstruction calculator keep a constant as given. A disabled side stays
-``None`` whatever the limits.
+``None`` whatever the limits. The StandardDeviation band's bits do not
+depend on the input's partitioning.
 """
 
 import numpy as np
@@ -16,7 +17,7 @@ from spark_validate.drift.multivariate import DataReconstructionDriftCalculator
 from spark_validate.drift.univariate import UnivariateDriftCalculator
 from spark_validate.performance.cbpe import CBPE
 from spark_validate.performance.dle import DLE
-from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold
+from spark_validate.thresholds import ConstantThreshold, StandardDeviationThreshold, fit_thresholds
 
 N, CHUNK = 1200, 200
 
@@ -87,3 +88,35 @@ def test_clamp_semantics(spark, ref, make, constant_lower):
     assert all(lo is None and up is not None for lo, up in _bounds(calc))
     if hasattr(calc, "release_cache"):
         calc.release_cache()
+
+
+def _values(spark, rows, partitions):
+    df = spark.createDataFrame(rows, "method string, value double")
+    return df.coalesce(1) if partitions == 1 else df.repartition(partitions)
+
+
+def test_std_band_is_independent_of_partitioning(spark):
+    """The StandardDeviation band adds the values in a fixed order, so the
+    same values read from 1 and from 7 partitions give the same bits."""
+    rng = np.random.default_rng(11)
+    rows = [(m, float(v)) for m in ("a", "b") for v in rng.lognormal(0.0, 2.0, 300)]
+    thr = StandardDeviationThreshold()
+    one = fit_thresholds(_values(spark, rows, 1), ["method"], thr)
+    seven = fit_thresholds(_values(spark, rows, 7), ["method"], thr)
+    assert one == seven
+
+
+def test_std_band_null_nan_and_single_value(spark):
+    """NULL values are skipped, a NaN propagates, one value gives σ = 0 and
+    a group of NULLs NULL bounds."""
+    rows = [
+        ("skip", 1.0), ("skip", None), ("skip", 3.0),
+        ("nan", 1.0), ("nan", float("nan")),
+        ("single", 2.5),
+        ("empty", None), ("empty", None),
+    ]
+    out = fit_thresholds(_values(spark, rows, 3), ["method"], StandardDeviationThreshold())
+    assert out["skip"] == (2.0 - 3.0, 2.0 + 3.0)
+    assert all(b != b for b in out["nan"])
+    assert out["single"] == (2.5, 2.5)
+    assert out["empty"] == (None, None)
