@@ -53,8 +53,9 @@ from spark_validate.checks import (
 )
 from spark_validate.chunking import CHUNK_KEY, chunker_for
 from spark_validate.drift import UnivariateDriftCalculator
+from spark_validate.functions.local import local_frame
 from spark_validate.io import FittedStore, read_source, read_table, write_results
-from spark_validate.session import jvm_compile_counters, warn_small_codegen_cache
+from spark_validate.session import jvm_compile_counters, warn_untuned_session
 from spark_validate.thresholds import (
     ConstantThreshold,
     MedianAbsoluteDeviationThreshold,
@@ -750,7 +751,7 @@ def apply_derived_columns(df, derived: Optional[dict]):
 
 
 def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
-    warn_small_codegen_cache(spark)
+    warn_untuned_session(spark)
     run_id = config["run_id"]
     out_dir = config["output_dir"]
     store = FittedStore(config.get("store_dir", os.path.join(out_dir, "store")))
@@ -1030,19 +1031,25 @@ def run_suite(spark: SparkSession, config: dict) -> Dict[str, dict]:
             & (F.col("check") == name)
             & (F.col("period") == "analysis")
         )
+        # the per-run numbers arrive as a one-row frame: as literals, code
+        # generation would inline them and compile new classes every run
+        run_values = local_frame(
+            spark, [(epoch, float(codegen_compiles), float(jit_ms))],
+            "_epoch long NOT NULL, _compiles double, _jit_ms double",
+        )
         lineage = res_df.groupBy("chunk_key").agg(
             F.count(F.lit(1)).alias("_n_metrics"),
             F.sum(F.col("alert").cast("long")).alias("_alerts"),
-        ).select(
+        ).crossJoin(run_values).select(
             F.lit(run_id).alias("run_id"),
             F.lit(name).alias("check"),
             F.col("chunk_key").alias("partition_id"),
-            F.lit(epoch).cast("long").alias("checkpoint_epoch"),
+            F.col("_epoch").alias("checkpoint_epoch"),
             F.col("_n_metrics").cast("long").alias("rows_seen"),
             F.create_map(
                 F.lit("alerts"), F.col("_alerts").cast("double"),
-                F.lit("codegen_compiles"), F.lit(float(codegen_compiles)),
-                F.lit("jit_ms"), F.lit(float(jit_ms)),
+                F.lit("codegen_compiles"), F.col("_compiles"),
+                F.lit("jit_ms"), F.col("_jit_ms"),
             ).alias("metrics"),
             F.lit("complete").alias("status"),
         )

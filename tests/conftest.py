@@ -12,7 +12,13 @@ SF_DIR = os.environ.get("SPARK_VALIDATE_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("spark_validate_tests", cores=4, shuffle_partitions=4)
+    # one long session keeps C2: on a 4-core box 67 drift/CBPE/plan tests took 154 s with it, 222 s with C1 only
+    s = get_spark(
+        "spark_validate_tests",
+        cores=4,
+        shuffle_partitions=4,
+        extra_conf={"spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4"},
+    )
     yield s
 
 

@@ -275,6 +275,25 @@ def test_runner_estimators_fit_from_store_on_rerun(spark, tmp_path):
     assert r2["cbpe__accuracy"]["fitted_from_store"]  # calibrator loaded, no refit
 
 
+def test_second_run_compiles_nothing(spark, workspace):
+    """A rerun under a new run_id compiles no class: the per-run epoch and
+    compile counts reach the lineage rows as data, not as literals that
+    code generation would inline."""
+    import time
+
+    from spark_validate.session import jvm_compile_counters
+
+    cfg = _config(workspace)
+    run_suite(spark, cfg)
+    time.sleep(1.1)  # the next run's epoch second differs
+    before = jvm_compile_counters(spark)[0]
+    run_suite(spark, dict(cfg, run_id="testrun2"))
+    assert jvm_compile_counters(spark)[0] - before == 0
+    lineage = spark.read.parquet(str(workspace / "out" / "lineage"))
+    epochs = {r.run_id: r.checkpoint_epoch for r in lineage.select("run_id", "checkpoint_epoch").distinct().collect()}
+    assert epochs["testrun2"] > epochs["testrun"]
+
+
 def test_database_writer_jdbc_frame_matches_sqlite_schema(spark, workspace):
     """Both backends must write the same DbMetric column names — a config
     switch from sqlite to jdbc must not silently rename columns."""
